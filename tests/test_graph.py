@@ -503,8 +503,8 @@ class TestKcore:
         the fixpoint detected across a probe batch is the single-round
         fixpoint (monotonicity argument in the kcore docstring), and
         max_rounds stays a PEEL budget — exhaustion before fixpoint
-        raises. Detection may spend up to one extra no-op batch past
-        convergence, so budgets need that slack (the suite's 60 has it)."""
+        raises. A budget that runs out on the fixpoint itself is confirmed
+        by one extra count rather than rejected."""
         from wicsmmiretl_spark.operators.graph import kcore
 
         tri = [(100, 101), (101, 102), (100, 102)]
@@ -518,6 +518,19 @@ class TestKcore:
         # ...but a 2-peel budget exhausts mid-cascade and must raise.
         with pytest.raises(RuntimeError, match="fixpoint"):
             kcore(df, k=2, max_rounds=2).collect()
+
+    @pytest.mark.parametrize("max_rounds", [3, 4])
+    def test_budget_ending_on_the_fixpoint_converges(self, spark, max_rounds):
+        """The cascade's peel depth is 3. A budget of exactly 3 peels (the
+        last batch is a single peel) or of 4 (the last batch straddles the
+        fixpoint) ends on a batch that changed the edge set; the run has
+        converged, so it must return the core instead of raising."""
+        from wicsmmiretl_spark.operators.graph import kcore
+
+        edges = [(100, 101), (101, 102), (100, 102), (102, 1), (1, 2), (2, 3)]
+        df = spark.createDataFrame(edges, "id_a long, id_b long")
+        got = {r.id: r.deg for r in kcore(df, k=2, max_rounds=max_rounds).collect()}
+        assert got == {100: 2, 101: 2, 102: 2}
 
 
 class TestPersonalizedPagerank:

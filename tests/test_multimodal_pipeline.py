@@ -89,6 +89,52 @@ def test_fetch_with_injected_fetcher(spark):
     assert out[1] is not None and out[2] is None
 
 
+def test_fetch_keeps_every_input_column(spark):
+    """Column-preserving fetch: input columns (array<string> included) pass
+    through unchanged, ``content`` is appended, a failed fetch keeps its
+    row's metadata with NULL content."""
+    schema = "wikicaps_id long, url string, fallback_url string, ne_texts array<string>, score double"
+    rows = [
+        (1, "http://ok/a", "http://fb/a", ["Berlin", "Ada Lovelace"], 0.5),
+        (2, "http://missing/b", "http://fb/b", [], None),
+        (3, "http://ok/c", None, None, 2.0),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    out = fetch_images(df, fetcher=fake_fetcher)
+    assert out.columns == df.columns + ["content"]
+    assert out.schema["content"].dataType.simpleString() == "binary"
+    got = {r.wikicaps_id: r for r in out.collect()}
+    for row in rows:
+        assert tuple(got[row[0]])[:-1] == row
+    assert got[1].content is not None and got[3].content is not None
+    assert got[2].content is None
+
+
+def test_transform_keeps_columns_and_marks_success_only(spark):
+    """Column-preserving chain: every column passes through unchanged except
+    ``content`` and ``format``; a decode failure (garbage or NULL bytes)
+    keeps its metadata with NULL content and its old format, and only rows
+    that succeeded become ``webp``."""
+    rows = [
+        (1, "a caption", ["Ada"], _img(1), "png"),
+        (2, "garbage", ["x", "y"], b"garbage-not-an-image", "png"),
+        (3, "no bytes", None, None, "png"),
+    ]
+    df = spark.createDataFrame(
+        rows, "wikicaps_id long, caption string, ne_texts array<string>, content binary, format string"
+    )
+    chain = [ResizeTransformation(32, 32), WebPTransformation()]
+    out = apply_image_transformations(df, chain)
+    assert out.columns == df.columns
+    got = {r.wikicaps_id: r for r in out.collect()}
+    for row in rows:
+        assert tuple(got[row[0]])[:3] == row[:3]
+    assert got[1].format == "webp" and got[1].content is not None
+    assert max(RawGrid.decode(bytes(got[1].content)).shape[:2]) <= 32
+    for k in (2, 3):
+        assert got[k].content is None and got[k].format == "png"
+
+
 def test_transformations_from_config_rejects_unknown():
     with pytest.raises(ValueError, match="unknown image transformation"):
         transformations_from_config([{"type": "hologram"}])
@@ -170,6 +216,62 @@ def test_pipeline_checkpoint_resume(spark, caption_fixture, tmp_path):
     pipe2 = CaptionPipeline(spark, cfg, fetcher=exploding_fetcher, url_builder=_url_from_file)
     second = pipe2.extract().count()
     assert second == first  # resumed from checkpoint, no re-fetch (O2)
+
+
+def test_pipeline_transform_resume_skips_fetch_and_chain(spark, caption_fixture, tmp_path, monkeypatch):
+    """With the transformed checkpoint on disk, a new pipeline neither
+    fetches nor runs the transformation chain, and loads the same rows."""
+    import wicsmmiretl_spark.plans.pipeline as pipeline_mod
+
+    cfg = _config(caption_fixture, tmp_path / "out4")
+    first = CaptionPipeline(spark, cfg, fetcher=fake_fetcher, url_builder=_url_from_file)
+    n = first.transform().count()
+
+    def must_not_run(*args, **kwargs):
+        raise AssertionError("must not run on transform-stage resume")
+
+    monkeypatch.setattr(pipeline_mod, "fetch_images", must_not_run)
+    monkeypatch.setattr(pipeline_mod, "apply_image_transformations", must_not_run)
+    second = CaptionPipeline(spark, cfg, fetcher=must_not_run, url_builder=_url_from_file)
+    paths = second.run()
+    assert spark.read.parquet(paths["metadata"]).count() == n
+
+
+def _jobs_and_plans(spark, action) -> tuple[int, list[str]]:
+    """Run ``action``; return how many Spark jobs it submitted (counted by
+    job group) and the executed plan of every SQL execution it ran."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    before = executions()
+    last_id = before[-1].executionId() if before else -1
+    group = f"pipeline-contract-{last_id}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    plans = [e.physicalPlanDescription() for e in executions() if e.executionId() > last_id]
+    return len(sc.statusTracker().getJobIdsForGroup(group)), plans
+
+
+def test_pipeline_run_is_four_join_free_jobs(spark, caption_fixture, tmp_path):
+    """A full run submits exactly 4 jobs (two checkpoint writes, metadata,
+    CSV), and no write plan joins or broadcasts: image bytes never leave the
+    task that fetched them."""
+    cfg = _config(caption_fixture, tmp_path / "out5")
+    pipe = CaptionPipeline(spark, cfg, fetcher=fake_fetcher, url_builder=_url_from_file)
+    jobs, plans = _jobs_and_plans(spark, pipe.run)
+    assert jobs == 4
+    assert len(plans) == 4
+    for plan in plans:
+        assert "Join" not in plan and "BroadcastExchange" not in plan, plan
 
 
 def test_synth_images_roundtrip(spark):

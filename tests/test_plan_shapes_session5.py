@@ -20,7 +20,7 @@ def test_butterfly_wedge_join_is_keyed_not_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_zonemap_report_pins_the_layout_sort(spark):
+def test_zonemap_report_is_one_aggregate_over_two_zone_maps(spark):
     rows = [(a, b, a * 16 + b) for a in range(16) for b in range(16)]
     df = zonemap_pruning_report(
         spark.createDataFrame(rows, ["a", "b", "tb"]),
@@ -30,8 +30,17 @@ def test_zonemap_report_pins_the_layout_sort(spark):
         tiebreak=["tb"],
     )
     plan = _plan(df)
-    # The two ntile global sorts run ONCE per strategy when the lazy
-    # checkpoint materializes; the 4 per-predicate report rows must scan
-    # the pinned zone maps (ExistingRDD), not replay the Window.
-    assert "Window" not in plan, plan
-    assert "Scan ExistingRDD" in plan, plan
+    nodes = [line.lstrip(" :+-") for line in plan.splitlines()]
+    # One exact-ntile layout sort per strategy (distributed_ntile's local
+    # sort within its range partitions), each feeding one zone map.
+    assert sum(n.startswith("Sort [_pid") for n in nodes) == 2, plan
+    zone_maps = [n for n in nodes if n.startswith("HashAggregate(keys=[_file") and "partial_" not in n]
+    assert len(zone_maps) == 2, plan
+    # Every (strategy, predicate) report cell comes from ONE aggregate over
+    # a single Union of the two zone maps, not a 12-way union of per-pair
+    # aggregates.
+    unions = [i for i, n in enumerate(nodes) if n.startswith("Union")]
+    assert len(unions) == 1, plan
+    assert nodes[unions[0] - 1].startswith("HashAggregate(keys=[strategy"), plan
+    report = [n for n in nodes if n.startswith("HashAggregate(keys=[strategy") and "partial_" not in n]
+    assert len(report) == 1, plan

@@ -10,7 +10,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.spread_notes import annotate, bands, label, load_take, main
+from tools.spread_notes import annotate, bands, label, load_take, main, markdown_table
 
 
 def test_bands_over_takes_with_missing_query():
@@ -40,6 +40,14 @@ def test_annotate_flags_no_band_queries():
     assert out["a"]["label"] == "in_band"
     assert out["a"]["vs_median"] == 0.93
     assert out["new_q"]["label"] == "no_band"
+
+
+def test_markdown_table_renders_zero_median_band():
+    """A band whose median is 0 has no vs-median ratio: the table shows '-'
+    instead of crashing on the None."""
+    band = {"n": 2, "min": 0.0, "median": 0.0, "max": 0.0}
+    md = markdown_table(annotate({"z": band}, {"z": 0.5}), top=5)
+    assert "| z | 0.50 | [0.00, 0.00, 0.00] (n=2) | - | above_band |" in md
 
 
 def test_cli_writes_band_document(tmp_path, capsys):

@@ -115,9 +115,11 @@ def markdown_table(annotated: dict[str, dict], top: int) -> str:
     ]
     for name, a in rows[:top]:
         b = a["band"]
+        # a zero-median band has no ratio (annotate() sets None)
+        vs = "-" if a["vs_median"] is None else f"{a['vs_median']:.2f}"
         lines.append(
             f"| {name} | {a['value']:.2f} | [{b['min']:.2f}, {b['median']:.2f}, "
-            f"{b['max']:.2f}] (n={b['n']}) | {a['vs_median']:.2f} | {a['label']} |"
+            f"{b['max']:.2f}] (n={b['n']}) | {vs} | {a['label']} |"
         )
     n_out = sum(1 for _, a in rows if a["label"] != "in_band")
     lines.append(

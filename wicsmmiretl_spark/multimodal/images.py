@@ -4,8 +4,8 @@
 The reference downloads images to local disk in a thread pool
 (utils.py:76-131), transforms them with PIL (transformations/*.py), and
 carries only a path column. Here images are **data**: a ``binary`` column
-flows through the plan, decode/transform/encode run as Arrow-batched
-``mapInPandas`` UDFs, failures become NULLs filtered by anti-join (P7/P8) —
+flows through the plan, decode/transform/encode run as column-preserving
+Arrow-batched ``mapInPandas`` UDFs, failures become NULL content (P7/P8) —
 no shared filesystem required, which is the difference between "works on one
 box" and "works on 1000 executors".
 
@@ -259,27 +259,27 @@ def transformations_from_config(spec: Sequence[dict]) -> list[ImageTransformatio
     return out
 
 
+def _with_binary(schema: StructType, col: str) -> StructType:
+    """``schema`` with ``col`` a nullable binary field, in place or appended."""
+    field = StructField(col, BinaryType(), True)
+    if col in schema.names:
+        return StructType([field if f.name == col else f for f in schema.fields])
+    return StructType([*schema.fields, field])
+
+
 def apply_image_transformations(
     df: DataFrame,
     transforms: Sequence[ImageTransformationBase],
-    id_col: str = "wikicaps_id",
     content_col: str = "content",
     format_col: str = "format",
 ) -> DataFrame:
     """E5: fold the transformation chain over a binary image column.
 
-    Arrow-batched mapInPandas; decode → fold → re-encode per row. Errors
-    yield NULL content (the P8 failure-mask shape — filter with
-    ``content IS NOT NULL`` or anti-join on the failure ids).
+    Arrow-batched mapInPandas; decode → fold → re-encode per row, other
+    columns passed through. Errors yield NULL content and keep the format (P8
+    failure mask: filter ``content IS NOT NULL``); WebP sets ``webp`` on success.
     """
     to_webp = any(isinstance(t, WebPTransformation) for t in transforms)
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField(content_col, BinaryType()),
-            StructField(format_col, StringType()),
-        ]
-    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # zip over columns, not .iterrows(): iterrows materializes a Series
@@ -296,11 +296,11 @@ def apply_image_transformations(
                 except Exception:
                     blobs.append(None)
                     fmts.append(fmt)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].values, content_col: blobs, format_col: fmts}
-            )
+            pdf[content_col] = blobs
+            pdf[format_col] = fmts
+            yield pdf
 
-    return df.select(id_col, content_col, format_col).mapInPandas(run, schema)
+    return df.mapInPandas(run, _with_binary(df.schema, content_col))
 
 
 def decode_image_metadata(
@@ -386,7 +386,6 @@ def synth_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def fetch_images(
     df: DataFrame,
     fetcher: Callable[[str, str], bytes | None] | None = None,
-    id_col: str = "wikicaps_id",
     url_col: str = "url",
     fallback_url_col: str | None = "fallback_url",
 ) -> DataFrame:
@@ -395,14 +394,12 @@ def fetch_images(
     Direct-URL then fallback-URL retry, parity with download_wikimedia_img
     (utils.py:76-131: 0.5 s timeout, custom User-Agent, two-stage URL).
     ``fetcher(url, fallback) -> bytes | None`` is injectable so tests run
-    without network; the default uses requests. Failures → NULL content
-    (P7 null-drop shape). Idempotence against an existing sink is an
-    anti-join on ``id_col`` done by the caller (utils.py:84-86 parity).
+    without network; the default uses requests. Input columns pass through,
+    plus a binary ``content`` column, NULL on failure (P7 null-drop shape).
+    Idempotence against an existing sink is an anti-join on the id column
+    done by the caller (utils.py:84-86 parity).
     """
     real_fetcher = fetcher or _default_fetcher
-    schema = StructType(
-        [StructField(id_col, LongType()), StructField("content", BinaryType())]
-    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -413,10 +410,10 @@ def fetch_images(
                     blobs.append(real_fetcher(url, fb))
                 except Exception:
                     blobs.append(None)
-            yield pd.DataFrame({id_col: pdf[id_col].values, "content": blobs})
+            pdf["content"] = blobs
+            yield pdf
 
-    cols = [id_col, url_col] + ([fallback_url_col] if fallback_url_col else [])
-    return df.select(*cols).mapInPandas(run, schema)
+    return df.mapInPandas(run, _with_binary(df.schema, "content"))
 
 
 def persist_images(

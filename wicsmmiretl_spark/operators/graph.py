@@ -1078,9 +1078,28 @@ def kcore(
     # Lazy: materializes inside the first batch's probe job; every later
     # batch inherits the width through the semi-joins.
     e = e0.repartition(loop_parts, "u").localCheckpoint(eager=False)
+
+    def peel(es: DataFrame) -> DataFrame:
+        deg = (
+            es.select(F.explode(F.array("u", "v")).alias("x"))
+            .groupBy("x")
+            .agg(F.count("*").alias("d"))
+        )
+        keep = deg.filter(F.col("d") >= k).select("x")
+        return (
+            es.join(keep.withColumnRenamed("x", "u"), "u", "semi")
+            .join(keep.withColumnRenamed("x", "v"), "v", "semi")
+            .select("u", "v")
+        )
+
     peels_done = 0
     while prev_n > 0:
         if peels_done >= max_rounds:
+            # The budget ran out on a batch that changed the edge set, but
+            # that batch may have landed exactly on the fixpoint: one
+            # confirming peel tells a converged run from an exhausted one.
+            if peel(e).count() == prev_n:
+                break
             raise RuntimeError(
                 f"kcore: peeling did not reach a fixpoint within max_rounds="
                 f"{max_rounds}; raise max_rounds (each round deletes at least "
@@ -1089,17 +1108,7 @@ def kcore(
         batch = min(_KCORE_PEELS_PER_PROBE, max_rounds - peels_done)
         nxt = e
         for _ in range(batch):
-            deg = (
-                nxt.select(F.explode(F.array("u", "v")).alias("x"))
-                .groupBy("x")
-                .agg(F.count("*").alias("d"))
-            )
-            keep = deg.filter(F.col("d") >= k).select("x")
-            nxt = (
-                nxt.join(keep.withColumnRenamed("x", "u"), "u", "semi")
-                .join(keep.withColumnRenamed("x", "v"), "v", "semi")
-                .select("u", "v")
-            )
+            nxt = peel(nxt)
         obs = Observation()
         e = nxt.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
             eager=True

@@ -10,11 +10,16 @@ Replicates the reference's pipeline lifecycle Spark-first:
               → success filter (P8 as NOT NULL)      [checkpoint: transformed]
     load:     metadata parquet (S5) + (file, caption) CSV projection (S6)
 
+The image operators keep every input column, so each stage is one narrow
+plan into its checkpoint write: no join, and image bytes never leave the task
+that fetched them. A run submits four jobs (two checkpoints, metadata, CSV).
+
 Differences from the reference, by design:
 * Stages checkpoint to parquet and resume by reading the checkpoint
   (wikicaps_etl_pipeline.py:107,133-137 caching, minus the `_metadata_exists`
   full-flag bug noted in SURVEY §2.10/O2 — our existence check looks at the
-  checkpoint actually being resumed).
+  checkpoint actually being resumed). A checkpoint written in this run is
+  read back with its known schema and reused, never re-read or re-inferred.
 * The positional success-mask (wikicaps_etl_pipeline.py:203-210) is a
   NOT NULL filter on the transformed binary column — same semantics, no row
   order dependence.
@@ -27,7 +32,7 @@ from __future__ import annotations
 import os
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from wicsmmiretl_spark.functions.text import add_ratio_columns, caption_stats
@@ -59,6 +64,8 @@ class CaptionPipeline:
         # len(df) passes (wikicaps_etl_pipeline.py:171-201); Observation
         # piggybacks on the action already running, zero extra jobs.
         self.stage_metrics: dict[str, dict] = {}
+        # each stage's output DataFrame, once this pipeline has it
+        self._outputs: dict[str, DataFrame] = {}
 
     # -- checkpoint plumbing (O2) -------------------------------------------
     def _ckpt(self, stage: str) -> str:
@@ -70,9 +77,16 @@ class CaptionPipeline:
             [f for f in os.listdir(path) if f.startswith("_SUCCESS")]
         )
 
+    def _resume(self, stage: str) -> DataFrame | None:
+        """This run's output of ``stage``, else an earlier run's checkpoint."""
+        if stage not in self._outputs and self._has_ckpt(stage):
+            self._outputs[stage] = self.spark.read.parquet(self._ckpt(stage))
+        return self._outputs.get(stage)
+
     def _write_ckpt(self, df: DataFrame, stage: str) -> DataFrame:
         df.write.mode("overwrite").parquet(self._ckpt(stage))
-        return self.spark.read.parquet(self._ckpt(stage))
+        self._outputs[stage] = self.spark.read.schema(df.schema).parquet(self._ckpt(stage))
+        return self._outputs[stage]
 
     @staticmethod
     def _default_urls(df: DataFrame) -> DataFrame:
@@ -83,8 +97,8 @@ class CaptionPipeline:
 
     # -- stages (O1) --------------------------------------------------------
     def extract(self) -> DataFrame:
-        if self._has_ckpt("extracted"):
-            return self.spark.read.parquet(self._ckpt("extracted"))
+        if (done := self._resume("extracted")) is not None:
+            return done
 
         raw = read_caption_list(self.spark, self.config.caption_list)
         enriched = caption_stats(raw, text_col="caption")
@@ -95,40 +109,28 @@ class CaptionPipeline:
                 filtered, self.config.max_samples, ["wikicaps_id"], self.config.seed
             )
 
-        with_urls = self.url_builder(filtered)
-        fetched = fetch_images(with_urls, fetcher=self.fetcher)
-        attached = with_urls.join(fetched, "wikicaps_id", "left")
-
-        from pyspark.sql import Observation
-
         obs = Observation("extract")
-        attached = attached.observe(
+        fetched = fetch_images(self.url_builder(filtered), fetcher=self.fetcher).observe(
             obs,
             F.count(F.lit(1)).alias("rows_after_filter"),
             F.sum(F.col("content").isNull().cast("long")).alias("fetch_failures"),
         )
-        ok = attached.filter(F.col("content").isNotNull()).withColumn(
-            "format", F.lit("png")
-        )
+        ok = fetched.filter(F.col("content").isNotNull()).withColumn("format", F.lit("png"))
         out = self._write_ckpt(ok, "extracted")
         self.stage_metrics["extract"] = obs.get
         return out
 
     def transform(self) -> DataFrame:
-        if self._has_ckpt("transformed"):
-            return self.spark.read.parquet(self._ckpt("transformed"))
+        if (done := self._resume("transformed")) is not None:
+            return done
 
         extracted = self.extract()
         if not self.config.transformations:
             return self._write_ckpt(extracted, "transformed")
-        images = apply_image_transformations(extracted, self.config.transformations)
-        meta = extracted.drop("content", "format")
-
-        from pyspark.sql import Observation
 
         obs = Observation("transform")
-        joined = (
-            meta.join(images, "wikicaps_id", "inner")
+        images = (
+            apply_image_transformations(extracted, self.config.transformations)
             .observe(
                 obs,
                 F.count(F.lit(1)).alias("rows_transformed"),
@@ -136,7 +138,7 @@ class CaptionPipeline:
             )
             .filter(F.col("content").isNotNull())
         )
-        out = self._write_ckpt(joined, "transformed")
+        out = self._write_ckpt(images, "transformed")
         self.stage_metrics["transform"] = obs.get
         return out
 

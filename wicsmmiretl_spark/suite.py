@@ -1285,9 +1285,7 @@ def q_image_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     imgs = synth_images(docs, id_col="doc_id")
     transformed = apply_image_transformations(
-        imgs,
-        [ResizeTransformation(32, 32), CompressTransformation(4)],
-        id_col="doc_id",
+        imgs, [ResizeTransformation(32, 32), CompressTransformation(4)]
     )
     return decode_image_metadata(transformed, id_col="doc_id")
 
