@@ -21,3 +21,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_and_plans(spark):
+    """``jobs_and_plans(action)`` runs ``action`` and returns how many Spark
+    jobs it submitted (counted by job group) and the executed plan of every
+    SQL execution it ran."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    def run(action) -> tuple[int, list[str]]:
+        before = executions()
+        last_id = before[-1].executionId() if before else -1
+        group = f"job-count-{last_id}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setJobGroup(None, None)
+        plans = [e.physicalPlanDescription() for e in executions() if e.executionId() > last_id]
+        return len(sc.statusTracker().getJobIdsForGroup(group)), plans
+
+    return run

@@ -14,6 +14,7 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from wicsmmiretl_spark.operators.graph import connected_components
 
@@ -71,6 +72,18 @@ def test_near_clique_components(spark):
 
 def test_self_loops_and_reversed_duplicates(spark):
     _check(spark, [(5, 5), (1, 2), (2, 1), (2, 3)])
+    _check(spark, [(5, 5), (6, 6)])  # no edge left: every node a singleton
+
+
+def test_budget_ending_on_the_fixpoint_converges(spark):
+    """The 99-edge path reaches its fixpoint in round 7 (round 8 only
+    reproduces it). A budget of exactly 7 rounds ends on the fixpoint, so
+    one confirming round must return the labeling instead of raising."""
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 100)], "id_a long, id_b long"
+    )
+    got = {r.cluster_id for r in connected_components(df, max_iter=7).collect()}
+    assert got == {1}
 
 
 def test_unconverged_raises(spark):
@@ -532,6 +545,24 @@ class TestKcore:
         got = {r.id: r.deg for r in kcore(df, k=2, max_rounds=max_rounds).collect()}
         assert got == {100: 2, 101: 2, 102: 2}
 
+    def test_copurchase_oracle_replays_the_whole_peel_budget(self, spark, tmp_path):
+        """On seed-7 synthetic sf0.001 tables the URGENT co-purchase
+        14-core takes 21 peels, deeper than any fixed unroll sized for
+        sf0.01 (7 peels there): the oracle must unroll as many peels as
+        the query's budget allows, and then agrees with Spark."""
+        from perfbench.datagen import write_tables
+        from wicsmmiretl_spark.oracle import compare_query, duck_connection
+        from wicsmmiretl_spark.suite import ORACLES, QUERIES
+
+        write_tables(str(tmp_path), 0.001, 7)
+        con = duck_connection(str(tmp_path))
+        try:
+            name = "part_copurchase_kcore"
+            problems = compare_query(spark, con, QUERIES[name], ORACLES[name], str(tmp_path))
+        finally:
+            con.close()
+        assert not problems, problems
+
 
 class TestPersonalizedPagerank:
     def _local_ppr(self, edges, seeds, iters, d=0.85, scale=10**12):
@@ -642,3 +673,58 @@ class TestLinkPrediction:
         df = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
         with _pytest.raises(ValueError, match="column"):
             link_prediction(df, a_col="nope")
+
+
+# ---------------------------------------------------------------------------
+# Jobs per loop operator
+# ---------------------------------------------------------------------------
+
+_LOOP_JOBS = {
+    "connected_components": 38,
+    "pagerank": 46,
+    "personalized_pagerank": 45,
+    "bfs_levels": 46,
+    "shortest_paths": 20,
+    "hits": 36,
+    "kcore": 47,
+    "label_propagation": 16,
+}
+
+
+def _run_loop_operator(spark, name):
+    from wicsmmiretl_spark.operators import graph
+
+    rng = random.Random(1312)
+    pairs = [(rng.randrange(0, 300), rng.randrange(0, 300)) for _ in range(250)]
+    und = spark.createDataFrame(pairs, "id_a long, id_b long")
+    directed = spark.createDataFrame(pairs, "src long, dst long")
+    seeds = spark.createDataFrame([(i,) for i in range(0, 300, 30)], "id long")
+    run = {
+        "connected_components": lambda: graph.connected_components(und),
+        "pagerank": lambda: graph.pagerank(directed, iters=4),
+        "personalized_pagerank": lambda: graph.personalized_pagerank(directed, seeds, iters=4),
+        "bfs_levels": lambda: graph.bfs_levels(directed, seeds, max_depth=6),
+        "shortest_paths": lambda: graph.shortest_paths(
+            directed.withColumn("w", F.lit(1)), seeds, max_hops=4
+        ),
+        "hits": lambda: graph.hits(directed, iters=3),
+        "kcore": lambda: graph.kcore(und, k=2),
+        "label_propagation": lambda: graph.label_propagation(und, rounds=3),
+    }[name]
+    return run().collect()
+
+
+@pytest.mark.parametrize("name", sorted(_LOOP_JOBS))
+def test_loop_operator_job_count(spark, jobs_and_plans, name):
+    """Every round's probe, checkpoint and exchange is a Spark job, so the
+    job count pins each loop's shape on a fixed graph (8 shuffle
+    partitions): a change to the shared loop skeleton must not add one."""
+    # AQE submits query stages concurrently, so whether one stage reuses an
+    # exchange another is still building can depend on which finishes first
+    # (bfs_levels' first level joins and anti-joins the same checkpoint: 46
+    # jobs, now and then 47). A changed loop shape changes every run, a
+    # race one run, so a mismatch is re-measured twice before it fails.
+    counts = []
+    while len(counts) < 3 and _LOOP_JOBS[name] not in counts:
+        counts.append(jobs_and_plans(lambda: _run_loop_operator(spark, name))[0])
+    assert _LOOP_JOBS[name] in counts, counts

@@ -2,9 +2,9 @@
 
 The r14 optimization pins a bytes-derived shuffle width around the
 iterative operators' internal materializations (AQE itself stays on — the
-measured outcome; ``SPARK_GRAFT_LOOP_AQE=0`` re-runs that A/B); these
-tests pin the restore semantics the graph loops rely on — a guard that
-leaked its conf would silently re-width every later query in the session.
+measured outcome); these tests pin the restore semantics the graph loops
+rely on — a guard that leaked its conf would silently re-width every later
+query in the session.
 """
 
 from __future__ import annotations
@@ -49,16 +49,6 @@ def test_loop_materialization_conf_keeps_aqe_and_restores_width(spark):
         assert spark.conf.get(PARTS) == "2"
     assert spark.conf.get(AQE) == "true"
     assert spark.conf.get(PARTS) == parts_before
-
-
-def test_loop_aqe_env_ab_knob(spark, monkeypatch):
-    """SPARK_GRAFT_LOOP_AQE=0 scopes AQE off for the loop — the A/B
-    experiment mode — and restores it on exit."""
-    monkeypatch.setenv("SPARK_GRAFT_LOOP_AQE", "0")
-    with loop_materialization_conf(spark):
-        assert spark.conf.get(AQE) == "false"
-    assert spark.conf.get(AQE) == "true"
-    monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE")
 
 
 def test_loop_scoped_wraps_dataframe_arg(spark):

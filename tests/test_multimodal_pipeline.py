@@ -237,37 +237,13 @@ def test_pipeline_transform_resume_skips_fetch_and_chain(spark, caption_fixture,
     assert spark.read.parquet(paths["metadata"]).count() == n
 
 
-def _jobs_and_plans(spark, action) -> tuple[int, list[str]]:
-    """Run ``action``; return how many Spark jobs it submitted (counted by
-    job group) and the executed plan of every SQL execution it ran."""
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        bus.waitUntilEmpty()
-        ex = store.executionsList()
-        return [ex.apply(i) for i in range(ex.size())]
-
-    before = executions()
-    last_id = before[-1].executionId() if before else -1
-    group = f"pipeline-contract-{last_id}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setJobGroup(None, None)
-    plans = [e.physicalPlanDescription() for e in executions() if e.executionId() > last_id]
-    return len(sc.statusTracker().getJobIdsForGroup(group)), plans
-
-
-def test_pipeline_run_is_four_join_free_jobs(spark, caption_fixture, tmp_path):
+def test_pipeline_run_is_four_join_free_jobs(spark, jobs_and_plans, caption_fixture, tmp_path):
     """A full run submits exactly 4 jobs (two checkpoint writes, metadata,
     CSV), and no write plan joins or broadcasts: image bytes never leave the
     task that fetched them."""
     cfg = _config(caption_fixture, tmp_path / "out5")
     pipe = CaptionPipeline(spark, cfg, fetcher=fake_fetcher, url_builder=_url_from_file)
-    jobs, plans = _jobs_and_plans(spark, pipe.run)
+    jobs, plans = jobs_and_plans(pipe.run)
     assert jobs == 4
     assert len(plans) == 4
     for plan in plans:

@@ -36,22 +36,31 @@ Scale design
   ``subtract`` anti-join.
 * Rounds are capped (default 50 ≈ log₂ of anything); exhausting the cap
   raises loudly rather than emitting a partially-contracted labeling.
+
+Loop skeleton
+-------------
+Every iterative operator here (CC, PageRank/PPR, BFS, SSSP, HITS, k-core)
+enters and runs its loop through ``operators/loopconf.py``:
+``loop_entry`` materializes the canonical edges with their observed count
+and pins the bytes-derived loop width, ``observed_checkpoint`` is the one
+way a round's metrics reach the driver (one job per probe), and
+``fixpoint`` drives the signature-repeat loops (CC, k-core) including the
+confirming round on an exhausted budget. ``label_propagation`` is
+fixed-round with no probe and keeps its own loop.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wicsmmiretl_spark.operators.loopconf import (
-    loop_partitions,
+    fixpoint,
+    loop_entry,
     loop_scoped,
-    set_loop_shuffle_partitions,
+    observed_checkpoint,
+    row_count,
 )
-
-# Shuffle-serialized bytes per edge/state row (two-three longs/doubles plus
-# row overhead) — feeds the bytes-based loop width (loop_partitions).
-_EDGE_ROW_BYTES = 32
 
 # Peels per driver fixpoint probe in ``kcore`` (r15, guide §1.2): each probe
 # is an eager localCheckpoint barrier, and batching is sound because the
@@ -125,35 +134,23 @@ def connected_components(
     regardless of component diameter (path graphs included — the case that
     defeats min-label propagation).
 
-    Partition sizing (r14): the loop runs under ``@loop_scoped`` with
-    ``spark.sql.shuffle.partitions`` pinned to the bytes-derived
-    ``loop_partitions`` width, so the per-round window shuffles AND the
-    small-star's closing ``distinct()`` all plan at the loop width (the
-    conf is restored on return). AQE stays ON inside the loop — the
-    interleaved A/B (tools/loop_aqe_ab.py) measured the non-adaptive
-    variant ~20% slower here despite running fewer stage-jobs; see the
-    loopconf module docstring.
+    The loop runs under ``@loop_scoped`` at the bytes-derived loop width
+    (``loop_entry``), so the per-round window shuffles AND the small-star's
+    closing ``distinct()`` plan at that width. The fixpoint signature is
+    (row count, order-independent xxhash64 checksum) of the edge set,
+    probed every round.
     """
-    # The initial (count, checksum) fixpoint baseline rides the dedup
-    # materialization job itself via an Observation — one job builds the
-    # canonical edge set AND delivers the baseline, no separate
-    # _checksum action (r14; same pattern as the per-round probe below).
-    obs0 = Observation()
-    edges0 = (
+    checksum = F.coalesce(
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+        F.lit(0).cast("decimal(38,0)"),
+    ).alias("h")
+    edges0, loop_parts, start = loop_entry(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .observe(
-            obs0,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        )
-        .localCheckpoint(eager=True)
+        .distinct(),
+        None,
+        checksum,
     )
-    edges = edges0
     # Every node that appears at all, including isolated self-pair nodes:
     # they must come back out labeled as their own singleton component.
     # Lazy: its only consumer is the final labeling join, so it
@@ -164,18 +161,6 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=False)
     )
-
-    m0 = obs0.get
-    prev = (m0["n"], int(m0["h"]))
-    # Size the per-round shuffles to the edge BYTES (loop_partitions —
-    # guide §2.2 partition sizing), pinned both as the explicit
-    # ``repartition`` inside each star and as the loop-scoped
-    # ``spark.sql.shuffle.partitions`` so the small-star's closing
-    # ``distinct()`` plans at the same width (restored on exit by the
-    # @loop_scoped guard).
-    session_parts = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = loop_partitions(prev[0], _EDGE_ROW_BYTES, session_parts)
-    set_loop_shuffle_partitions(pairs.sparkSession, loop_parts)
     # r15 NOTE (measured, do not re-try): batching 2 alternating-star
     # rounds per probe — the kcore r15 win — LOSES here: under AQE every
     # Exchange materializes as its own stage-job regardless of action
@@ -183,37 +168,16 @@ def connected_components(
     # (nothing to elide, unlike kcore's redundant per-round repartition),
     # and batched detection runs up to 2 extra no-op rounds. Probed 3x:
     # 50 -> 53 jobs, build 5.3 -> 6.7 s. Per-round probing stands.
-    for _ in range(max_iter):
-        # The fixpoint checksum rides the materialization job itself via
-        # an Observation (r9): CollectMetrics fires when the eager
-        # localCheckpoint's internal action completes, so each round is
-        # ONE job instead of two (materialize, then re-aggregate the
-        # checkpointed RDD). Same order-independent fingerprint as the
-        # baseline observation above.
-        obs = Observation()
-        edges = (
-            _small_star(_large_star(edges, loop_parts), loop_parts)
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                    F.lit(0).cast("decimal(38,0)"),
-                ).alias("h"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        m = obs.get
-        cur = (m["n"], int(m["h"]))
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components: alternating-star did not reach a fixpoint "
-            f"within max_iter={max_iter} rounds; raise max_iter (expected "
-            "rounds ~ log2 of the largest component size)."
-        )
+    edges = fixpoint(
+        edges0,
+        lambda es: _small_star(_large_star(es, loop_parts), loop_parts),
+        start,
+        max_iter,
+        checksum,
+        error=f"connected_components: alternating-star did not reach a fixpoint "
+        f"within max_iter={max_iter} rounds; raise max_iter (expected "
+        "rounds ~ log2 of the largest component size).",
+    )
 
     # Fixpoint edge set is the star forest: (node, component_min) for every
     # non-root node. Roots (and isolated nodes) label themselves.
@@ -269,34 +233,16 @@ def pagerank(
     in-box) is a partial-agg sum, not a window — map-side combine bounds
     the reducer.
 
-    Partition sizing (r14): the loop runs under ``@loop_scoped`` with
-    ``spark.sql.shuffle.partitions`` pinned to the bytes-derived
-    ``loop_partitions`` width for the loop's lifetime, so the per-round
-    contribution ``groupBy("dst")`` plans at the same width as the
-    explicit hash partitionings (the conf is restored on return). AQE
-    stays ON inside the loop — measured parity-or-better vs the
-    non-adaptive variant (loopconf module docstring).
+    The loop runs under ``@loop_scoped`` at the bytes-derived loop width
+    (``loop_entry``), so the per-round contribution ``groupBy("dst")``
+    plans at the same width as the explicit hash partitionings.
 
     Output: (id, rank double) for every node appearing in ``edges``.
     """
-    # Edge count rides the dedup materialization via an Observation (one
-    # build job, not two); the loop width is bytes-derived
-    # (loop_partitions, guide §2.2) and pinned as the loop-scoped
-    # shuffle width (restored by @loop_scoped on return), so the
-    # contribution groupBy's partial-agg exchange matches the explicit
-    # hash partitionings instead of planning session-wide.
-    obs = Observation()
-    e0 = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    e, loop_parts, _ = loop_entry(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct(),
+        "src",
     )
-    n_edges = obs.get["n"]
-    session_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = loop_partitions(n_edges, _EDGE_ROW_BYTES, session_parts)
-    set_loop_shuffle_partitions(edges.sparkSession, loop_parts)
-    e = e0.repartition(loop_parts, "src").localCheckpoint(eager=False)
     # The node list carries each node's STATIC out-degree, attached once
     # here and carried through every iteration's state (r14): the loop no
     # longer re-joins a degree table per round — one checkpoint per
@@ -319,6 +265,38 @@ def pagerank(
     return _pagerank_loop(pr, e, nodes, n_total, damping, iters, scale, loop_parts)
 
 
+def _rank_flow(e: DataFrame, pr: DataFrame, scale: int) -> tuple[DataFrame, DataFrame]:
+    """One power-method step's mass flow for ``pagerank`` and
+    ``personalized_pagerank``: per-node inbound mass ``inb`` (keyed by
+    ``dst``) and the single-row dangling mass ``dang_i`` (scaled bigint),
+    both scaled-integer sums so the result is independent of addition
+    order. ``pr`` carries (id, outdeg, rank); dangling nodes have a NULL
+    outdeg."""
+    contrib = (
+        e.join(
+            pr.filter(F.col("outdeg").isNotNull()).select(
+                F.col("id").alias("src"), "rank", "outdeg"
+            ),
+            "src",
+        )
+        .groupBy("dst")
+        .agg(
+            (
+                F.sum(
+                    F.round((F.col("rank") / F.col("outdeg")) * scale).cast("long")
+                ).cast("double")
+                / F.lit(float(scale))
+            ).alias("inb")
+        )
+    )
+    dangling = pr.filter(F.col("outdeg").isNull()).agg(
+        F.coalesce(
+            F.sum(F.round(F.col("rank") * scale).cast("long")), F.lit(0)
+        ).alias("dang_i")
+    )
+    return contrib, dangling
+
+
 def _pagerank_loop(pr, e, nodes, n_total, d, iters, scale, loop_parts):
     # All checkpoints in the loop are LAZY (r9): pagerank has no
     # per-iteration driver action (unlike connected_components' fixpoint
@@ -330,28 +308,7 @@ def _pagerank_loop(pr, e, nodes, n_total, d, iters, scale, loop_parts):
     # aggregation consume it, and it carries the static outdeg so no
     # per-round degree join exists (r14).
     for _ in range(iters):
-        contrib = (
-            e.join(
-                pr.filter(F.col("outdeg").isNotNull()).select(
-                    F.col("id").alias("src"), "rank", "outdeg"
-                ),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(
-                (
-                    F.sum(
-                        F.round((F.col("rank") / F.col("outdeg")) * scale).cast("long")
-                    ).cast("double")
-                    / F.lit(float(scale))
-                ).alias("inb")
-            )
-        )
-        dangling = pr.filter(F.col("outdeg").isNull()).agg(
-            F.coalesce(
-                F.sum(F.round(F.col("rank") * scale).cast("long")), F.lit(0)
-            ).alias("dang_i")
-        )
+        contrib, dangling = _rank_flow(e, pr, scale)
         pr = (
             nodes.join(contrib, nodes["id"] == contrib["dst"], "left")
             .join(F.broadcast(n_total))
@@ -480,17 +437,16 @@ def bfs_levels(
     minimum level because expansion is strictly level-ordered — no
     re-relaxation, no priority queue.
 
-    Scale shape: the edge list is hash-partitioned on ``src`` ONCE at an
-    edge-count-sized width (same plan-local sizing as pagerank — no
-    session-conf mutation) and every round's frontier join re-uses that
-    partitioning; the frontier and visited sets are repartitioned on the
-    node id at the same width, so the anti-join co-locates. Lineage is
-    truncated per round (``localCheckpoint``) and the loop exits early on
-    an empty frontier — two scalars per round cross the driver (the
-    frontier count), nothing else collects. Rounds are data-independent
-    sequential barriers, so ``max_depth`` bounds wall-clock explicitly;
-    unreached nodes are simply absent (a caller wanting them labels the
-    complement with a left anti join).
+    Scale shape: the edge list is hash-partitioned on ``src`` ONCE at the
+    loop width (``loop_entry``, as in pagerank) and every round's
+    frontier join re-uses that partitioning; the frontier and visited sets
+    are repartitioned on the node id at the same width, so the anti-join
+    co-locates. Lineage is truncated per round (``localCheckpoint``) and
+    the loop exits early on an empty frontier — one scalar per round
+    crosses the driver (the frontier count), nothing else collects.
+    Rounds are data-independent sequential barriers, so ``max_depth``
+    bounds wall-clock explicitly; unreached nodes are simply absent (a
+    caller wanting them labels the complement with a left anti join).
 
     Output: (``id_col`` node id, level int) — one row per node reached,
     level in [0, max_depth]; level 0 rows are exactly the distinct
@@ -498,20 +454,12 @@ def bfs_levels(
     """
     if max_depth < 0:
         raise ValueError(f"bfs_levels: max_depth must be >= 0, got {max_depth}")
-    obs0 = Observation()
-    e0 = (
+    e, loop_parts, _ = loop_entry(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "src",
     )
-    n_edges = obs0.get["n"]
-    session_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = loop_partitions(n_edges, _EDGE_ROW_BYTES, session_parts)
-    set_loop_shuffle_partitions(edges.sparkSession, loop_parts)
-    e = e0.repartition(loop_parts, "src").localCheckpoint(eager=False)
-
     visited = (
         sources.select(F.col(id_col).alias("id"))
         .filter(F.col("id").isNotNull())
@@ -529,19 +477,16 @@ def bfs_levels(
     # level disappears while the lazily-pinned odd frontier is consumed
     # three times inside the even level's job. Per-level probing stands.
     for depth in range(1, max_depth + 1):
-        nxt = (
+        nxt, m = observed_checkpoint(
             frontier.join(e, frontier["id"] == e["src"])
             .select(F.col("dst").alias("id"))
             .distinct()
             .join(visited, "id", "left_anti")
             .withColumn("level", F.lit(depth))
-            .repartition(loop_parts, "id")
+            .repartition(loop_parts, "id"),
+            row_count(),
         )
-        # Frontier count rides the materialization job via an Observation
-        # (r9) — the empty-frontier exit needs no separate isEmpty job.
-        obs = Observation()
-        nxt = nxt.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-        if obs.get["n"] == 0:
+        if m["n"] == 0:
             break
         # No re-checkpoint of the visited union: every leaf is already a
         # checkpointed frontier, so the union's lineage is a flat d-way
@@ -590,22 +535,14 @@ def shortest_paths(
     """
     if max_hops < 0:
         raise ValueError(f"shortest_paths: max_hops must be >= 0, got {max_hops}")
-    e0 = (
+    e, loop_parts, _ = loop_entry(
         edges.select(
             F.col(src_col).alias("src"),
             F.col(dst_col).alias("dst"),
             F.col(weight_col).cast("long").alias("w"),
-        )
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull() & F.col("w").isNotNull())
-        .observe(_obs0 := Observation(), F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull() & F.col("w").isNotNull()),
+        "src",
     )
-    n_edges = _obs0.get["n"]
-    session_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = loop_partitions(n_edges, _EDGE_ROW_BYTES, session_parts)
-    set_loop_shuffle_partitions(edges.sparkSession, loop_parts)
-    e = e0.repartition(loop_parts, "src").localCheckpoint(eager=False)
-
     dist = (
         sources.select(F.col(id_col).alias("id"))
         .filter(F.col("id").isNotNull())
@@ -923,21 +860,14 @@ def hits(
     for c in (src_col, dst_col):
         if c not in edges.columns:
             raise ValueError(f"hits: column {c!r} not in {edges.columns}")
-    obs0 = Observation()
-    e0 = (
+    e, _, m = loop_entry(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "src",
     )
-    session_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    n_edges = obs0.get["n"]
-    if n_edges == 0:
+    if m["n"] == 0:
         raise ValueError("hits: empty edge set")
-    loop_parts = loop_partitions(n_edges, _EDGE_ROW_BYTES, session_parts)
-    set_loop_shuffle_partitions(edges.sparkSession, loop_parts)
-    e = e0.repartition(loop_parts, "src").localCheckpoint(eager=False)
     dec = "decimal(38,0)"
 
     def _scores(raw: DataFrame, key: str, raw_col: str, norm, out_col: str) -> DataFrame:
@@ -961,29 +891,19 @@ def hits(
             contrib = e.join(hub.withColumnRenamed("id", "src"), "src").select(
                 "dst", "hub"
             )
-        obs_a = Observation()
-        a_raw = (
+        a_raw, m = observed_checkpoint(
             contrib.groupBy("dst")
-            .agg(F.sum(F.round(F.col("hub") * scale).cast("long")).alias("ar"))
-            .observe(
-                obs_a,
-                F.coalesce(F.sum(F.col("ar").cast(dec)), F.lit(0).cast(dec)).alias("na"),
-            )
-            .localCheckpoint(eager=True)
+            .agg(F.sum(F.round(F.col("hub") * scale).cast("long")).alias("ar")),
+            F.coalesce(F.sum(F.col("ar").cast(dec)), F.lit(0).cast(dec)).alias("na"),
         )
-        auth = _scores(a_raw, "dst", "ar", obs_a.get["na"], "auth")
-        obs_h = Observation()
-        h_raw = (
+        auth = _scores(a_raw, "dst", "ar", m["na"], "auth")
+        h_raw, m = observed_checkpoint(
             e.join(auth.withColumnRenamed("id", "dst"), "dst")
             .groupBy("src")
-            .agg(F.sum(F.round(F.col("auth") * scale).cast("long")).alias("hr"))
-            .observe(
-                obs_h,
-                F.coalesce(F.sum(F.col("hr").cast(dec)), F.lit(0).cast(dec)).alias("nh"),
-            )
-            .localCheckpoint(eager=True)
+            .agg(F.sum(F.round(F.col("auth") * scale).cast("long")).alias("hr")),
+            F.coalesce(F.sum(F.col("hr").cast(dec)), F.lit(0).cast(dec)).alias("nh"),
         )
-        hub = _scores(h_raw, "src", "hr", obs_h.get["nh"], "hub")
+        hub = _scores(h_raw, "src", "hr", m["nh"], "hub")
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -1029,11 +949,10 @@ def kcore(
 
     Scale shape per round: one stub-side degree agg (partial-agged hash
     groupBy) + two left-semi joins back onto the edge set; the fixpoint
-    probe is a row count riding the materialization job itself via
-    ``Observation`` (the connected-components r9 pattern — one job per
-    probe, no second action). Rounds are bounded by ``max_rounds`` and
-    raise loudly on exhaustion; the edge set only ever shrinks, so
-    per-round cost is non-increasing. Nothing is collected.
+    signature is the edge count (``loopconf.fixpoint``). Rounds are
+    bounded by ``max_rounds`` and raise loudly on exhaustion; the edge set
+    only ever shrinks, so per-round cost is non-increasing. Nothing is
+    collected.
 
     r15 loop shape (guide §1.2 step 1, §2.4): peels run in BATCHES of
     ``_KCORE_PEELS_PER_PROBE`` per driver probe — the per-round eager
@@ -1059,25 +978,21 @@ def kcore(
         if c not in edges.columns:
             raise ValueError(f"kcore: column {c!r} not in {edges.columns}")
     u, v = F.col(a_col), F.col(b_col)
-    obs0 = Observation()
-    e0 = (
+    # NOT @loop_scoped (``pin_shuffle=False``): the per-round degree agg
+    # keeps the session shuffle width, the shape the r15 job counts were
+    # measured in. The semi-joins against the surviving-vertex list rely
+    # on AQE's runtime broadcast conversion (the keep list shrinks every
+    # round; with AQE scoped off in r14 they fell back to sort-merge,
+    # ~55% slower). The lazy width pin materializes inside the first
+    # batch's probe job; every later batch inherits the width through the
+    # semi-joins.
+    e, _, start = loop_entry(
         edges.filter(u.isNotNull() & v.isNotNull() & (u != v))
         .select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "u",
+        pin_shuffle=False,
     )
-    # NOT @loop_scoped: measured ~55% slower with AQE scoped off — the
-    # per-round semi-joins against the surviving-vertex list depend on
-    # AQE's runtime broadcast conversion (the keep list shrinks every
-    # round; statically planned they fall back to sort-merge). The
-    # initial count still rides the canonicalization job's Observation.
-    session_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    prev_n = obs0.get["n"]
-    loop_parts = loop_partitions(prev_n, _EDGE_ROW_BYTES, session_parts)
-    # Lazy: materializes inside the first batch's probe job; every later
-    # batch inherits the width through the semi-joins.
-    e = e0.repartition(loop_parts, "u").localCheckpoint(eager=False)
 
     def peel(es: DataFrame) -> DataFrame:
         deg = (
@@ -1092,32 +1007,16 @@ def kcore(
             .select("u", "v")
         )
 
-    peels_done = 0
-    while prev_n > 0:
-        if peels_done >= max_rounds:
-            # The budget ran out on a batch that changed the edge set, but
-            # that batch may have landed exactly on the fixpoint: one
-            # confirming peel tells a converged run from an exhausted one.
-            if peel(e).count() == prev_n:
-                break
-            raise RuntimeError(
-                f"kcore: peeling did not reach a fixpoint within max_rounds="
-                f"{max_rounds}; raise max_rounds (each round deletes at least "
-                "one vertex, so rounds are bounded by the peel depth)."
-            )
-        batch = min(_KCORE_PEELS_PER_PROBE, max_rounds - peels_done)
-        nxt = e
-        for _ in range(batch):
-            nxt = peel(nxt)
-        obs = Observation()
-        e = nxt.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        peels_done += batch
-        cur_n = obs.get["n"]
-        if cur_n == prev_n:
-            break
-        prev_n = cur_n
+    e = fixpoint(
+        e,
+        peel,
+        start,
+        max_rounds,
+        error=f"kcore: peeling did not reach a fixpoint within max_rounds="
+        f"{max_rounds}; raise max_rounds (each round deletes at least "
+        "one vertex, so rounds are bounded by the peel depth).",
+        batch=_KCORE_PEELS_PER_PROBE,
+    )
     return (
         e.select(F.explode(F.array("u", "v")).alias("id"))
         .groupBy("id")
@@ -1167,22 +1066,12 @@ def personalized_pagerank(
     if seed_col not in seeds.columns:
         raise ValueError(f"personalized_pagerank: column {seed_col!r} not in {seeds.columns}")
     d = damping
-    # Same r14 loop discipline as ``pagerank``: observation-carried edge
-    # count, bytes-derived loop width pinned as the loop shuffle conf,
-    # lazy pinned operands, and the static outdeg carried in the state so
-    # no per-round degree join/checkpoint exists.
-    obs0 = Observation()
-    e0 = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    # Same loop shape as ``pagerank``: lazy pinned operands, and the static
+    # outdeg carried in the state so no per-round degree join exists.
+    e, loop_parts, _ = loop_entry(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct(),
+        "src",
     )
-    n_edges = obs0.get["n"]
-    session_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = loop_partitions(n_edges, _EDGE_ROW_BYTES, session_parts)
-    set_loop_shuffle_partitions(edges.sparkSession, loop_parts)
-    e = e0.repartition(loop_parts, "src").localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -1211,28 +1100,7 @@ def personalized_pagerank(
     )
     pr = tele_nodes.select("id", "outdeg", F.col("tele").alias("rank"))
     for _ in range(iters):
-        contrib = (
-            e.join(
-                pr.filter(F.col("outdeg").isNotNull()).select(
-                    F.col("id").alias("src"), "rank", "outdeg"
-                ),
-                "src",
-            )
-            .groupBy("dst")
-            .agg(
-                (
-                    F.sum(
-                        F.round((F.col("rank") / F.col("outdeg")) * scale).cast("long")
-                    ).cast("double")
-                    / F.lit(float(scale))
-                ).alias("inb")
-            )
-        )
-        dangling = pr.filter(F.col("outdeg").isNull()).agg(
-            F.coalesce(
-                F.sum(F.round(F.col("rank") * scale).cast("long")), F.lit(0)
-            ).alias("dang_i")
-        )
+        contrib, dangling = _rank_flow(e, pr, scale)
         pr = (
             tele_nodes.join(contrib, tele_nodes["id"] == contrib["dst"], "left")
             .join(F.broadcast(dangling))

@@ -1,47 +1,43 @@
-"""Scoped session-conf guard for iterative operators (guide §1.2 step 1).
+"""Loop kernel for the iterative graph operators (guide §1.2 step 1).
 
-Why this exists
----------------
-Every iterative operator in this package (alternating-star CC, PageRank/
-PPR/HITS, k-core peeling, BFS/SSSP, LPA, the Lloyd loops) materializes a
-small loop-state frame once per round — an eager ``localCheckpoint`` when
-the round needs a driver-visible fixpoint probe, a lazy one otherwise.
-Two session confs interact with those materializations:
+Every loop in ``operators/graph.py`` (alternating-star CC, PageRank/PPR,
+HITS, BFS/SSSP, k-core peeling) runs the same skeleton: canonicalize the
+edges, materialize them with their count, derive and pin the loop width,
+then run rounds that each materialize a small loop-state frame and, where
+the loop has a driver-side exit, probe it. This module owns that skeleton:
 
-* ``spark.sql.shuffle.partitions`` — without a pin, every loop-internal
-  partial-agg/distinct exchange plans at the session width (32 near-empty
-  reduce tasks per groupBy at bench scale, once per round). The graph
-  loops therefore pin the width to the bytes-derived ``loop_partitions``
-  for the loop's lifetime via :func:`set_loop_shuffle_partitions`; this
-  guard snapshots and restores the session value so operators don't pair
-  their own restore.
-* ``spark.sql.adaptive.enabled`` — with AQE on, each materialization runs
-  one Spark job per Exchange in its plan (AdaptiveSparkPlanExec
-  materializes a QueryStage per shuffle before producing the RDD), so a
-  loop pays O(rounds × exchanges) sequential stage-jobs. The r14 fixed-
-  cost probe measured ~40-90 ms of driver overhead per such job and the
-  graph queries ran 50-70 of them, which motivated scoping AQE OFF inside
-  loops.
+* :func:`observed_checkpoint` — the one way a round reaches the driver:
+  an eager ``localCheckpoint`` whose metrics ride the same job as an
+  ``Observation`` (CollectMetrics fires when the checkpoint's internal
+  action completes), so a probe is ONE job, never materialize-then-count.
+* :func:`loop_entry` — the width rule: the canonical edge frame's observed
+  row count → bytes-derived :func:`loop_partitions` → pinned as the
+  loop-scoped ``spark.sql.shuffle.partitions`` (so loop-internal
+  partial-agg/distinct exchanges plan at the loop width instead of 32
+  near-empty reduce tasks per groupBy) and as a lazy
+  ``repartition(parts, key)`` of the edges.
+* :func:`fixpoint` — the round loop for operators that stop on a repeated
+  signature (CC, k-core): step, materialize with the signature, stop when
+  it repeats or the state is empty; on an exhausted budget one confirming
+  round tells a converged run from an unconverged one, so a run that
+  reached its fixpoint on the last budgeted round is never rejected.
 
-**Measured outcome (r14, interleaved same-session A/B via the knob
-below): AQE-off-in-loops is a net LOSS and is therefore NOT the
-default.** The per-stage-job overhead is real but smaller than the
-plan-quality AQE buys back inside the rounds: checkpointed loop frames
-carry no statistics, so statically-planned round joins fall back to
-sort-merge where AQE's runtime size discovery converts them to
-broadcasts (Lloyd-loop ops lost 11-25%, connected_components ~20%,
-HITS/PageRank parity; label_propagation and kcore had already measured
-40-55% round slowdowns without AQE). What DID win — independently of the
-AQE toggle — is the rest of the r14 loop discipline: the bytes-derived
-pinned loop width, fixpoint counts riding materialization jobs as
-Observations instead of separate actions, lazy checkpoints wherever no
-driver probe needs the round eagerly, and static out-degree carried in
-the PageRank/PPR state (jobs per graph query dropped 57→42, 54→40,
-49→39, 72→67 with AQE still on; the AQE-off variant cuts them much
-further — 53→14, 72→11 — and is still slower, which is the point).
+Session conf: :func:`loop_scoped` / :func:`loop_materialization_conf`
+snapshot ``spark.sql.shuffle.partitions`` and restore it on exit, so loop
+bodies pin their width without pairing their own restore.
 
-Knob: set ``SPARK_GRAFT_LOOP_AQE=0`` to re-run the A/B (scope AQE off
-inside loops); default keeps the session's AQE setting untouched.
+Why AQE stays on inside loops (r14, interleaved same-session A/B): with
+AQE on, each materialization runs one Spark job per Exchange (~40-90 ms
+of driver overhead each), and scoping AQE off cut the graph queries' jobs
+sharply (53→14, 72→11) — yet was a net LOSS. Checkpointed loop frames
+carry no statistics, so statically planned round joins fall back to
+sort-merge where AQE's runtime size discovery converts them to broadcasts:
+Lloyd-loop operators lost 11-25 %, connected_components ~20 %,
+label_propagation and kcore 40-55 %, HITS/PageRank parity. What did win,
+independently of AQE, is the discipline this module now owns: the
+bytes-derived pinned width, counts riding materializations as
+Observations, lazy checkpoints wherever no driver probe needs the round,
+and static out-degree carried in the PageRank/PPR state.
 
 Thread-safety: the guard mutates the session conf for the duration of
 the loop, exactly like the streaming harness's shuffle-partition guard
@@ -54,11 +50,11 @@ concurrency around these loops.
 from __future__ import annotations
 
 import functools
-import os
 from contextlib import contextmanager
-from typing import Callable, Iterator, TypeVar
+from typing import Any, Callable, Iterator, TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 T = TypeVar("T")
 
@@ -87,10 +83,6 @@ def scoped_conf(spark: SparkSession, **confs: str) -> Iterator[None]:
                 spark.conf.set(key, value)
 
 
-def _loop_aqe_disabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_LOOP_AQE", "1") == "0"
-
-
 @contextmanager
 def loop_materialization_conf(spark: SparkSession) -> Iterator[None]:
     """Conf scope for an iterative operator's loop.
@@ -98,15 +90,9 @@ def loop_materialization_conf(spark: SparkSession) -> Iterator[None]:
     ``spark.sql.shuffle.partitions`` is snapshotted and restored on exit:
     loop bodies are allowed to call :func:`set_loop_shuffle_partitions`
     once they know their data-derived loop width, without pairing their
-    own restore.
-
-    AQE is left at the session setting by default — the measured r14
-    outcome (module docstring); ``SPARK_GRAFT_LOOP_AQE=0`` scopes it off
-    for the loop's materializations to re-run that A/B."""
-    keys = {"spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions")}
-    if _loop_aqe_disabled():
-        keys["spark.sql.adaptive.enabled"] = "false"
-    with scoped_conf(spark, **keys):
+    own restore. AQE is left at the session setting (module docstring)."""
+    key = "spark.sql.shuffle.partitions"
+    with scoped_conf(spark, **{key: spark.conf.get(key)}):
         yield
 
 
@@ -173,3 +159,80 @@ def loop_scoped(fn: Callable[..., T]) -> Callable[..., T]:
             return fn(*args, **kwargs)
 
     return wrapper
+
+
+# Shuffle-serialized bytes per edge/state row (two-three longs/doubles plus
+# row overhead) — feeds the bytes-based loop width (loop_partitions).
+_EDGE_ROW_BYTES = 32
+
+
+def row_count() -> Column:
+    """The row-count metric ``n`` every loop entry and fixpoint probe observes."""
+    return F.count(F.lit(1)).alias("n")
+
+
+def observed_checkpoint(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict[str, Any]]:
+    """Materialize ``df`` (eager ``localCheckpoint``) and return it with
+    its observed ``metrics`` — one Spark job for both."""
+    obs = Observation()
+    out = df.observe(obs, *metrics).localCheckpoint(eager=True)
+    return out, obs.get
+
+
+def loop_entry(
+    edges: DataFrame, key: str | None, *metrics: Column, pin_shuffle: bool = True
+) -> tuple[DataFrame, int, dict[str, Any]]:
+    """Loop entry for a canonical edge frame: materialize it observing its
+    row count ``n`` (plus ``metrics``), derive the loop width from that
+    count, and pin it.
+
+    Returns ``(edges, loop_parts, metrics_row)``. ``edges`` is the eager
+    checkpoint, or with ``key`` a lazy ``repartition(loop_parts, key)``
+    pin of it (materialized inside the first round's job). ``pin_shuffle``
+    also pins the width as the session shuffle width; it requires the
+    caller to run under :func:`loop_scoped`, which restores it."""
+    e0, m = observed_checkpoint(edges, row_count(), *metrics)
+    spark = edges.sparkSession
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = loop_partitions(m["n"], _EDGE_ROW_BYTES, session_parts)
+    if pin_shuffle:
+        set_loop_shuffle_partitions(spark, parts)
+    if key is not None:
+        e0 = e0.repartition(parts, key).localCheckpoint(eager=False)
+    return e0, parts, m
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    start: dict[str, Any],
+    max_rounds: int,
+    *metrics: Column,
+    error: str,
+    batch: int = 1,
+) -> DataFrame:
+    """Apply ``step`` until the state's signature — its row count ``n``
+    plus ``metrics``, observed on each probe's checkpoint — repeats, or
+    the state is empty (every caller's step maps an empty state to
+    itself). ``start`` is the signature of ``state``.
+
+    ``batch`` steps run per probe (fewer probes, up to ``batch - 1``
+    no-op steps past the fixpoint); only sound for a monotone step, where
+    an unchanged signature across a batch means its first step already
+    changed nothing. ``max_rounds`` counts steps. When it runs out, one
+    confirming step tells a converged run (returned) from an unconverged
+    one (``RuntimeError(error)``)."""
+    prev, done = start, 0
+    while prev["n"] > 0:
+        n = min(batch, max_rounds - done) or 1  # 1 = the confirming step
+        nxt = state
+        for _ in range(n):
+            nxt = step(nxt)
+        state, cur = observed_checkpoint(nxt, row_count(), *metrics)
+        if cur == prev:
+            break
+        if done >= max_rounds:
+            raise RuntimeError(error)
+        done += n
+        prev = cur
+    return state

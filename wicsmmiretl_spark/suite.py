@@ -9982,12 +9982,19 @@ def q_purchase_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Peel budget of ``part_copurchase_kcore``, shared by the query and its
+# oracle: the oracle unrolls exactly as many peels as the operator may run,
+# so every result the operator accepts is one the oracle replays.
+_KCORE_MAX_ROUNDS = 60
+
+
 def _kcore_sql(k: int, rounds: int) -> str:
     """Unrolled peeling replaying operators/graph.py:kcore on the URGENT
     part co-purchase graph. Peeling is monotone, so unrolled rounds past
-    the fixpoint are no-ops — the oracle only needs rounds ≥ the sf0.01
-    peel depth (measured 7 at k=14; 12 unrolled), not equality with the
-    Spark loop's round count."""
+    the fixpoint are no-ops; fewer unrolled rounds than the data's peel
+    depth leave an unfinished core (the peel depth is data-dependent:
+    7 at sf0.01 but 21 on seed-7 synthetic sf0.001 tables), so the query
+    unrolls its full peel budget ``_KCORE_MAX_ROUNDS``."""
     sql = """
     ke0 AS MATERIALIZED (
       WITH kli AS (
@@ -10016,9 +10023,10 @@ def _kcore_sql(k: int, rounds: int) -> str:
 @query(
     "part_copurchase_kcore",
     f"""
-    WITH {_kcore_sql(14, 12)}
+    WITH {_kcore_sql(14, _KCORE_MAX_ROUNDS)}
     SELECT x AS id, CAST(count(*) AS BIGINT) AS deg
-    FROM (SELECT u AS x FROM ke12 UNION ALL SELECT v FROM ke12) GROUP BY x
+    FROM (SELECT u AS x FROM ke{_KCORE_MAX_ROUNDS} UNION ALL
+          SELECT v FROM ke{_KCORE_MAX_ROUNDS}) GROUP BY x
     """,
 )
 def q_part_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10045,7 +10053,7 @@ def q_part_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = li.withColumnsRenamed({"l_partkey": "p1"})
     b = li.withColumnsRenamed({"l_partkey": "p2"})
     edges = a.join(b, "l_orderkey").filter(F.col("p1") < F.col("p2")).select("p1", "p2")
-    return kcore(edges, k=14, a_col="p1", b_col="p2", max_rounds=60)
+    return kcore(edges, k=14, a_col="p1", b_col="p2", max_rounds=_KCORE_MAX_ROUNDS)
 
 
 _DEFERRED_QUERIES = (
