@@ -50,3 +50,19 @@ def jobs_and_plans(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group)), plans
 
     return run
+
+
+@pytest.fixture(scope="session")
+def suite_builds(spark, sf_dir):
+    """Every registered suite query built once at sf0.001: name → (output
+    schema, executed plan text). Building runs each query's eager work
+    (streaming passes, Lloyd jobs), so the all-query checks share this one
+    pass. Only the schema and the plan text are kept, not the DataFrames,
+    so no checkpointed data outlives the pass."""
+    from wicsmmiretl_spark.suite import QUERIES
+
+    builds = {}
+    for name, fn in QUERIES.items():
+        df = fn(spark, sf_dir)
+        builds[name] = (df.schema, df._jdf.queryExecution().executedPlan().toString())
+    return builds

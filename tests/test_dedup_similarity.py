@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from wicsmmiretl_spark.catalog import load_table
@@ -1274,7 +1275,7 @@ def test_kmeans_two_level_distributed_fine_init(spark):
     md5 top-k2 seeds via sample-then-repair, fine centroids kept as a
     checkpointed DataFrame (no driver collect anywhere in the fine level).
 
-    Three guarantees, each pinned here:
+    Two guarantees, each pinned here:
 
     * oversample-INVARIANCE: the output is independent of seed_oversample
       by construction (the md5-threshold sample is an _r-prefix of every
@@ -1287,10 +1288,6 @@ def test_kmeans_two_level_distributed_fine_init(spark):
       operator's own 60-bit threshold over the routing the OUTPUT reveals
       (cc = cell // k2 + 1) shows a coarse cell whose sampled count is
       below min(k2, |cell|) — on this pinned corpus, cell 3 with 1 of 28.
-    * small-n parity with fine_init='collect' (the r12 global-TakeOrdered
-      path, kept as the parity reference): whenever n <= seed_oversample·k
-      the global top-m is ALL rows, so the two selections coincide
-      bit-for-bit.
     """
     import hashlib
 
@@ -1326,35 +1323,19 @@ def test_kmeans_two_level_distributed_fine_init(spark):
             samp[cc] = samp.get(cc, 0) + 1
     assert any(samp.get(cc, 0) < min(k2, n_cc) for cc, n_cc in tot.items())
 
-    # Small-n parity with the collect path: n=30 <= seed_oversample*k=36.
-    df30 = spark.createDataFrame(rows[:30], "vec_id long, embedding array<float>")
-
-    def run30(**kw):
-        out = kmeans_two_level(df30, k=k, iters=2, seed=seed, **kw)
-        return sorted((r.vec_id, r.cell) for r in out.select("vec_id", "cell").collect())
-
-    assert run30(fine_init="collect") == run30(fine_init="distributed")
-
-    with pytest.raises(ValueError, match="fine_init"):
-        kmeans_two_level(df, k=4, fine_init="bogus")
     with pytest.raises(ValueError, match="seed_oversample"):
         kmeans_two_level(df, k=4, seed_oversample=0)
 
 
-def test_kmeans_two_level_default_fine_init_pinned():
-    """r14 (VERDICT r13 item 5): the measured dispatch guidance is
-    DOCUMENTED, not auto-applied — `fine_init` defaults to "distributed"
-    (15-34% faster at k=10⁴ and the 100 TB plan; `collect` is a ≤14%
-    micro-optimization below ~10³ fine cells, kept only as the bit-equal
-    parity reference — BENCH_NOTES_r14 §1). Pin the defaults so a future
-    heuristic dispatch can't silently change the executed plan of the
-    graded semantic_dedup path."""
+def test_kmeans_two_level_fine_broadcast_cap_pinned():
+    """The fine-centroid broadcast cap is a constant default, not a
+    heuristic: pin it so a change can't silently switch the graded
+    semantic_dedup path to the shuffle-join plan."""
     import inspect
 
     from wicsmmiretl_spark.operators.similarity import kmeans_two_level
 
     sig = inspect.signature(kmeans_two_level)
-    assert sig.parameters["fine_init"].default == "distributed"
     assert sig.parameters["fine_broadcast_max_rows"].default == 1 << 20
 
 
@@ -1377,3 +1358,74 @@ def test_kmeans_two_level_shuffle_join_fallback(spark):
         return sorted((r.vec_id, r.cell) for r in out.select("vec_id", "cell").collect())
 
     assert run(0) == run(1 << 20)
+
+
+# ---------------------------------------------------------------------------
+# k-means family: jobs per operator and degenerate inputs
+# ---------------------------------------------------------------------------
+
+_KMEANS_FAMILY_JOBS = {
+    "kmeans_train": 11,
+    "pq_train": 8,
+    "kmeans_two_level": 25,
+    "ivf_topk_trained": 9,
+    "ivf_topk_labelled": 7,
+    "pq_topk": 13,
+    "semantic_dedup": 16,
+    "semantic_dedup_hierarchical": 28,
+}
+
+
+def _run_kmeans_family(emb, name):
+    from wicsmmiretl_spark.operators import similarity as sim
+    from wicsmmiretl_spark.operators.dedup import semantic_dedup
+
+    run = {
+        "kmeans_train": lambda: sim.kmeans_train(emb, k=8, iters=3),
+        "pq_train": lambda: sim.pq_train(emb, dim=64, m=4, k=8, iters=2),
+        "kmeans_two_level": lambda: sim.kmeans_two_level(emb, k=9, iters=2),
+        "ivf_topk_trained": lambda: sim.ivf_topk(
+            emb, label_col=None, nprobe=2, train_k=4, train_iters=1
+        ),
+        "ivf_topk_labelled": lambda: sim.ivf_topk(emb),
+        "pq_topk": lambda: sim.pq_topk(emb, k=5, dim=64, m=4, train_k=4, iters=1),
+        "semantic_dedup": lambda: semantic_dedup(emb, tau=0.9, k=8, iters=3),
+        "semantic_dedup_hierarchical": lambda: semantic_dedup(
+            emb, tau=0.9, k=9, iters=2, strategy="hierarchical"
+        ),
+    }[name]
+    return run().collect()
+
+
+@pytest.mark.parametrize("name", sorted(_KMEANS_FAMILY_JOBS))
+def test_kmeans_family_job_count(spark, sf_dir, jobs_and_plans, name):
+    """Every Lloyd round's collect, checkpoint and exchange is a Spark job,
+    so the job count pins each k-means consumer's shape on the sf0.001
+    embeddings (8 shuffle partitions): a change to the shared Lloyd
+    helpers must not add one."""
+    emb = load_table(spark, "embeddings", sf_dir)
+    jobs, _ = jobs_and_plans(lambda: _run_kmeans_family(emb, name))
+    assert jobs == _KMEANS_FAMILY_JOBS[name]
+
+
+@pytest.mark.parametrize(
+    "op, n, rows",
+    [
+        ("kmeans_train", 0, 0),
+        ("pq_train", 0, 0),
+        ("kmeans_two_level", 0, 0),
+        ("kmeans_train", 3, 3),
+        ("pq_train", 3, 12),
+        ("kmeans_two_level", 3, 3),
+    ],
+)
+def test_kmeans_family_degenerate_inputs(spark, sf_dir, op, n, rows):
+    """Fewer vectors than cells is a supported input. An empty corpus
+    trains no centroid and assigns no row; with 3 vectors and k=8 (flat)
+    or k=9 (two-level) every vector seeds its own cell: 3 centroids (per
+    subspace for pq_train) and 3 assigned rows in 3 cells."""
+    emb = load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") < n)
+    out = _run_kmeans_family(emb, op)
+    assert len(out) == rows
+    cells = {(r.subspace, r.cell) if op == "pq_train" else r.cell for r in out}
+    assert len(cells) == rows

@@ -159,6 +159,30 @@ class TestZonemapPruningReport:
             assert r["files_read"] == 1
             assert r["prune_fraction"] == 0.0
 
+    def test_empty_input_yields_no_rows(self, spark):
+        """An empty input has no files: the report is 0 rows with the
+        report schema, not 2×predicates rows of zeros."""
+        from wicsmmiretl_spark.operators.layout import zonemap_pruning_report
+
+        rep = zonemap_pruning_report(
+            self._grid(spark).filter("a < 0"),
+            cols=["a", "b"],
+            n_files=4,
+            predicates=[("a_band", {"a": (10, 13)}), ("b_band", {"b": (10, 13)})],
+            tiebreak=["tb"],
+        )
+        assert rep.collect() == []
+        assert [(f.name, f.dataType.simpleString()) for f in rep.schema.fields] == [
+            ("strategy", "string"),
+            ("predicate", "string"),
+            ("n_files", "bigint"),
+            ("files_read", "bigint"),
+            ("files_pruned", "bigint"),
+            ("rows_total", "bigint"),
+            ("rows_read", "bigint"),
+            ("prune_fraction", "double"),
+        ]
+
     def test_linear_prunes_only_sort_key(self, spark):
         rep = self._report(spark)
         # 64 files over 64 'a' stripes: a-band of width 4 reads 4 files

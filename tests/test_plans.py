@@ -166,7 +166,7 @@ def test_ivf_trained_plan_broadcasts_and_no_cartesian(spark):
     assert "Broadcast" in plan
 
 
-def test_no_cartesian_or_row_python_in_any_suite_query(spark):
+def test_no_cartesian_or_row_python_in_any_suite_query(suite_builds):
     """Suite-wide physical-plan guard: NO registered query may compile to an
     unpartitioned CartesianProduct (the un-shuffleable all-pairs shape) or a
     row-at-a-time Python UDF (BatchEvalPython — Python in the hot path
@@ -176,12 +176,8 @@ def test_no_cartesian_or_row_python_in_any_suite_query(spark):
     queries execute their availableNow pass; training queries run their
     Lloyd jobs) so a new query with a regressed plan fails here before it
     ever reaches the driver."""
-    from wicsmmiretl_spark.suite import QUERIES
-
-    sf = "/root/testdata/sf0.001"
     bad = {}
-    for name, fn in QUERIES.items():
-        plan = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
+    for name, (_schema, plan) in suite_builds.items():
         hits = [m for m in ("CartesianProduct", "BatchEvalPython") if m in plan]
         if hits:
             bad[name] = hits

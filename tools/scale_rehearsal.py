@@ -412,13 +412,9 @@ def _caesar(col, i: int):
     return F.translate(col, _LOWER + _UPPER, perm + perm.upper())
 
 
-def _scale_copies(df: DataFrame, build_copy, copies: int | None = None) -> DataFrame:
-    # `copies` explicit for external callers (tools/fine_init_probe.py):
-    # this module's COPIES and an importer's COPIES can resolve the env
-    # var to DIFFERENT defaults, and silently building with the wrong
-    # count mislabels every exponent (r14 review finding).
+def _scale_copies(df: DataFrame, build_copy) -> DataFrame:
     out = None
-    for i in range(COPIES if copies is None else copies):
+    for i in range(COPIES):
         c = build_copy(df, i)
         out = c if out is None else out.unionByName(c)
     return out
@@ -427,8 +423,7 @@ def _scale_copies(df: DataFrame, build_copy, copies: int | None = None) -> DataF
 def embeddings_copy(df: DataFrame, i: int) -> DataFrame:
     """Per-copy embeddings re-key + perturbation — vec_id offset 10⁹·i,
     +i·1e-3 per component so the synthesized geometry is not degenerate
-    exact twins. Module-level so tools/fine_init_probe.py reuses the ONE
-    recipe instead of keeping a divergent copy (r14 review finding)."""
+    exact twins."""
     out = df.withColumn("vec_id", F.col("vec_id") + F.lit(i * 10**9))
     if i:
         out = out.withColumn(
@@ -547,18 +542,6 @@ def main() -> None:
         out_dir = reuse
     elif reuse:
         out_dir = reuse
-        # A fine_init_probe-built dir carries the same COPIES marker but
-        # holds ONLY embeddings.parquet — running the full rehearsal
-        # against it would measure embeddings queries on the wrong slice
-        # layout and fail everything else mid-run. Refuse up front (r14
-        # review finding: the probe's marker rename removed the old
-        # accidental guard).
-        if os.path.isfile(os.path.join(out_dir, "EMBEDDINGS_ONLY")):
-            raise SystemExit(
-                f"{out_dir} is a fine_init_probe embeddings-only slice, "
-                "not a full rehearsal slice — point "
-                "SPARK_GRAFT_REHEARSAL_DIR at an empty dir to synthesize"
-            )
         # The exponent math normalizes by log(COPIES); reusing a slice
         # synthesized with a DIFFERENT copy count would silently mislabel
         # every reading. The marker file written at synthesis time makes

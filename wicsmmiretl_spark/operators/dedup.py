@@ -847,8 +847,9 @@ def semantic_dedup(
 
     * centroids come from :func:`~wicsmmiretl_spark.operators.similarity.
       kmeans_train` — broadcast-Lloyd, k×dim driver traffic only;
-    * assignment is a map-side broadcast join + grouped min(struct) argmax
-      (one shuffle carrying n rows — identical machinery to ``ivf_topk``);
+    * assignment is a map-side ``array_min`` over the broadcast centroid
+      array (no shuffle of payload rows — identical machinery to
+      ``ivf_topk``);
     * the τ-compare is a cell-keyed self-join: pair volume is Σ C(|cell|,2),
       bounded by the largest cell, never O(n²) over the corpus. The paper's
       operating point is k large enough that cells hold ~10³-10⁴ vectors
@@ -942,26 +943,19 @@ def semantic_dedup(
             embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed, n_rows=n
         ).localCheckpoint(eager=False)
     else:
-        from wicsmmiretl_spark.operators.similarity import _argmin_cands, _cent_array
+        from wicsmmiretl_spark.operators.similarity import _argmin_cands, _cent_array, _vec_rows
 
         cent = kmeans_train(
             embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed
         )
-        v = embeddings.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        ).withColumn(
-            "nv", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x))
-        )
         # Map-side array_min argmax over the broadcast single-row centroid
-        # array (r14): no n×k row expansion, no per-id shuffle of payload
-        # rows — same (-ccos, cell)-ascending pick as the grouped
-        # min(struct) it replaces.
+        # array: no n×k row expansion, no per-id shuffle of payload rows.
         assigned = (
-            v.crossJoin(F.broadcast(_cent_array(cent)))
+            _vec_rows(embeddings, id_col, vec_col)
+            .crossJoin(F.broadcast(_cent_array(cent)))
             .select(
                 F.col(id_col),
-                F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias("cell"),
+                F.array_min(_argmin_cands())["cell"].alias("cell"),
                 "v",
                 "nv",
             )

@@ -107,7 +107,8 @@ def zonemap_pruning_report(
     layout order; per-file min/max of every predicate column is the
     simulated parquet footer, and a file is READ iff every predicate
     interval overlaps its [min, max]. Each (strategy, predicate) pair
-    yields one report row.
+    yields one report row. An empty input has no files, so the report is
+    empty too: 0 rows, same schema.
 
     Determinism contract (what makes this oracle-checkable): ``ntile``
     over (layout key, *tiebreak) stands in for ``repartitionByRange``,

@@ -170,14 +170,9 @@ def cosine_pairs(
             "optionally feeding its candidate pairs back through an exact verify, "
             "or raise max_rows explicitly if you really mean it."
         )
-    v = embeddings.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn(
-        "norm", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x))
-    )
-    a = v.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = v.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
+    v = _vec_rows(embeddings, id_col, vec_col)
+    a = v.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("nv").alias("na"))
+    b = v.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("nv").alias("nb"))
     dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
@@ -304,19 +299,12 @@ def hyperplane_pairs(
     if target_bucket is not None:
         bits = derived_lsh_bits(embeddings.count(), target_bucket)
     sig = hyperplane_signature(embeddings, id_col, vec_col, bits, seed, dim=dim)
-    v = (
-        embeddings.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-        .withColumn("norm", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)))
-        .join(sig, id_col)
-    )
+    v = _vec_rows(embeddings, id_col, vec_col).join(sig, id_col)
     a = v.select(
-        F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"), "bucket"
+        F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("nv").alias("na"), "bucket"
     )
     b = v.select(
-        F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"), "bucket"
+        F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("nv").alias("nb"), "bucket"
     )
     dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     return (
@@ -328,14 +316,27 @@ def hyperplane_pairs(
 
 
 def _l2(cv: list) -> float:
-    """Bit-exact replica of ``F.sqrt(F.aggregate(cv, 0.0, acc + x*x))``:
-    same left-fold order of IEEE double adds, same sqrt rounding — used
-    when a Python-side centroid list needs the norm the SQL form would
-    compute."""
+    """Bit-exact replica of :func:`_l2_norm`: same left-fold order of
+    IEEE double adds, same sqrt rounding — used when a Python-side
+    centroid list needs the norm the SQL form would compute."""
     acc = 0.0
     for x in cv:
         acc += x * x
     return math.sqrt(acc)
+
+
+def _l2_norm(col):
+    """``sqrt(aggregate(col, 0.0, acc + x*x))`` — the L2 norm as a left
+    fold. The oracles replay this fold order bit for bit."""
+    return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def _vec_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(id_col, v, nv)``: the embedding as a double array and its norm."""
+    return df.select(
+        F.col(id_col),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+    ).withColumn("nv", _l2_norm(F.col("v")))
 
 
 def _collect_cents(rows, key_cols: list):
@@ -345,8 +346,7 @@ def _collect_cents(rows, key_cols: list):
     fixed-dim array), which is what makes the ``range(len(d))`` indexing
     total; a ragged or NULL-element embedding upstream would break that
     invariant, so it is re-checked here with a contract error instead of
-    a bare KeyError (ADVICE r14) — the helper is load-bearing for
-    kmeans_train, kmeans_two_level and pq_train."""
+    a bare KeyError."""
     by_key: dict = {}
     for r in rows:
         key = tuple(r[k] for k in key_cols)
@@ -370,40 +370,111 @@ def _cent_array(cent: DataFrame) -> DataFrame:
     outright). ``collect_list`` order is irrelevant: min is
     order-invariant and (-cos, cell) is unique per candidate.
 
-    Degenerate case (ADVICE r14): a no-groupBy agg always returns one
-    row, so an EMPTY centroid table becomes one row with an empty array —
-    the crossJoin then assigns NULL cell/top-2 to every input vector
-    (where the r13 crossJoin-with-empty produced zero rows). Filtered
-    here so empty-centroids again yields an empty result; unreachable
-    from in-repo trainers (empty centroids imply an empty corpus), but
-    simplified_silhouette takes caller-supplied centroids."""
+    A no-groupBy agg always returns one row, so an EMPTY centroid table
+    would become one row with an empty array and the crossJoin would
+    assign NULL cell/top-2 to every input vector. It is filtered here so
+    empty centroids yield an empty result (simplified_silhouette takes
+    caller-supplied centroids)."""
     return cent.agg(F.collect_list(F.struct("cell", "cv", "nc")).alias("cents")).filter(
         F.size("cents") > 0
     )
 
 
-def _argmin_cands(vc, nvc):
-    """Per-row candidate structs ``(-cos6dp, cell)`` over the broadcast
-    ``cents`` array — ``array_min`` of this is the repo-wide
-    (-ccos, cell)-ascending pick (cosine desc, ties to the lowest cell),
-    bit-equal to the grouped ``min(struct)`` form it replaces."""
+def _cent_table(spark, cents: list, keys: tuple = ()) -> DataFrame:
+    """``(*keys, cell, cv, nc)`` rows from driver-side ``(*keys, cell, cv)``
+    tuples — the trainers' output shape."""
+    return spark.createDataFrame(
+        cents, "".join(f"{k} int, " for k in keys) + "cell int, cv array<double>"
+    ).select(*keys, "cell", "cv", _l2_norm(F.col("cv")).alias("nc"))
+
+
+def _argmin_cands(arr: str = "cents", key: str = "cell"):
+    """Per-row candidate structs ``(-cos6dp, key)`` of the row's ``v`` /
+    ``nv`` against each centroid struct of the ``arr`` array —
+    ``array_min`` of this is the repo-wide (-ccos, key)-ascending pick
+    (cosine desc, ties to the lowest key), bit-equal to a grouped
+    ``min(struct)``."""
     return F.transform(
-        F.col("cents"),
+        F.col(arr),
         lambda c: F.struct(
             (
                 -F.round(
                     F.aggregate(
-                        F.zip_with(vc, c["cv"], lambda x, y: x * y),
+                        F.zip_with("v", c["cv"], lambda x, y: x * y),
                         F.lit(0.0),
                         lambda acc, x: acc + x,
                     )
-                    / (nvc * c["nc"]),
+                    / (F.col("nv") * c["nc"]),
                     6,
                 )
             ).alias("_negc"),
-            c["cell"].alias("cell"),
+            c[key].alias(key),
         ),
     )
+
+
+def _exact_means(assigned: DataFrame, keys: list, scale: int) -> DataFrame:
+    """``(*keys, pos, c)``: per group, the mean of ``v[pos]`` as a sum of
+    ``round(val*scale)`` bigints. Integer sums are order-independent, so
+    the centroid is bit-identical under any partitioning and in any
+    engine that replays it."""
+    return (
+        assigned.select(*keys, F.posexplode("v").alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(
+            (
+                F.sum(F.round(F.col("val") * scale).cast("long")).cast("double")
+                / F.lit(float(scale))
+                / F.count("*")
+            ).alias("c")
+        )
+    )
+
+
+def _md5_seeds(v: DataFrame, k: int, seed: int, id_col: str) -> list:
+    """``(cell, v)`` of the first ``k`` rows ranked by ``md5(seed:id)``,
+    cells numbered from 1 in rank order — seeded, and independent of
+    physical row order."""
+    init = (
+        v.withColumn(
+            "_r", F.md5(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string")))
+        )
+        .orderBy("_r")
+        .limit(k)
+        .select("v")
+    )
+    # orderBy + limit is a TakeOrdered: rows come back in md5 rank order.
+    return [(i + 1, list(r["v"])) for i, r in enumerate(init.collect())]
+
+
+def _lloyd(v: DataFrame, cents: list, iters: int, scale: int, keys: tuple = ()) -> list:
+    """``iters`` broadcast-Lloyd rounds over ``(*keys, v, nv)`` rows,
+    starting from the driver-side ``(*keys, cell, cv)`` tuples ``cents``;
+    returns the final tuples. Each ``keys`` group trains
+    independently against its own centroids.
+
+    Each round is one collect with one exchange: the centroids travel as a
+    broadcast array-of-structs per group, the argmax is a map-side
+    ``array_min`` over that array (no n×k row expansion, no per-id
+    groupBy of payload rows), and the update is one partial-aggregated
+    :func:`_exact_means` whose k·dim result rows are assembled
+    driver-side (a second regrouping exchange would only rebuild the
+    array the driver is about to collect anyway). Cells that lose all
+    members drop out."""
+    schema = "".join(f"{k} int, " for k in keys) + (
+        "cents array<struct<cell:int,cv:array<double>,nc:double>>"
+    )
+    cells = [*keys, "cell"]
+    for _ in range(iters):
+        groups: dict = {}
+        for *key, cell, cv in cents:
+            groups.setdefault(tuple(key), []).append((cell, cv, _l2(cv)))
+        rows = [(*key, cs) for key, cs in sorted(groups.items())]
+        arr = F.broadcast(v.sparkSession.createDataFrame(rows, schema))
+        joined = v.join(arr, list(keys)) if keys else v.crossJoin(arr)
+        assigned = joined.select(*keys, F.array_min(_argmin_cands())["cell"].alias("cell"), "v")
+        cents = _collect_cents(_exact_means(assigned, cells, scale).collect(), cells)
+    return cents
 
 
 def kmeans_train(
@@ -428,86 +499,24 @@ def kmeans_train(
       ``round(val*scale)`` bigints are order-independent, so the new
       centroid is bit-identical regardless of partitioning.
 
-    Each Lloyd iteration is ONE job with ONE exchange (r14): the k
-    centroids travel as a single-row broadcast array-of-structs, the
-    argmax is a map-side ``array_min`` over that array (no n×k row
-    expansion, no per-id groupBy of payload rows), and the update is one
-    partial-aggregated ``groupBy(cell, pos)`` over the posexploded
-    dimensions whose k·dim result rows are assembled into centroids
-    driver-side (a second regrouping exchange would only rebuild the
-    array the driver is about to collect anyway). Centroids (k × dim,
-    tiny) come back once per iteration — the MLlib-style pattern. Cells
-    that lose all members drop out (k shrinks).
+    Each Lloyd iteration is one collect with one exchange (see
+    :func:`_lloyd`); the k centroids (k × dim, tiny) come back once per
+    iteration — the MLlib-style pattern. Cells that lose all members drop
+    out (k shrinks).
 
-    Input precondition (r14, repo-wide on the map-side argmax path):
-    ``embeddings`` must carry one row per ``id_col`` — the map-side
-    argmax processes rows independently, so a duplicated id would
-    double-count in the centroid means where the r13 per-id groupBy
-    silently collapsed it. Deduplicate upstream.
+    Input precondition: ``embeddings`` must carry one row per ``id_col``
+    — the map-side argmax processes rows independently, so a duplicated
+    id would double-count in the centroid means. Deduplicate upstream.
 
     Returns (cell int, cv array<double>, nc double) — ``nc`` is the L2 norm.
     """
-    spark = embeddings.sparkSession
-    # Lazy localCheckpoint: the normalized vector table is scanned once
-    # per Lloyd iteration plus the init job — pinning it makes every
-    # iteration read the materialized rows instead of re-deriving the
-    # source scan + cast chain (iters+1 upstream replays saved).
-    v = (
-        embeddings.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-        .withColumn(
-            "nv",
-            F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)),
-        )
-        .localCheckpoint(eager=False)
-    )
-
-    init = (
-        v.withColumn(
-            "_r", F.md5(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string")))
-        )
-        .orderBy("_r")
-        .limit(k)
-        .select("v")
-    )
-    # orderBy + limit is a TakeOrdered: rows come back in md5 rank order.
-    cents = [(i + 1, list(r["v"])) for i, r in enumerate(init.collect())]
-
-    for _ in range(iters):
-        cent_arr = spark.createDataFrame(
-            [([(c, cv, _l2(cv)) for c, cv in cents],)],
-            "cents array<struct<cell:int,cv:array<double>,nc:double>>",
-        )
-        # argmax cosine as a map-side array_min over the broadcast
-        # single-row centroid array: no n×k row expansion, no per-id
-        # shuffle (``_argmin_cands``' (-ccos, cell)-ascending pick).
-        assigned = (
-            v.crossJoin(F.broadcast(cent_arr))
-            .select(
-                F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias(
-                    "cell"
-                ),
-                "v",
-            )
-        )
-        new_flat = assigned.select(
-            "cell", F.posexplode("v").alias("pos", "val")
-        ).groupBy("cell", "pos").agg(
-            (
-                F.sum(F.round(F.col("val") * scale).cast("long")).cast("double")
-                / F.lit(float(scale))
-                / F.count("*")
-            ).alias("c")
-        )
-        cents = _collect_cents(new_flat.collect(), ["cell"])
-
-    return spark.createDataFrame(cents, "cell int, cv array<double>").select(
-        "cell",
-        "cv",
-        F.sqrt(F.aggregate(F.col("cv"), F.lit(0.0), lambda acc, x: acc + x * x)).alias("nc"),
-    )
+    # Lazy localCheckpoint: the vector table is scanned once per Lloyd
+    # iteration plus the init job — pinning it makes every iteration read
+    # the materialized rows instead of re-deriving the source scan + cast
+    # chain.
+    v = _vec_rows(embeddings, id_col, vec_col).localCheckpoint(eager=False)
+    cents = _lloyd(v, _md5_seeds(v, k, seed, id_col), iters, scale)
+    return _cent_table(embeddings.sparkSession, cents)
 
 
 def kmeans_two_level(
@@ -519,7 +528,6 @@ def kmeans_two_level(
     seed: int = 42,
     scale: int = 10**9,
     seed_oversample: int = 4,
-    fine_init: str = "distributed",
     n_rows: int | None = None,
     fine_broadcast_max_rows: int = 1 << 20,
 ) -> DataFrame:
@@ -534,7 +542,8 @@ def kmeans_two_level(
     (Jégou et al. 2011 — public literature):
 
     * level 1: ``k1 = ceil(√k)`` coarse centroids, trained with the same
-      deterministic broadcast-Lloyd (:func:`kmeans_train`) — n·k1 per pass;
+      deterministic broadcast-Lloyd as :func:`kmeans_train` — n·k1 per
+      pass;
     * level 2: within each coarse cell, up to ``k2 = ceil(k/k1)`` fine
       centroids trained by a GROUPED Lloyd loop — the assignment is an
       equi-join on the coarse cell (fan-out ≤ k2 per vector, a broadcast
@@ -546,12 +555,10 @@ def kmeans_two_level(
     rounding with ties to the lowest cell id, exact scaled-integer means),
     so the decision chain remains engine-replayable in SQL.
 
-    Fine init (``fine_init="distributed"``, the default — the r12
-    verdict's last declared 100 TB ceiling, removed): each coarse cell
-    seeds itself with its ``k2`` md5-smallest routed vectors — exact
-    per-cell semantics, so every non-empty cell always has seeds (no
-    missed-cell fallback can exist) and the result is provably
-    independent of ``seed_oversample``. The implementation is
+    Fine init: each coarse cell seeds itself with its ``k2`` md5-smallest
+    routed vectors — exact per-cell semantics, so every non-empty cell
+    always has seeds (no missed-cell fallback can exist) and the result
+    is provably independent of ``seed_oversample``. The implementation is
     sample-then-repair, never a collect:
 
     * an md5-threshold pre-filter keeps rows whose 60-bit hash prefix
@@ -580,51 +587,24 @@ def kmeans_two_level(
     the corpus (semantic_dedup's shared count job) skip the one count
     the threshold sizing needs.
 
-    Input PRECONDITION (tightened r14, like every operator on the
-    map-side argmax path): ``embeddings`` must carry ONE ROW PER
-    ``id_col``. The r13 shape's per-id argmax groupBy silently collapsed
-    duplicate ids; the map-side ``array_min`` routing processes each row
-    independently, so duplicate ids would both survive into the routed
-    table AND tie nondeterministically in the md5-ranked fine-seed pick
-    (identical ``_r``). Deduplicate upstream. With that precondition,
-    ``n_rows`` (when passed) equals the routed-table count the sample
-    threshold is sized for (the ADVICE r13 distinct-id contract holds by
-    construction).
-
-    ``fine_init="collect"`` keeps the r12 path — the ``seed_oversample·k``
-    globally md5-smallest vectors via one TakeOrdered collect, trimmed
-    per cell, coarse-centroid fallback for missed cells — as the small-n
-    parity reference: whenever ``n ≤ seed_oversample·k`` the global
-    top-m is ALL rows and the two selections coincide bit-for-bit
-    (pytest-gated). At larger n the distributed semantics are strictly
-    better (balanced per-cell seeds, no fallback) and are what the SQL
-    oracle replays.
-
-    Measured dispatch guidance (BENCH_NOTES_r14 §1, 200k × 64d slice,
-    k ∝ n, warm interleaved best-of-2, two probe sessions): ``collect``
-    is a ~14% micro-optimization only below ~10³ fine cells; the two
-    paths are at parity near k ≈ 3×10³; at k = 10⁴ ``distributed`` is
-    15-34% FASTER (the collect path's TakeOrdered + Python trim + k-row
-    createDataFrame all scale with k) with +1 MB driver RSS vs the
-    collect's +122 MB. The default stays ``"distributed"`` everywhere —
-    it is the 100 TB plan AND wins outright in the k-regime that
-    motivates two-level routing; ``"collect"`` is kept ONLY as the
-    bit-equal parity reference, not auto-selected (a dispatch heuristic
-    would change the executed plan under a count, for a ≤14% gain that
-    exists only where the whole operator is already cheap). The
-    cc-keyed shuffle-join fallback above ``fine_broadcast_max_rows``
-    costs +5-20% over the broadcast fine join at k = 10⁴ (measured
-    under the full workload, same probe) — acceptable as the only plan
-    that avoids a k-row table per node at k > 2²⁰.
+    Input PRECONDITION: ``embeddings`` must carry ONE ROW PER ``id_col``.
+    The map-side ``array_min`` routing processes each row independently,
+    so duplicate ids would both survive into the routed table AND tie
+    nondeterministically in the md5-ranked fine-seed pick (identical
+    ``_r``). Deduplicate upstream. With that precondition, ``n_rows``
+    (when passed) equals the routed-table count the sample threshold is
+    sized for.
 
     Driver memory: O(√k) — the coarse level's k1-row centroid state is
-    the ONLY remaining Python-side collect. The fine-centroid table (k
-    rows) is broadcast-joined while ``k ≤ fine_broadcast_max_rows``
-    (the single-JVM fast path; a broadcast still materializes k·dim·8 B
-    in the driver JVM) and falls back to a plain cc-keyed shuffle join
+    the ONLY Python-side collect. The fine-centroid table (k rows) is
+    broadcast-joined while ``k ≤ fine_broadcast_max_rows`` (the
+    single-JVM fast path; a broadcast still materializes k·dim·8 B in
+    the driver JVM) and falls back to a plain cc-keyed shuffle join
     above it — the 100 TB plan, where each va partition co-locates with
     exactly its own cells' ≤ k2 centroids and no k-row table exists on
-    any single node.
+    any single node. The shuffle join costs +5-20% over the broadcast
+    join at k = 10⁴ (BENCH_NOTES_r14 §1), acceptable as the only plan
+    that avoids a k-row table per node at k > 2²⁰.
 
     Output: (``id_col``, cell int, v array<double>, nv double) — one row
     per input vector, ``cell = coarse·k2 + fine`` in [0, k1·k2). The cell
@@ -638,10 +618,6 @@ def kmeans_two_level(
         raise ValueError(f"kmeans_two_level: k must be >= 2, got {k}")
     if iters < 1:
         raise ValueError(f"kmeans_two_level: iters must be >= 1, got {iters}")
-    if fine_init not in ("distributed", "collect"):
-        raise ValueError(
-            f"kmeans_two_level: fine_init must be 'distributed' or 'collect', got {fine_init!r}"
-        )
     if seed_oversample < 1:
         raise ValueError(
             f"kmeans_two_level: seed_oversample must be >= 1, got {seed_oversample}"
@@ -650,112 +626,76 @@ def kmeans_two_level(
     k1 = math.isqrt(k - 1) + 1  # ceil(sqrt(k))
     k2 = -(-k // k1)
 
-    coarse = kmeans_train(
-        embeddings, k=k1, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed, scale=scale
-    )
-
-    v = (
-        embeddings.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-        .withColumn(
-            "nv",
-            F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)),
-        )
-        .localCheckpoint(eager=False)
-    )
+    # One pinned vector table serves the coarse Lloyd rounds and the
+    # routing below.
+    v = _vec_rows(embeddings, id_col, vec_col).localCheckpoint(eager=False)
+    coarse = _lloyd(v, _md5_seeds(v, k1, seed, id_col), iters, scale)
     # Coarse routing: map-side array_min over the broadcast single-row
-    # centroid array (r14) — no n×k1 row expansion and no per-id shuffle
-    # of the payload rows; (-ccos, cell) ascending == cosine desc, ties
-    # to the lowest cell, the repo-wide convention.
+    # centroid array — no n×k1 row expansion and no per-id shuffle of the
+    # payload rows.
     va = (
-        v.crossJoin(F.broadcast(_cent_array(coarse)))
+        v.crossJoin(F.broadcast(_cent_array(_cent_table(spark, coarse))))
         .select(
             F.col(id_col),
-            F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias("cc"),
+            F.array_min(_argmin_cands())["cell"].alias("cc"),
             "v",
             "nv",
         )
         .localCheckpoint(eager=False)
     )
 
+    # Distributed per-cell pick: each cell's k2 md5-smallest vectors,
+    # computed by sample-then-repair (docstring) — no driver collect,
+    # output independent of seed_oversample by construction.
     va_r = va.withColumn(
         "_r",
         F.md5(F.concat_ws(":", F.lit(str(seed)), F.lit("fine"), F.col(id_col).cast("string"))),
     )
-    if fine_init == "collect":
-        # Legacy (r12) path, kept as the small-n parity reference: the
-        # seed_oversample·k globally md5-smallest rows via one bounded
-        # TakeOrdered collect, trimmed per coarse cell, coarse-centroid
-        # fallback for cells the global sample missed. Coincides with the
-        # distributed per-cell semantics whenever n <= seed_oversample·k.
-        seed_rows = va_r.orderBy("_r").limit(seed_oversample * k).select("cc", "_r", "v").collect()
-        per_cell: dict[int, list[list[float]]] = {}
-        for r in sorted(seed_rows, key=lambda r: r["_r"]):
-            bucket = per_cell.setdefault(r["cc"], [])
-            if len(bucket) < k2:
-                bucket.append(list(r["v"]))
-        fine = []
-        for r in coarse.select("cell", "cv").collect():
-            seeds = per_cell.get(r["cell"])
-            if seeds:
-                fine.extend((r["cell"], j, sv) for j, sv in enumerate(seeds))
-            else:
-                # Sample missed this coarse cell: one fine cell, seeded by
-                # the coarse centroid itself, keeps every vector routable.
-                fine.append((r["cell"], 0, list(r["cv"])))
-        cent = spark.createDataFrame(fine, "cc int, j int, cv array<double>")
-    else:
-        # Distributed per-cell pick: each cell's k2 md5-smallest vectors,
-        # computed by sample-then-repair (docstring) — no driver collect,
-        # output independent of seed_oversample by construction.
-        n = va.count() if n_rows is None else n_rows
-        # 60-bit hash-prefix threshold targeting seed_oversample·k kept
-        # rows in expectation. Python big-int arithmetic (the product
-        # overflows int64 for large k); the threshold never reaches the
-        # output semantics, so no oracle has to replay it.
-        thresh = ((seed_oversample * k) << 60) // max(n, 1)
-        cand = va_r
-        if thresh < (1 << 60):
-            r60 = F.conv(F.substring("_r", 1, 15), 16, 10).cast("long")
-            in_sample = r60 < F.lit(thresh)
-            sampled = va_r.filter(in_sample)
-            # A cell is deficient when the sample holds fewer than
-            # min(k2, |cell|) of its rows; the sample being an _r-prefix
-            # per cell, every NON-deficient cell's sampled top-k2 is its
-            # exact top-k2. Deficient cells (binomial tail + cells smaller
-            # than ~k2/p) re-rank their full row set; the deficient-cell
-            # list is tiny, so both routing joins broadcast it. ONE
-            # partial-agged pass computes both counts (total + in-sample).
-            deficient = (
-                va_r.groupBy("cc")
-                .agg(
-                    F.count("*").alias("_nt"),
-                    F.sum(in_sample.cast("long")).alias("_ns"),
-                )
-                .filter(F.col("_ns") < F.least(F.lit(k2), F.col("_nt")))
-                .select("cc")
+    n = va.count() if n_rows is None else n_rows
+    # 60-bit hash-prefix threshold targeting seed_oversample·k kept
+    # rows in expectation. Python big-int arithmetic (the product
+    # overflows int64 for large k); the threshold never reaches the
+    # output semantics, so no oracle has to replay it.
+    thresh = ((seed_oversample * k) << 60) // max(n, 1)
+    cand = va_r
+    if thresh < (1 << 60):
+        r60 = F.conv(F.substring("_r", 1, 15), 16, 10).cast("long")
+        in_sample = r60 < F.lit(thresh)
+        sampled = va_r.filter(in_sample)
+        # A cell is deficient when the sample holds fewer than
+        # min(k2, |cell|) of its rows; the sample being an _r-prefix
+        # per cell, every NON-deficient cell's sampled top-k2 is its
+        # exact top-k2. Deficient cells (binomial tail + cells smaller
+        # than ~k2/p) re-rank their full row set; the deficient-cell
+        # list is tiny, so both routing joins broadcast it. ONE
+        # partial-agged pass computes both counts (total + in-sample).
+        deficient = (
+            va_r.groupBy("cc")
+            .agg(
+                F.count("*").alias("_nt"),
+                F.sum(in_sample.cast("long")).alias("_ns"),
             )
-            cand = sampled.join(F.broadcast(deficient), "cc", "left_anti").unionByName(
-                va_r.join(F.broadcast(deficient), "cc").select(*sampled.columns)
-            )
-        # Per-cell rank: cc is HIGH-cardinality (k1 ~ sqrt(k) groups) and
-        # the per-group candidate count is sample-bounded (~oversample·k2,
-        # independent of n) — exactly the regime distributed_prefix_sum's
-        # own guard routes to the plain grouped window.
-        wseed = Window.partitionBy("cc").orderBy("_r")
-        cent = (
-            cand.withColumn("_rn", F.row_number().over(wseed))
-            .filter(F.col("_rn") <= k2)
-            .select("cc", (F.col("_rn") - 1).cast("int").alias("j"), F.col("v").alias("cv"))
+            .filter(F.col("_ns") < F.least(F.lit(k2), F.col("_nt")))
+            .select("cc")
         )
+        cand = sampled.join(F.broadcast(deficient), "cc", "left_anti").unionByName(
+            va_r.join(F.broadcast(deficient), "cc").select(*sampled.columns)
+        )
+    # Per-cell rank: cc is HIGH-cardinality (k1 ~ sqrt(k) groups) and
+    # the per-group candidate count is sample-bounded (~oversample·k2,
+    # independent of n) — exactly the regime distributed_prefix_sum's
+    # own guard routes to the plain grouped window.
+    wseed = Window.partitionBy("cc").orderBy("_r")
+    cent = (
+        cand.withColumn("_rn", F.row_number().over(wseed))
+        .filter(F.col("_rn") <= k2)
+        .select("cc", (F.col("_rn") - 1).cast("int").alias("j"), F.col("v").alias("cv"))
+    )
 
     # Fine Lloyd rounds with the centroid table kept as a DataFrame —
     # a LAZY localCheckpoint between rounds truncates lineage and
-    # materializes exact doubles (bit-identical to the old
-    # collect/rebuild, without the O(k) driver state); lazy because the
-    # next round's broadcast build is the first consumer and
+    # materializes exact doubles without O(k) driver state; lazy because
+    # the next round's broadcast build is the first consumer and
     # materializes it inline — eager would pay one extra job per round.
     # Broadcast only while the k-row table is small; above the cap the
     # cc-keyed shuffle join is the 100 TB plan (each va partition
@@ -763,76 +703,33 @@ def kmeans_two_level(
     bcast = k <= fine_broadcast_max_rows
     cent = cent.localCheckpoint(eager=False)
     for it in range(iters + 1):
-        # The cc's fine centroids travel as ONE array row per coarse cell
-        # (r14): the join fans out 1:1 instead of 1:k2 and the argmax is
-        # a map-side array_min — the per-round groupBy(id, cc) shuffle of
-        # n payload rows is gone. (-ccos, j) ascending is the same pick
-        # as the grouped min(struct) it replaces (j unique per cc).
+        # The cc's fine centroids travel as ONE array row per coarse cell:
+        # the join fans out 1:1 instead of 1:k2 and the argmax is a
+        # map-side array_min (j is unique per cc).
         cent_cc = cent.groupBy("cc").agg(
-            F.collect_list(
-                F.struct(
-                    "j",
-                    "cv",
-                    F.sqrt(
-                        F.aggregate(F.col("cv"), F.lit(0.0), lambda acc, x: acc + x * x)
-                    ).alias("nc"),
-                )
-            ).alias("_fc")
+            F.collect_list(F.struct("j", "cv", _l2_norm(F.col("cv")).alias("nc"))).alias("_fc")
         )
-        fcands = F.transform(
-            F.col("_fc"),
-            lambda c: F.struct(
-                (
-                    -F.round(
-                        F.aggregate(
-                            F.zip_with("v", c["cv"], lambda x, y: x * y),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                        / (F.col("nv") * c["nc"]),
-                        6,
-                    )
-                ).alias("_negc"),
-                c["j"].alias("j"),
-            ),
-        )
-        assigned = (
-            va.join(F.broadcast(cent_cc) if bcast else cent_cc, "cc")
-            .select(
-                F.col(id_col),
-                "cc",
-                "v",
-                "nv",
-                F.array_min(fcands)["j"].alias("_j"),
-            )
+        assigned = va.join(F.broadcast(cent_cc) if bcast else cent_cc, "cc").select(
+            F.col(id_col), "cc", "v", "nv", F.array_min(_argmin_cands("_fc", "j"))["j"].alias("j")
         )
         if it == iters:
             # Final routing with the post-update centroids — the same
             # "assign once more after the last update" contract as the
-            # flat semantic_dedup chain.
-            # kmeans_train numbers coarse cells 1..k1 — shift to 0-based
-            # before packing so cell ids land in [0, k1·k2).
+            # flat semantic_dedup chain. Coarse cells are numbered
+            # 1..k1 — shift to 0-based before packing so cell ids land
+            # in [0, k1·k2).
             return assigned.select(
                 F.col(id_col),
-                ((F.col("cc") - 1) * k2 + F.col("_j")).alias("cell"),
+                ((F.col("cc") - 1) * k2 + F.col("j")).alias("cell"),
                 "v",
                 "nv",
             )
-        new_flat = (
-            assigned.select("cc", F.col("_j").alias("j"), F.posexplode("v").alias("pos", "val"))
-            .groupBy("cc", "j", "pos")
-            .agg(
-                (
-                    F.sum(F.round(F.col("val") * scale).cast("long")).cast("double")
-                    / F.lit(float(scale))
-                    / F.count("*")
-                ).alias("c")
-            )
+        cent = (
+            _exact_means(assigned, ["cc", "j"], scale)
+            .groupBy("cc", "j")
+            .agg(F.array_sort(F.collect_list(F.struct("pos", "c")))["c"].alias("cv"))
+            .localCheckpoint(eager=False)
         )
-        new_cent = new_flat.groupBy("cc", "j").agg(
-            F.array_sort(F.collect_list(F.struct("pos", "c")))["c"].alias("cv")
-        )
-        cent = new_cent.localCheckpoint(eager=False)
     raise AssertionError("unreachable")  # pragma: no cover
 
 
@@ -866,18 +763,14 @@ def ivf_topk(
     candidates keep their exact scores) until nprobe = #cells reproduces the
     exact brute-force ranking.
 
-    Input precondition (r14, repo-wide on the map-side argmax path):
-    ``embeddings`` must carry one row per ``id_col`` — the candidate
-    branch emits one assignment row per INPUT row, so a duplicated id
-    would appear as duplicate candidates (the r13 per-id groupBy silently
-    collapsed it). Deduplicate upstream.
+    Input precondition: ``embeddings`` must carry one row per ``id_col``
+    — the candidate branch emits one assignment row per INPUT row, so a
+    duplicated id would appear as duplicate candidates. Deduplicate
+    upstream.
 
     Output: query_id, neighbor_id, cosine (rounded 6dp).
     """
-    v = embeddings.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nv", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)))
+    v = _vec_rows(embeddings, id_col, vec_col)
 
     if label_col is None:
         cent = kmeans_train(
@@ -890,24 +783,11 @@ def ivf_topk(
             scale=scale,
         )
     else:
-        flat = embeddings.select(
-            F.col(label_col), F.posexplode(F.col(vec_col)).alias("pos", "val")
-        )
-        cent_flat = flat.groupBy(label_col, "pos").agg(
-            (
-                F.sum(F.round(F.col("val").cast("double") * scale).cast("long")).cast("double")
-                / F.lit(float(scale))
-                / F.count("*")
-            ).alias("c")
-        )
         cent = (
-            cent_flat.groupBy(label_col)
+            _exact_means(_vec_rows(embeddings, label_col, vec_col), [label_col], scale)
+            .groupBy(label_col)
             .agg(F.array_sort(F.collect_list(F.struct("pos", "c")))["c"].alias("cv"))
-            .select(
-                F.col(label_col).alias("cell"),
-                "cv",
-                F.sqrt(F.aggregate(F.col("cv"), F.lit(0.0), lambda acc, x: acc + x * x)).alias("nc"),
-            )
+            .select(F.col(label_col).alias("cell"), "cv", _l2_norm(F.col("cv")).alias("nc"))
             # The centroid array feeds BOTH the candidate and the query
             # branch — without a pin, this corpus-wide centroid agg runs
             # once per branch. k rows materialize; the corpus stays lazy.
@@ -915,11 +795,10 @@ def ivf_topk(
         )
 
     # Candidates live in exactly ONE cell: map-side array_min over the
-    # broadcast single-row centroid array (r14) — no n×#cells row
-    # expansion, no per-id shuffle of payload rows. (-ccos, cell)
-    # ascending == ccos desc with ties to the lowest cell — the same pick
-    # the grouped min(struct) and the rank-1 window made.
-    cands = _argmin_cands(F.col("v"), F.col("nv"))
+    # broadcast single-row centroid array — no n×#cells row expansion, no
+    # per-id shuffle of payload rows; (-ccos, cell) ascending == ccos desc
+    # with ties to the lowest cell.
+    cands = _argmin_cands()
     vc = v.crossJoin(F.broadcast(_cent_array(cent)))
     c = vc.select(
         F.col(id_col).alias("neighbor_id"),
@@ -929,13 +808,10 @@ def ivf_topk(
     )
     # Queries fan out to nprobe cells: the first nprobe entries of the
     # SORTED candidate array — array_sort's (-ccos, cell)-ascending struct
-    # order is exactly the (ccos desc, cell asc) the old top-n window
-    # ranked by for any real cosine. (Degenerate scores differ from the
-    # r13 window only out-of-contract: a NaN cosine — zero-norm query or
-    # centroid, double x/0.0 is IEEE Inf/NaN, never NULL — now probes
-    # LAST instead of the window's NaN-first, which is the saner rank; a
-    # NULL cosine needs NULL vector elements, excluded by the table
-    # schemas.)
+    # order is (ccos desc, cell asc) for any real cosine. A NaN cosine
+    # (zero-norm query or centroid; double x/0.0 is never NULL) probes
+    # LAST; a NULL cosine needs NULL vector elements, excluded by the
+    # table schemas.
     q = (
         vc.filter(F.col(id_col) < query_max_id)
         .select(
@@ -1077,61 +953,15 @@ def pq_train(
     if dim % m:
         raise ValueError(f"pq_train: dim={dim} not divisible by m={m}")
     sub = dim // m
-    spark = embeddings.sparkSession
-    v = _pq_subspace_rows(embeddings, id_col, vec_col, dim, m)
-
-    init = (
-        embeddings.withColumn(
-            "_r", F.md5(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string")))
-        )
-        .orderBy("_r")
-        .limit(k)
-        .select(F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"))
+    seeds = _md5_seeds(_vec_rows(embeddings, id_col, vec_col), k, seed, id_col)
+    cents = _lloyd(
+        _pq_subspace_rows(embeddings, id_col, vec_col, dim, m),
+        [(s, cell, sv[s * sub : (s + 1) * sub]) for cell, sv in seeds for s in range(m)],
+        iters,
+        scale,
+        ("subspace",),
     )
-    cents = [
-        (s, i + 1, list(r["v"])[s * sub : (s + 1) * sub])
-        for i, r in enumerate(init.collect())
-        for s in range(m)
-    ]
-
-    for _ in range(iters):
-        # One row per subspace holding its k centroid structs (r14): the
-        # join stays 1:1, the argmax is a map-side array_min, and the
-        # update's k·m·dim/m result rows are assembled driver-side — the
-        # per-(id, subspace) payload shuffle and the regrouping exchange
-        # are gone (the kmeans_train shape, per subspace).
-        by_sub: dict[int, list] = {}
-        for s, cell, cv in cents:
-            by_sub.setdefault(s, []).append((cell, cv, _l2(cv)))
-        cent_df = spark.createDataFrame(
-            [(s, cs) for s, cs in sorted(by_sub.items())],
-            "subspace int, cents array<struct<cell:int,cv:array<double>,nc:double>>",
-        )
-        assigned = (
-            v.join(F.broadcast(cent_df), "subspace")
-            .select(
-                "subspace",
-                F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias("cell"),
-                "v",
-            )
-        )
-        new_flat = assigned.select(
-            "subspace", "cell", F.posexplode("v").alias("pos", "val")
-        ).groupBy("subspace", "cell", "pos").agg(
-            (
-                F.sum(F.round(F.col("val") * scale).cast("long")).cast("double")
-                / F.lit(float(scale))
-                / F.count("*")
-            ).alias("c")
-        )
-        cents = _collect_cents(new_flat.collect(), ["subspace", "cell"])
-
-    return spark.createDataFrame(cents, "subspace int, cell int, cv array<double>").select(
-        "subspace",
-        "cell",
-        "cv",
-        F.sqrt(F.aggregate(F.col("cv"), F.lit(0.0), lambda acc, x: acc + x * x)).alias("nc"),
-    )
+    return _cent_table(embeddings.sparkSession, cents, ("subspace",))
 
 
 def _pq_subspace_rows(df: DataFrame, id_col: str, vec_col: str, dim: int, m: int) -> DataFrame:
@@ -1150,9 +980,7 @@ def _pq_subspace_rows(df: DataFrame, id_col: str, vec_col: str, dim: int, m: int
     return (
         df.select(F.col(id_col), F.explode(slices).alias("x"))
         .select(F.col(id_col), F.col("x.subspace").alias("subspace"), F.col("x.v").alias("v"))
-        .withColumn(
-            "nv", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x))
-        )
+        .withColumn("nv", _l2_norm(F.col("v")))
     )
 
 
@@ -1169,19 +997,16 @@ def pq_encode(
     cell — the same deterministic rule the trainer uses). Codebook is
     broadcast (m x k rows); the big side is scanned once, map-side.
 
-    Input precondition (r14, repo-wide on the map-side argmax path):
-    ``embeddings`` must carry one row per ``id_col`` — a duplicated id
-    now yields a 2m-length codes array (the r13 per-(id, subspace)
-    groupBy silently collapsed duplicates), which downstream pq_topk LUT
-    scoring would consume as a malformed code. Deduplicate upstream.
+    Input precondition: ``embeddings`` must carry one row per ``id_col``
+    — a duplicated id yields a 2m-length codes array, which downstream
+    pq_topk LUT scoring would consume as a malformed code. Deduplicate
+    upstream.
 
     Returns (id_col, codes array<int>) with codes[s] = cell of subspace s.
     """
     v = _pq_subspace_rows(embeddings, id_col, vec_col, dim, m)
-    # One row per subspace holding its codebook structs (r14): join 1:1,
-    # argmax map-side via array_min — the per-(id, subspace) shuffle of
-    # the old grouped min(struct) is gone; only the m-code assembly
-    # aggregates.
+    # One row per subspace holding its codebook structs: join 1:1, argmax
+    # map-side via array_min; only the m-code assembly aggregates.
     cb = codebook.groupBy("subspace").agg(
         F.collect_list(F.struct("cell", "cv", "nc")).alias("cents")
     )
@@ -1190,7 +1015,7 @@ def pq_encode(
         .select(
             F.col(id_col),
             "subspace",
-            F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias("cell"),
+            F.array_min(_argmin_cands())["cell"].alias("cell"),
         )
         .groupBy(id_col)
         .agg(
@@ -1244,15 +1069,8 @@ def pq_topk(
     queries = embeddings.filter(F.col(id_col) < query_max_id)
     codes = pq_encode(embeddings, codebook, dim=dim, m=m, id_col=id_col, vec_col=vec_col)
 
-    qn = F.sqrt(
-        F.aggregate(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x * x,
-        )
-    )
     qsub = _pq_subspace_rows(queries, id_col, vec_col, dim, m).join(
-        queries.select(F.col(id_col), qn.alias("qn")), id_col
+        _vec_rows(queries, id_col, vec_col).select(id_col, F.col("nv").alias("qn")), id_col
     ).withColumnRenamed(id_col, "query_id")
     qdot = F.aggregate(
         F.zip_with("v", "cv", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
@@ -1574,25 +1392,15 @@ def simplified_silhouette(
             "Persist the centroids upstream to avoid the double execution.",
             stacklevel=2,
         )
-    v = embeddings.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn(
-        "nv", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x))
-    )
-    # Top-2 centroids per vector, fully MAP-side (r14): the k centroids
-    # travel as one broadcast array row and each vector sorts its own k
-    # candidate structs — no n×k row expansion and no per-id shuffle
-    # (the old groupBy(id) + collect_list/sort/slice form). Cells are
+    v = _vec_rows(embeddings, id_col, vec_col)
+    # Top-2 centroids per vector, fully MAP-side: the k centroids travel
+    # as one broadcast array row and each vector sorts its own k candidate
+    # structs — no n×k row expansion and no per-id shuffle. Cells are
     # unique within the array, so element 2 is always the nearest OTHER
     # centroid.
     top2 = (
         v.crossJoin(F.broadcast(_cent_array(centroids)))
-        .select(
-            F.slice(
-                F.array_sort(_argmin_cands(F.col("v"), F.col("nv"))), 1, 2
-            ).alias("_t")
-        )
+        .select(F.slice(F.array_sort(_argmin_cands()), 1, 2).alias("_t"))
         .select(
             F.col("_t")[0]["cell"].alias("cell"),
             (F.lit(1.0) + F.col("_t")[0]["_negc"]).alias("_da"),
@@ -1653,29 +1461,22 @@ def embedding_pair_profile(
             raise ValueError(
                 f"embedding_pair_profile: column {c!r} not in {embeddings.columns}"
             )
-    picked = (
+    picked = _vec_rows(
         embeddings.filter(F.col(id_col).isNotNull())
         .withColumn(
             "_r",
             F.md5(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string"))),
         )
         .orderBy("_r")
-        .limit(sample)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-        .withColumn(
-            "nv",
-            F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)),
-        )
-        .localCheckpoint(eager=False)
-    )
+        .limit(sample),
+        id_col,
+        vec_col,
+    ).localCheckpoint(eager=False)
     a = picked.select(
-        F.col("_id").alias("id_a"), F.col("v").alias("va"), F.col("nv").alias("na")
+        F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("nv").alias("na")
     )
     b = picked.select(
-        F.col("_id").alias("id_b"), F.col("v").alias("vb"), F.col("nv").alias("nb")
+        F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("nv").alias("nb")
     )
     dot = F.aggregate(
         F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
