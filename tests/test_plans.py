@@ -198,8 +198,9 @@ def test_pq_plan_broadcasts_lut_and_no_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
 
-# NB: no executedPlan pin for pagerank/connected_components — their loops
-# localCheckpoint per iteration, so the returned DataFrame's plan is just a
-# scan of the materialized RDD (the suite-wide sweep sees the same thing).
-# Their guarantees are pinned semantically instead: local-reference equality,
-# partitioning invariance, and the fixpoint certification inside the operator.
+# NB: no executedPlan pin for the graph loops — they localCheckpoint per
+# round, so the returned DataFrame's plan is just a scan of the materialized
+# RDD. Their shape is pinned as contract counts instead: jobs per loop
+# operator (tests/test_graph.py::test_loop_operator_job_count) and jobs per
+# added PageRank/PPR round (tests/test_graph.py::test_power_iteration_round_jobs);
+# their results by local replays and the fixpoint certification.

@@ -51,7 +51,9 @@ fixed-round with no probe and keeps its own loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from wicsmmiretl_spark.operators.loopconf import (
@@ -153,8 +155,9 @@ def connected_components(
     )
     # Every node that appears at all, including isolated self-pair nodes:
     # they must come back out labeled as their own singleton component.
-    # Lazy: its only consumer is the final labeling join, so it
-    # materializes inside that one job instead of a build-time barrier.
+    # Lazy: its only consumer is the final labeling join, so its final
+    # stage runs inside that one job (its distinct's exchange still runs
+    # at build time under AQE).
     nodes = (
         pairs.select(F.col(id_a).alias("id"))
         .union(pairs.select(F.col(id_b).alias("id")))
@@ -226,110 +229,143 @@ def pagerank(
     addition order across in-neighbors/partitions can't change the result,
     so a SQL oracle replays every iteration bit-for-bit.
 
-    Scale shape per iteration: one partial-aggregated groupBy on dst (the
-    contribution sum), one broadcast of a single-row (N, dangling) struct,
-    one left join back to the node list; lineage truncated per iteration.
-    Nothing is collected to the driver. Degree skew (a celebrity node's
-    in-box) is a partial-agg sum, not a window — map-side combine bounds
-    the reducer.
-
-    The loop runs under ``@loop_scoped`` at the bytes-derived loop width
-    (``loop_entry``), so the per-round contribution ``groupBy("dst")``
-    plans at the same width as the explicit hash partitionings.
+    Scale shape per iteration (``_power_iteration``): one message join and
+    one partial-aggregated groupBy on the node id over the node rows and
+    the messages — no per-round N or dangling aggregate, no broadcast of
+    them, no node-list re-join. N and the dangling mass cross the driver
+    as scalars observed on checkpoints the loop writes anyway: N once on
+    the node frame, the dangling mass on each round's eager checkpoint
+    (the last round's is lazy), so ``iters`` rounds cost ``iters - 1``
+    driver round-trips. Degree skew (a celebrity node's in-box) is a
+    partial-agg sum, not a window — map-side combine bounds the reducer.
 
     Output: (id, rank double) for every node appearing in ``edges``.
     """
-    e, loop_parts, _ = loop_entry(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct(),
-        "src",
+    e, nodes, m = _rank_nodes(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     )
-    # The node list carries each node's STATIC out-degree, attached once
-    # here and carried through every iteration's state (r14): the loop no
-    # longer re-joins a degree table per round — one checkpoint per
-    # iteration instead of two, one fewer join per round plan.
-    deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
+    n = float(max(m["n"], 1))  # an empty graph has no row to read 1/N
+    d = damping
+    return _power_iteration(
+        e,
+        nodes,
+        1.0 / n,
+        m["n_dang"],
+        lambda inb, dang, _: F.lit(1.0 - d) / F.lit(n) + F.lit(d) * (inb + dang / F.lit(n)),
+        iters,
+        scale,
+    )
+
+
+def _rank_nodes(
+    edges: DataFrame, seeds: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame, dict]:
+    """Loop entry of ``pagerank``/``personalized_pagerank``: the distinct
+    (src, dst) ``edges`` as the checkpoint ``e`` (``loop_entry``), and the
+    node frame — (id, outdeg) for every node of ``e`` (outdeg NULL for a
+    dangling node, the NULL id included), plus a ``seed`` flag when
+    ``seeds`` (column ``id``) is given — built by ONE aggregate over the
+    endpoint and seed rows, eagerly checkpointed with its counts observed:
+    ``n`` nodes, ``ns`` distinct seed ids (|S|: seeds outside the graph
+    count too) and ``n_dang``, the dangling nodes holding initial mass
+    (every node, or with seeds the seed nodes). Returns ``(e, nodes,
+    counts)``."""
+    e, _, _ = loop_entry(edges.distinct(), None)
+    rows = e.select(F.col("src").alias("id"), F.lit(1).alias("o")).unionByName(
+        e.select(F.col("dst").alias("id"), F.lit(0).alias("o"))
+    )
+    outdeg = F.when(F.col("id").isNotNull() & (F.col("o") > 0), F.col("o"))
+    in_graph = F.col("o").isNotNull()  # seed-only groups have no endpoint row
+    carried = [outdeg.alias("outdeg")]
+    aggs = [F.sum("o").alias("o")]
+    metrics = [F.count_if(in_graph).alias("n")]
+    held = F.lit(True)
+    if seeds is not None:
+        rows = rows.unionByName(seeds.select("id", F.lit(True).alias("s")), allowMissingColumns=True)
+        aggs.append(F.max("s").alias("s"))
+        held = F.col("id").isNotNull() & F.col("s").isNotNull()
+        carried.append(held.alias("seed"))
+        metrics.append(F.count("s").alias("ns"))
+    metrics.append(F.count_if(in_graph & held & outdeg.isNull()).alias("n_dang"))
+    obs = Observation()
     nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(deg, F.col("id") == deg["src"], "left")
-        .select("id", "outdeg")
-        .repartition(loop_parts, "id")
-        .localCheckpoint(eager=False)
+        rows.groupBy("id")
+        .agg(*aggs)
+        .observe(obs, *metrics)
+        .filter(in_graph)
+        .select("id", *carried)
+        .localCheckpoint(eager=True)
     )
-    n_total = nodes.agg(F.count("*").alias("n"))
-
-    pr = nodes.join(F.broadcast(n_total)).select(
-        "id", "outdeg", (F.lit(1.0) / F.col("n").cast("double")).alias("rank")
-    )
-    return _pagerank_loop(pr, e, nodes, n_total, damping, iters, scale, loop_parts)
+    return e, nodes, obs.get
 
 
-def _rank_flow(e: DataFrame, pr: DataFrame, scale: int) -> tuple[DataFrame, DataFrame]:
-    """One power-method step's mass flow for ``pagerank`` and
-    ``personalized_pagerank``: per-node inbound mass ``inb`` (keyed by
-    ``dst``) and the single-row dangling mass ``dang_i`` (scaled bigint),
-    both scaled-integer sums so the result is independent of addition
-    order. ``pr`` carries (id, outdeg, rank); dangling nodes have a NULL
-    outdeg."""
-    contrib = (
-        e.join(
-            pr.filter(F.col("outdeg").isNotNull()).select(
-                F.col("id").alias("src"), "rank", "outdeg"
-            ),
-            "src",
+def _power_iteration(
+    e: DataFrame,
+    nodes: DataFrame,
+    r0: float,
+    n_dang: int,
+    step: Callable[[Column, Column, Column], Column],
+    iters: int,
+    scale: int,
+) -> DataFrame:
+    """``iters`` power-method rounds of ``pagerank``/``personalized_pagerank``
+    over the distinct edges ``e`` and the ``_rank_nodes`` frame, from the
+    teleport vector ``tele`` (``r0`` on every node, or with a ``seed``
+    column on the seeds; ``n_dang`` dangling nodes hold it).
+    ``step(inb, dang, tele)`` is a node's next rank from its inbound mass
+    and the global dangling mass.
+
+    Each round is ONE aggregate shuffle: the node rows (id, outdeg[, seed])
+    union the edge messages (dst, round(rank/outdeg·scale)), grouped by id
+    — ``max`` recovers the node columns, ``sum`` the scaled-integer inbound
+    mass (NULL for a node without in-edges). The messages come from one
+    join of the edges with the sources' shares (AQE picks broadcast or
+    sort-merge from the shares' runtime size). The dangling mass, the same scaled-integer sum, is observed on the
+    round's eager checkpoint and read by the next round as a literal; the
+    last round's checkpoint is lazy."""
+
+    def scaled(x: Column) -> Column:
+        return F.round(x * scale).cast("long")
+
+    carried = [c for c in nodes.columns if c != "id"]
+    held = F.col("seed") if "seed" in carried else F.lit(True)
+    tele = F.when(held, F.lit(r0)).otherwise(F.lit(0.0))
+    state = nodes.withColumn("rank", tele)
+    dang = F.lit(n_dang) * scaled(F.lit(r0))
+    for i in range(iters):
+        shares = state.filter(F.col("outdeg").isNotNull()).select(
+            F.col("id").alias("src"), scaled(F.col("rank") / F.col("outdeg")).alias("c")
         )
-        .groupBy("dst")
-        .agg(
-            (
-                F.sum(
-                    F.round((F.col("rank") / F.col("outdeg")) * scale).cast("long")
-                ).cast("double")
-                / F.lit(float(scale))
-            ).alias("inb")
-        )
-    )
-    dangling = pr.filter(F.col("outdeg").isNull()).agg(
-        F.coalesce(
-            F.sum(F.round(F.col("rank") * scale).cast("long")), F.lit(0)
-        ).alias("dang_i")
-    )
-    return contrib, dangling
-
-
-def _pagerank_loop(pr, e, nodes, n_total, d, iters, scale, loop_parts):
-    # All checkpoints in the loop are LAZY (r9): pagerank has no
-    # per-iteration driver action (unlike connected_components' fixpoint
-    # checksum), so eager per-iteration materialization would only add
-    # iters scheduling barriers. Lazy localCheckpoint still truncates the
-    # logical plan immediately (planning stays O(1) per iteration) and
-    # still computes each iteration's RDD exactly once — pr is
-    # checkpointed because BOTH the contribution join and the dangling
-    # aggregation consume it, and it carries the static outdeg so no
-    # per-round degree join exists (r14).
-    for _ in range(iters):
-        contrib, dangling = _rank_flow(e, pr, scale)
-        pr = (
-            nodes.join(contrib, nodes["id"] == contrib["dst"], "left")
-            .join(F.broadcast(n_total))
-            .join(F.broadcast(dangling))
+        msgs = e.join(shares, "src").filter(F.col("dst").isNotNull())
+        nxt = (
+            state.select("id", *carried)
+            .unionByName(msgs.select(F.col("dst").alias("id"), "c"), allowMissingColumns=True)
+            .groupBy("id")
+            .agg(
+                *[F.max(c).alias(c) for c in carried],
+                (F.sum("c").cast("double") / F.lit(float(scale))).alias("inb"),
+            )
             .select(
-                nodes["id"],
-                nodes["outdeg"],
-                (
-                    F.lit(1.0 - d) / F.col("n").cast("double")
-                    + F.lit(d)
-                    * (
-                        F.coalesce(F.col("inb"), F.lit(0.0))
-                        + (F.col("dang_i").cast("double") / F.lit(float(scale)))
-                        / F.col("n").cast("double")
-                    )
+                "id",
+                *carried,
+                step(
+                    F.coalesce(F.col("inb"), F.lit(0.0)),
+                    dang.cast("double") / F.lit(float(scale)),
+                    tele,
                 ).alias("rank"),
             )
-            .repartition(loop_parts, "id")
-            .localCheckpoint(eager=False)
         )
-    return pr.select("id", "rank")
+        if i + 1 < iters:
+            state, m = observed_checkpoint(
+                nxt,
+                F.coalesce(
+                    F.sum(F.when(F.col("outdeg").isNull(), scaled(F.col("rank")))), F.lit(0)
+                ).alias("dang"),
+            )
+            dang = F.lit(m["dang"])
+        else:
+            state = nxt.localCheckpoint(eager=False)
+    return state.select("id", "rank")
 
 
 def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -372,8 +408,9 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     # (r15; exchange reuse does not cross job boundaries).
     # deg feeds both the orientation joins and the totals row; oriented
     # feeds both wedge sides and the closing probe. Pin each once so the
-    # canonicalize+join cascade doesn't run 3x (lazy checkpoint: costs
-    # nothing until the single action that consumes all branches).
+    # canonicalize+join cascade doesn't run 3x (lazy checkpoint: under
+    # AQE its exchanges run when it is built, its final stage inside the
+    # single action that consumes all branches).
     deg = (
         e0.select(F.explode(F.array("u", "v")).alias("x"))
         .groupBy("x")
@@ -437,11 +474,11 @@ def bfs_levels(
     minimum level because expansion is strictly level-ordered — no
     re-relaxation, no priority queue.
 
-    Scale shape: the edge list is hash-partitioned on ``src`` ONCE at the
-    loop width (``loop_entry``, as in pagerank) and every round's
-    frontier join re-uses that partitioning; the frontier and visited sets
-    are repartitioned on the node id at the same width, so the anti-join
-    co-locates. Lineage is truncated per round (``localCheckpoint``) and
+    Scale shape: the edge list is pinned on ``src`` ONCE at the loop
+    width (``loop_entry``) and the frontier and visited sets are
+    repartitioned on the node id at the same width — task parallelism,
+    not co-location: checkpoints report no partitioning, so every
+    round's join and anti-join still plan their exchanges. Lineage is truncated per round (``localCheckpoint``) and
     the loop exits early on an empty frontier — one scalar per round
     crosses the driver (the frontier count), nothing else collects.
     Rounds are data-independent sequential barriers, so ``max_depth``
@@ -519,16 +556,16 @@ def shortest_paths(
     distributed relaxation; after h rounds every ≤h-hop shortest path is
     final, so ``max_hops`` is both the correctness horizon and an
     explicit wall-clock bound (negative cycles can't loop forever).
-    Like pagerank — and unlike the CC fixpoint loop — there is no
-    per-round driver action, so every checkpoint is LAZY: plan
-    truncation per round, one job cascade at the consuming action.
+    There is no per-round driver action, so every checkpoint is LAZY:
+    plan truncation per round, each round's final stage deferred (its
+    exchanges still run at build time under AQE).
 
     Determinism: weights must be integers (bigint sums — the suite's
     exact-sum contract; pre-scale fractional weights upstream) and
     non-negative for the min to be a true distance. The edge list is
-    hash-pinned on ``src`` once at an edge-count-sized width; distance
-    frames repartition on the node id at the same width, so per-round
-    joins add no extra exchange for the pinned side.
+    hash-pinned on ``src`` once at an edge-count-sized width and distance
+    frames repartition on the node id at the same width (task
+    parallelism; the per-round joins still plan both exchanges).
 
     Output: (``id_col``, dist bigint) — one row per node reached
     (sources at dist 0).
@@ -1048,10 +1085,10 @@ def personalized_pagerank(
     also returns to the seeds (the PPR convention — mass never leaks to
     non-seed teleports). pr⁰ = tele.
 
-    Same determinism and scale contract as ``pagerank``: scaled-integer
-    contribution and dangling sums, one broadcast single-row (|S|,
-    dangling) struct per iteration, lazy per-iteration localCheckpoint,
-    plan-local loop partitioning, nothing collected. Seeds not present in
+    Same determinism contract and round kernel as ``pagerank``
+    (``_power_iteration``): scaled-integer contribution and dangling sums,
+    one aggregate shuffle per round, and |S| observed once on the node
+    frame (seed ids join it in the same aggregate). Seeds not present in
     the edge set are counted in |S| but hold no reachable mass — callers
     wanting strict seed⊆nodes semantics should semi-join first.
 
@@ -1065,63 +1102,20 @@ def personalized_pagerank(
             raise ValueError(f"personalized_pagerank: column {c!r} not in {edges.columns}")
     if seed_col not in seeds.columns:
         raise ValueError(f"personalized_pagerank: column {seed_col!r} not in {seeds.columns}")
+    e, nodes, m = _rank_nodes(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        seeds.select(F.col(seed_col).alias("id")),
+    )
     d = damping
-    # Same loop shape as ``pagerank``: lazy pinned operands, and the static
-    # outdeg carried in the state so no per-round degree join exists.
-    e, loop_parts, _ = loop_entry(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct(),
-        "src",
+    return _power_iteration(
+        e,
+        nodes,
+        1.0 / max(m["ns"], 1),  # no seeds: no node reads 1/|S|
+        m["n_dang"],
+        lambda inb, dang, tele: F.lit(1.0 - d) * tele + F.lit(d) * (inb + dang * tele),
+        iters,
+        scale,
     )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(loop_parts, "id")
-        .localCheckpoint(eager=False)
-    )
-    seed_ids = seeds.select(F.col(seed_col).alias("id")).distinct()
-    n_seeds = seed_ids.agg(F.count("*").alias("ns"))
-    deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    tele_nodes = (
-        nodes.join(seed_ids.withColumn("_s", F.lit(1)), "id", "left")
-        .join(F.broadcast(n_seeds))
-        .join(deg, F.col("id") == deg["src"], "left")
-        .select(
-            "id",
-            "outdeg",
-            F.when(
-                F.col("_s").isNotNull(), F.lit(1.0) / F.col("ns").cast("double")
-            )
-            .otherwise(F.lit(0.0))
-            .alias("tele"),
-        )
-        .repartition(loop_parts, "id")
-        .localCheckpoint(eager=False)
-    )
-    pr = tele_nodes.select("id", "outdeg", F.col("tele").alias("rank"))
-    for _ in range(iters):
-        contrib, dangling = _rank_flow(e, pr, scale)
-        pr = (
-            tele_nodes.join(contrib, tele_nodes["id"] == contrib["dst"], "left")
-            .join(F.broadcast(dangling))
-            .select(
-                tele_nodes["id"],
-                tele_nodes["outdeg"],
-                tele_nodes["tele"],
-                (
-                    F.lit(1.0 - d) * F.col("tele")
-                    + F.lit(d)
-                    * (
-                        F.coalesce(F.col("inb"), F.lit(0.0))
-                        + (F.col("dang_i").cast("double") / F.lit(float(scale)))
-                        * F.col("tele")
-                    )
-                ).alias("rank"),
-            )
-            .repartition(loop_parts, "id")
-            .localCheckpoint(eager=False)
-        )
-    return pr.select("id", "rank")
 
 
 def link_prediction(

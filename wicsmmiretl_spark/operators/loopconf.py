@@ -14,8 +14,9 @@ the loop has a driver-side exit, probe it. This module owns that skeleton:
   row count → bytes-derived :func:`loop_partitions` → pinned as the
   loop-scoped ``spark.sql.shuffle.partitions`` (so loop-internal
   partial-agg/distinct exchanges plan at the loop width instead of 32
-  near-empty reduce tasks per groupBy) and as a lazy
-  ``repartition(parts, key)`` of the edges.
+  near-empty reduce tasks per groupBy) and, with a key, as a lazy
+  ``repartition(parts, key)`` of the edges (task parallelism only — see
+  :func:`loop_entry`).
 * :func:`fixpoint` — the round loop for operators that stop on a repeated
   signature (CC, k-core): step, materialize with the signature, stop when
   it repeats or the state is empty; on an exhausted budget one confirming
@@ -36,8 +37,12 @@ Lloyd-loop operators lost 11-25 %, connected_components ~20 %,
 label_propagation and kcore 40-55 %, HITS/PageRank parity. What did win,
 independently of AQE, is the discipline this module now owns: the
 bytes-derived pinned width, counts riding materializations as
-Observations, lazy checkpoints wherever no driver probe needs the round,
-and static out-degree carried in the PageRank/PPR state.
+Observations (HITS' norms, PageRank/PPR's N and dangling mass), and
+static out-degree carried in the PageRank/PPR state. Under AQE a lazy
+checkpoint saves one job at most: building its RDD runs every exchange
+and broadcast stage below it at build time and defers only the final
+stage, so a round whose scalar the driver needs next is checkpointed
+eagerly with that scalar observed rather than probed by a second job.
 
 Thread-safety: the guard mutates the session conf for the duration of
 the loop, exactly like the streaming harness's shuffle-partition guard
@@ -188,9 +193,15 @@ def loop_entry(
 
     Returns ``(edges, loop_parts, metrics_row)``. ``edges`` is the eager
     checkpoint, or with ``key`` a lazy ``repartition(loop_parts, key)``
-    pin of it (materialized inside the first round's job). ``pin_shuffle``
-    also pins the width as the session shuffle width; it requires the
-    caller to run under :func:`loop_scoped`, which restores it."""
+    pin of it. The pin buys task parallelism (``loop_parts`` tasks per
+    scan of the edges), not exchange elision: a checkpoint — lazy, eager
+    or observed — reports ``UnknownPartitioning`` (PySpark 4.1, AQE on),
+    so a join or aggregate on ``key`` downstream still plans its own
+    exchange (a join of two pinned frames plans two). Nor is it free:
+    under AQE the lazy checkpoint runs its exchange at build time, one
+    job. ``pin_shuffle`` also pins the width as the session shuffle
+    width; it requires the caller to run under :func:`loop_scoped`, which
+    restores it."""
     e0, m = observed_checkpoint(edges, row_count(), *metrics)
     spark = edges.sparkSession
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
