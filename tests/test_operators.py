@@ -726,12 +726,10 @@ def test_resample_ffill_grid_and_fill(spark):
 # fuzzy_match
 # ---------------------------------------------------------------------------
 
-def test_fuzzy_match_validates():
+def test_fuzzy_match_validates(spark):
     import pytest as _pytest
     from wicsmmiretl_spark.operators.joins import fuzzy_match
-    from wicsmmiretl_spark.session import get_spark
 
-    spark = get_spark("tests")
     df = spark.createDataFrame([("abc",)], "s: string")
     with _pytest.raises(ValueError, match="non-empty"):
         fuzzy_match(df, "s", [])

@@ -10,6 +10,17 @@ runs on local[*] for tests and on a real cluster unchanged:
 * Arrow enabled for every pandas-UDF boundary (the only Python hot paths).
 * UTC session timezone so timestamp semantics match the DuckDB oracle and are
   stable across cluster node timezones.
+* Codegen cache sized to the engine's working set. Spark's default cache of
+  100 generated classes is a Guava cache split into 4 segments that each
+  evict LRU at ~25 entries. A repeated ``iterative_dedup`` perfbench pass
+  (``order_graph_pagerank`` then ``near_dup_jaccard``) touches ~97 classes,
+  so at the default every pass recompiled 26-52 classes the previous pass
+  had compiled. 1000 entries (250 per segment) hold that set and the widest
+  single suite query (``corpus_curation_v3``, 130 classes at sf0.001); a
+  generated class averages ~2.5 KB of bytecode. The key is a static SQL
+  conf: it takes effect only through the builder config ``get_spark``
+  applies when it creates the session, not through ``spark.conf.set`` or a
+  later ``get_spark`` call on a live session.
 """
 
 from __future__ import annotations
@@ -37,6 +48,8 @@ _DEFAULTS: dict[str, str] = {
     # The driver's events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
     # timestamp type, so read as long and rebuild micros in catalog.load_table.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Static: read once when the JVM first generates code (module docstring).
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -46,13 +59,20 @@ def get_spark(app_name: str = "wicsmmiretl_spark", **overrides: str) -> SparkSes
     Master comes from ``SPARK_GRAFT_CPUS`` (``local[N]``) or defaults to
     ``local[*]``; on a real cluster the master is injected by spark-submit and
     the env var is simply absent.
+
+    When a session is already active, only the explicit ``overrides`` are
+    applied to it: ``_DEFAULTS`` are a creation-time baseline and must not
+    reset runtime confs (say, a shuffle width) a caller has since set. Static
+    confs in ``overrides`` are ignored on a live session, as Spark's builder
+    ignores them.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]" if cpus else "local[*]")
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
-    for key, value in {**_DEFAULTS, **overrides}.items():
+    live = SparkSession.getActiveSession() is not None
+    for key, value in (overrides if live else {**_DEFAULTS, **overrides}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
 
