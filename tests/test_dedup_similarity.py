@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import uuid
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,10 +13,12 @@ from wicsmmiretl_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
     lsh_candidate_pairs,
+    lsh_probe_pairs,
     minhash_signatures,
     simhash32,
     word_shingles,
 )
+from wicsmmiretl_spark.operators.loopconf import scoped_conf
 from wicsmmiretl_spark.operators.similarity import (
     cosine_topk,
     hyperplane_lsh_topk,
@@ -65,6 +70,77 @@ def test_jaccard_bounds_and_identity(spark):
     out = {(r.id_a, r.id_b): r.jaccard for r in jaccard_pairs(df, cand, "doc_id", "text", threshold=0.0).collect()}
     assert out[(1, 2)] == 1.0
     assert 0.0 < out[(1, 3)] < 1.0
+
+
+def test_jaccard_shuffle_path_matches_broadcast_path(spark, sf_dir):
+    """With broadcasts disabled, the candidate id set semi-joins the corpus
+    through a shuffle (the path a candidate set too large to broadcast
+    takes); the rows are those of the default, broadcast path."""
+    docs = load_table(spark, "documents", sf_dir)
+    cand = lsh_candidate_pairs(minhash_signatures(docs, "doc_id", "text"), "doc_id").localCheckpoint()
+
+    def verified():
+        return sorted(jaccard_pairs(docs, cand, "doc_id", "text", threshold=0.1).collect())
+
+    default = verified()
+    with scoped_conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        shuffled = verified()
+    assert default and shuffled == default
+
+
+def _shuffle_write_records(spark, action) -> int:
+    """Run ``action`` and return the shuffle records written by every stage
+    of the jobs it submitted."""
+    sc = spark.sparkContext
+    group = f"shuffle-records-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    total = 0
+    for stage in stages:
+        try:
+            total += store.lastStageAttempt(stage).shuffleWriteRecords()
+        except Exception:  # a skipped stage never ran, so it has no attempt
+            pass
+    return total
+
+
+# Build jobs of near_dup_jaccard at sf0.001 (8 shuffle partitions). With a
+# separate bucket-stats aggregate and a shuffled corpus semi-join the query
+# built in 7 jobs and one build + run wrote 4,490 shuffle records against
+# 2,000 band rows; this shape writes 2,088.
+_NEAR_DUP_BUILD_JOBS = 5
+
+
+def test_near_dup_jaccard_shuffles_only_the_band_exchange(spark, sf_dir, jobs_and_plans):
+    """near_dup_jaccard's contract in counts: its build jobs, and the shuffle
+    records one build + run writes. The band table (one row per doc with a
+    signature and band) is the only large exchange: the bucket cap rides
+    it as a window, and the verify step broadcasts the small candidate id
+    set instead of shuffling the corpus. A second shuffle of the band
+    table or a shuffle of the documents would take the records past 1.2×
+    the band rows. Build jobs are re-measured like
+    ``test_loop_operator_job_count`` (AQE stage races)."""
+    from wicsmmiretl_spark.suite import QUERIES
+
+    query = QUERIES["near_dup_jaccard"]
+    counts = []
+    while len(counts) < 3 and _NEAR_DUP_BUILD_JOBS not in counts:
+        counts.append(jobs_and_plans(lambda: query(spark, sf_dir))[0])
+    assert _NEAR_DUP_BUILD_JOBS in counts, counts
+
+    records = _shuffle_write_records(
+        spark, lambda: query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    )
+    docs = load_table(spark, "documents", sf_dir)
+    band_rows = 4 * minhash_signatures(docs, "doc_id", "text").count()
+    assert records < 1.2 * band_rows, (records, band_rows)
 
 
 def test_simhash_similar_docs_close(spark):
@@ -320,6 +396,102 @@ def test_lsh_bucket_cap_star_expands_oversized_buckets(spark):
     assert not any(r.is_star for r in uncapped_rows)
     default = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs, "doc_id").collect()}
     assert default == uncapped
+
+
+def test_lsh_bucket_cap_rows_for_both_operators(spark):
+    """Bucket-cap semantics, row for row, for the self-join and the probe
+    form. Signatures are hand-set (one hash per band, cap 3), so each
+    bucket is known: an oversized bucket {1,2,3,4} whose pair (1,2) also
+    shares a normal bucket (so stays is_star = false); normal buckets;
+    an oversized bucket {8,9,NULL,NULL} (NULL ids count towards the size,
+    min is 8); and an oversized bucket of NULL ids only, which has no min
+    and so is treated as a normal bucket."""
+    sig_schema = "doc_id long, m0 string, m1 string"
+    index = spark.createDataFrame(
+        [
+            (1, "big", "n12"),
+            (2, "big", "n12"),
+            (3, "big", "u3"),
+            (4, "big", "u4"),
+            (5, "p56", "u5"),
+            (6, "p56", "q67"),
+            (7, "u7", "q67"),
+            (8, "u8", "mix"),
+            (9, "u9", "mix"),
+            (None, "nulls", "mix"),
+            (None, "nulls", "mix"),
+            (None, "nulls", "nb"),
+            (None, "nulls", "nb"),
+        ],
+        sig_schema,
+    )
+    cap = {"num_hashes": 2, "bands": 2, "max_bucket_size": 3}
+
+    def rows(df, *cols):
+        return Counter(tuple(r[c] for c in cols) for r in df.collect())
+
+    cand = lsh_candidate_pairs(index, "doc_id", **cap)
+    assert rows(cand, "id_a", "id_b", "is_star") == Counter(
+        [
+            (1, 2, False),
+            (1, 3, True),
+            (1, 4, True),
+            (5, 6, False),
+            (6, 7, False),
+            (8, 9, True),
+        ]
+    )
+    uncapped = lsh_candidate_pairs(index, "doc_id", num_hashes=2, bands=2, max_bucket_size=None)
+    assert rows(uncapped, "id_a", "id_b", "is_star") == Counter(
+        [(a, b, False) for a in range(1, 5) for b in range(a + 1, 5)]
+        + [(5, 6, False), (6, 7, False), (8, 9, False)]
+    )
+
+    probe = spark.createDataFrame(
+        [
+            (101, "big", "zz"),
+            (102, "big", "n12"),
+            (103, "p56", "q67"),
+            (104, "nulls", "mix"),
+            (105, "u105", "nb"),
+        ],
+        sig_schema,
+    )
+    probed = lsh_probe_pairs(probe, index, "doc_id", **cap)
+    assert rows(probed, "probe_id", "index_id", "is_star") == Counter(
+        [
+            (101, 1, True),
+            (102, 1, False),
+            (102, 2, False),
+            (103, 5, False),
+            (103, 6, False),
+            (103, 7, False),
+            (104, None, False),
+            (104, 8, True),
+            (105, None, False),
+        ]
+    )
+
+    # Verification exempts star pairs only: (1, 2) shares no shingle and
+    # is dropped although an oversized bucket also emitted it.
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c d"),
+            (2, "w x y z"),
+            (3, "a b c d"),
+            (4, "p q r s"),
+            (5, "a b c d e"),
+            (6, "a b c d f"),
+            (7, "k l m n"),
+            (8, "x y z w"),
+            (9, "x y z"),
+        ],
+        "doc_id long, text string",
+    )
+    verified = jaccard_pairs(docs, cand, "doc_id", "text", threshold=0.5)
+    assert rows(verified, "id_a", "id_b", "jaccard", "is_star") == Counter(
+        [(1, 3, 1.0, True), (1, 4, 0.0, True), (5, 6, 0.5, False), (8, 9, 0.5, True)]
+    )
 
 
 def test_dup_clusters_raises_on_unconverged_propagation(spark):

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 
 from wicsmmiretl_spark.operators.loopconf import (
+    fits_broadcast,
     loop_materialization_conf,
     loop_partitions,
     loop_scoped,
@@ -86,6 +87,22 @@ def test_loop_partitions_bytes_sizing():
     # Uncapped growth between floor and cap.
     assert loop_partitions(40_000_000, 32, 64) == 20  # 1.28 GB / 64 MB
     assert loop_partitions(0, 32, session) == 1
+
+
+def test_fits_broadcast_reads_the_session_threshold(spark):
+    """rows x row bytes against spark.sql.autoBroadcastJoinThreshold, in
+    any of its spellings; -1 disables broadcasting for every size."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    with scoped_conf(spark, **{key: "1024"}):
+        assert fits_broadcast(spark, 32, 32)
+        assert not fits_broadcast(spark, 33, 32)
+        assert fits_broadcast(spark, 32)  # row bytes default to an edge row
+    with scoped_conf(spark, **{key: "1MB"}):
+        assert fits_broadcast(spark, 1 << 15, 32)
+        assert not fits_broadcast(spark, (1 << 15) + 1, 32)
+    with scoped_conf(spark, **{key: "-1"}):
+        assert not fits_broadcast(spark, 0, 32)
+        assert not fits_broadcast(spark, 1, 32)
 
 
 def test_loop_scoped_operator_result_unchanged(spark):

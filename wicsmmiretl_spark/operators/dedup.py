@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from wicsmmiretl_spark.functions.text import fingerprint, tokens
+from wicsmmiretl_spark.operators import loopconf
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -130,6 +131,43 @@ def minhash_signatures(
     return staged.select(F.col(id_col), *mins)
 
 
+def _bands(
+    sigs: DataFrame,
+    id_col: str,
+    out: str,
+    num_hashes: int,
+    bands: int,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """Lazily checkpointed band table (out, band_idx, band_key), one row
+    per doc and band, hash-partitioned by bucket. With ``max_bucket_size``
+    it also carries ``_bmin``: the bucket's min id when the bucket has more
+    than ``max_bucket_size`` rows, else NULL (so also NULL for an oversized
+    bucket whose ids are all NULL)."""
+    rows_per_band = num_hashes // bands
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.md5(F.concat_ws("|", *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)])).alias(
+                "band_key"
+            ),
+        )
+        for b in range(bands)
+    ]
+    banded = (
+        sigs.select(F.col(id_col).alias(out), F.explode(F.array(*band_cols)).alias("band"))
+        .select(out, "band.band_idx", "band.band_key")
+        .repartition("band_idx", "band_key")
+    )
+    if max_bucket_size is not None:
+        # The repartition already clusters every bucket in one partition, so
+        # the window plans no exchange of its own.
+        bucket = Window.partitionBy("band_idx", "band_key")
+        oversized = F.count(F.lit(1)).over(bucket) > max_bucket_size
+        banded = banded.withColumn("_bmin", F.when(oversized, F.min(out).over(bucket)))
+    return banded.localCheckpoint(eager=False)
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
@@ -155,51 +193,29 @@ def lsh_candidate_pairs(
     ``is_star = false`` (it can be verified like any other candidate).
     ``None`` disables the cap (every pair ``is_star = false``).
 
-    Plan shape: the banded projection (id + band cols, ~4 tiny rows/doc) is
-    materialized ONCE with a lazy ``localCheckpoint`` and every consumer —
-    bucket stats, star split, both self-join sides — reads the materialized
-    partitions. Without it each consumer re-plans its own subtree and the
-    signature pipeline (the expensive part: interpreted shingle HOFs + md5)
-    is recomputed 2-3× per query; ReuseExchange cannot collapse them because
-    the stats/broadcast branches end in different exchange types
-    (measured 2-3× wall-clock at sf0.1). The checkpoint truncates lineage
-    (executor loss forces a job retry, same trade as ``dup_clusters``) but
-    is orders of magnitude smaller than the corpus, so it holds at 100 TB.
+    Plan shape: the band table costs ONE exchange,
+    ``repartition(band_idx, band_key)``, which puts every bucket whole in
+    one partition, so the cap's per-bucket size and min id are a window
+    over it (a sort inside partitions, not a second exchange). The banded
+    table (id + band cols, ~4 tiny rows/doc) is
+    materialized once with a lazy ``localCheckpoint``, and every consumer —
+    star filter, normal filter, both self-join sides — reads the
+    materialized partitions instead of recomputing the signature pipeline
+    (the expensive part: interpreted shingle HOFs + md5; measured 2-3×
+    wall-clock at sf0.1). The checkpoint truncates lineage (executor loss
+    forces a job retry, same trade as ``dup_clusters``) but is orders of
+    magnitude smaller than the corpus, so it holds at 100 TB.
     """
-    rows_per_band = num_hashes // bands
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(F.concat_ws("|", *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)])).alias(
-                "band_key"
-            ),
-        )
-        for b in range(bands)
-    ]
-    banded = signatures.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_key")
-    banded = banded.repartition("band_idx", "band_key").localCheckpoint(eager=False)
-
+    banded = _bands(signatures, id_col, id_col, num_hashes, bands, max_bucket_size)
     star = None
     if max_bucket_size is not None:
-        oversized = F.broadcast(
-            banded.groupBy("band_idx", "band_key")
-            .agg(F.count("*").alias("_bsz"), F.min(id_col).alias("_bmin"))
-            .filter(F.col("_bsz") > max_bucket_size)
-            .select("band_idx", "band_key", "_bmin")
-        )
-        flagged = banded.join(oversized, ["band_idx", "band_key"], "left")
-        star = flagged.filter(
-            F.col("_bmin").isNotNull() & (F.col(id_col) > F.col("_bmin"))
-        ).select(
+        # id > NULL is NULL: only members of a bucket with a min id pair up.
+        star = banded.filter(F.col(id_col) > F.col("_bmin")).select(
             F.col("_bmin").alias("id_a"),
             F.col(id_col).alias("id_b"),
             F.lit(True).alias("is_star"),
         )
-        banded = flagged.filter(F.col("_bmin").isNull()).select(
-            id_col, "band_idx", "band_key"
-        )
+        banded = banded.filter(F.col("_bmin").isNull())
 
     a = banded.alias("a")
     b = banded.alias("b")
@@ -243,18 +259,25 @@ def jaccard_pairs(
 
     Plan shape: the interpreted shingle pipeline runs ONLY for documents
     that appear in a candidate pair — the candidate frame (tiny: LSH
-    survivors) is materialized once, its id set semi-joins the corpus, and
-    shingles are computed for that reduced set. Without the reduction both
-    join sides shingle the FULL corpus (verification cost scales with the
-    corpus instead of with |candidates| — the wrong side of the LSH
-    bargain at 100 TB).
+    survivors) is materialized once with its row count observed, its id
+    set semi-joins the corpus, and shingles are computed for that reduced
+    set. Without the reduction both join sides shingle the FULL corpus
+    (verification cost scales with the corpus instead of with
+    |candidates| — the wrong side of the LSH bargain at 100 TB). When the
+    observed count says the id set fits the broadcast threshold
+    (``loopconf.fits_broadcast``) the id set is broadcast, so the corpus
+    is never shuffled; a candidate set too large to broadcast keeps the
+    shuffle semi-join.
     """
-    cand = candidates.localCheckpoint(eager=False)
+    cand, m = loopconf.observed_checkpoint(candidates, loopconf.row_count())
     ids = (
         cand.select(F.col("id_a").alias(id_col))
         .union(cand.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
+    # A candidate row adds at most two ids: within one edge row's bytes.
+    if loopconf.fits_broadcast(cand.sparkSession, m["n"]):
+        ids = F.broadcast(ids)
     sh = staged_shingles(
         df.join(ids, id_col, "left_semi"), id_col, text_col, shingle_n
     )
@@ -772,44 +795,18 @@ def lsh_probe_pairs(
     links into the cluster with ONE row instead of |bucket| rows; such
     pairs carry ``is_star = true`` so downstream exact-verify can exempt
     them (same contract as the self-join form). A pair also found via a
-    normal bucket stays ``is_star = false``.
+    normal bucket stays ``is_star = false``. The cap rides the corpus
+    side's band exchange as a window (``_bands``), so it costs no
+    exchange of its own.
 
     Output: distinct (probe_id, index_id, is_star). Probe and index id
     spaces may overlap — the columns are kept separate, no ordering is
     imposed between them.
     """
-    rows_per_band = num_hashes // bands
-
-    def banded(sigs: DataFrame, out: str) -> DataFrame:
-        band_cols = [
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.md5(
-                    F.concat_ws(
-                        "|", *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-        return (
-            sigs.select(F.col(id_col).alias(out), F.explode(F.array(*band_cols)).alias("band"))
-            .select(out, "band.band_idx", "band.band_key")
-            .repartition("band_idx", "band_key")
-            .localCheckpoint(eager=False)
-        )
-
-    idx = banded(index_sigs, "index_id")
-    prb = banded(probe_sigs, "probe_id")
+    idx = _bands(index_sigs, id_col, "index_id", num_hashes, bands, max_bucket_size)
+    prb = _bands(probe_sigs, id_col, "probe_id", num_hashes, bands, None)
     if max_bucket_size is not None:
-        oversized = F.broadcast(
-            idx.groupBy("band_idx", "band_key")
-            .agg(F.count("*").alias("_bsz"), F.min("index_id").alias("_bmin"))
-            .filter(F.col("_bsz") > max_bucket_size)
-            .select("band_idx", "band_key", "_bmin")
-        )
-        flagged = idx.join(oversized, ["band_idx", "band_key"], "left")
-        idx = flagged.select(
+        idx = idx.select(
             F.coalesce("_bmin", "index_id").alias("index_id"),
             "band_idx",
             "band_key",

@@ -17,6 +17,11 @@ the loop has a driver-side exit, probe it. This module owns that skeleton:
   near-empty reduce tasks per groupBy) and, with a key, as a lazy
   ``repartition(parts, key)`` of the edges (task parallelism only — see
   :func:`loop_entry`).
+* :func:`fits_broadcast` — the join-strategy rule: an observed row count
+  × row bytes against ``spark.sql.autoBroadcastJoinThreshold`` decides
+  a broadcast hint up front, so a small checkpointed side is broadcast
+  without AQE first running both sides' shuffle stages (first caller:
+  ``dedup.jaccard_pairs``' candidate id set).
 * :func:`fixpoint` — the round loop for operators that stop on a repeated
   signature (CC, k-core): step, materialize with the signature, stop when
   it repeats or the state is empty; on an exhausted budget one confirming
@@ -113,6 +118,12 @@ def set_loop_shuffle_partitions(spark: SparkSession, parts: int) -> None:
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
 
 
+# Shuffle-serialized bytes per edge/state row (two-three longs/doubles plus
+# row overhead) — feeds the bytes-based loop width (loop_partitions) and
+# the broadcast rule (fits_broadcast).
+_EDGE_ROW_BYTES = 32
+
+
 def loop_partitions(
     n_rows: int,
     bytes_per_row: int,
@@ -143,6 +154,19 @@ def loop_partitions(
     return max(1, min(session_parts, max(by_bytes, min(session_parts, 8))))
 
 
+def fits_broadcast(spark: SparkSession, n_rows: int, bytes_per_row: int = _EDGE_ROW_BYTES) -> bool:
+    """Broadcast or shuffle, decided from a row count a checkpoint has
+    already observed: ``n_rows × bytes_per_row`` within
+    ``spark.sql.autoBroadcastJoinThreshold`` (``-1`` disables broadcasts).
+
+    AQE picks a broadcast only after both sides' shuffle stages have run,
+    and a checkpointed frame carries no size statistics for the static
+    planner, so a caller that knows its small side's row count hints the
+    broadcast up front; past the threshold it keeps the shuffle join."""
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return n_rows * bytes_per_row <= threshold
+
+
 def loop_scoped(fn: Callable[..., T]) -> Callable[..., T]:
     """Run an iterative operator under :func:`loop_materialization_conf`.
 
@@ -164,11 +188,6 @@ def loop_scoped(fn: Callable[..., T]) -> Callable[..., T]:
             return fn(*args, **kwargs)
 
     return wrapper
-
-
-# Shuffle-serialized bytes per edge/state row (two-three longs/doubles plus
-# row overhead) — feeds the bytes-based loop width (loop_partitions).
-_EDGE_ROW_BYTES = 32
 
 
 def row_count() -> Column:
