@@ -158,30 +158,3 @@ class TestHeapsFit:
         df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
         with _pytest.raises(ValueError, match="checkpoints"):
             heaps_fit(df, checkpoints=2)
-
-
-def test_bpe_train_driver_local_bit_identical(spark):
-    """r13 (VERDICT r12 item 6): driver_local=True — the production mode for
-    deep merge tables, one vocab collect + a local loop instead of one Spark
-    job per merge — is bit-identical to the distributed oracle-replayable
-    loop at the graded 8 merges, on real sf0.001 documents text (unicode,
-    ties and all) and on a tie-heavy synthetic corpus. Exhaustion raises
-    the same error."""
-    import pytest as _pytest
-
-    from wicsmmiretl_spark.catalog import load_table
-    from wicsmmiretl_spark.operators.bpe import bpe_train
-
-    docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-    dist = [tuple(r) for r in bpe_train(docs, n_merges=8, vocab_partitions=2).collect()]
-    local = [tuple(r) for r in bpe_train(docs, n_merges=8, driver_local=True).collect()]
-    assert dist == local
-
-    tiny = spark.createDataFrame(
-        [(1, "ab ab ba"), (2, "ba ab aa")], "doc_id long, text string"
-    )
-    assert [tuple(r) for r in bpe_train(tiny, n_merges=3).collect()] == [
-        tuple(r) for r in bpe_train(tiny, n_merges=3, driver_local=True).collect()
-    ]
-    with _pytest.raises(ValueError, match="exhausted"):
-        bpe_train(tiny, n_merges=50, driver_local=True)

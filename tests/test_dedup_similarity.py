@@ -216,7 +216,7 @@ def test_cosine_pairs_symmetric_threshold(spark, sf_dir):
 
 def test_cosine_pairs_size_gate_trips(spark, sf_dir):
     """The O(n²) baseline must fail loudly past max_rows, naming the scale
-    path — same contract as dup_clusters' driver_threshold."""
+    path (``hyperplane_pairs``) instead of launching the all-pairs join."""
     import pytest
 
     from wicsmmiretl_spark.catalog import load_table
@@ -342,11 +342,7 @@ def test_dup_clusters_resolves_chains(spark):
         "id_a long, id_b long",
     )
     expect = {1: 1, 2: 1, 3: 1, 7: 1, 10: 10, 11: 10}
-    got_driver = {r.id: r.cluster_id for r in dup_clusters(pairs).collect()}
-    got_dist = {
-        r.id: r.cluster_id for r in dup_clusters(pairs, driver_threshold=0).collect()
-    }
-    assert got_driver == expect and got_dist == expect
+    assert {r.id: r.cluster_id for r in dup_clusters(pairs).collect()} == expect
 
 
 def test_simhash_near_pairs_exact_verify(spark, sf_dir):
@@ -405,7 +401,9 @@ def test_lsh_bucket_cap_rows_for_both_operators(spark):
     shares a normal bucket (so stays is_star = false); normal buckets;
     an oversized bucket {8,9,NULL,NULL} (NULL ids count towards the size,
     min is 8); and an oversized bucket of NULL ids only, which has no min
-    and so is treated as a normal bucket."""
+    and so is treated as a normal bucket. Neither operator pairs a NULL
+    id: probe 104 keeps only its star pair, and probe 105, which meets
+    nothing but NULL ids, has no row."""
     sig_schema = "doc_id long, m0 string, m1 string"
     index = spark.createDataFrame(
         [
@@ -466,9 +464,7 @@ def test_lsh_bucket_cap_rows_for_both_operators(spark):
             (103, 5, False),
             (103, 6, False),
             (103, 7, False),
-            (104, None, False),
             (104, 8, True),
-            (105, None, False),
         ]
     )
 
@@ -494,18 +490,23 @@ def test_lsh_bucket_cap_rows_for_both_operators(spark):
     )
 
 
-def test_dup_clusters_raises_on_unconverged_propagation(spark):
+def test_dup_clusters_raises_on_unconverged_propagation(spark, monkeypatch):
     """Distributed contraction must not silently emit non-fixpoint labels:
-    a path graph needing more star rounds than max_iter allows raises."""
+    a path graph needing more star rounds than max_iter allows raises. The
+    path is split into four range partitions and the 64 MB contraction
+    target shrunk to a few bytes, so each partition's union-find finishes
+    only its own stretch and the stars meet in the rounds."""
     import pytest
+    from wicsmmiretl_spark.operators import loopconf
     from wicsmmiretl_spark.operators.dedup import dup_clusters
 
+    monkeypatch.setattr(loopconf, "_PARTITION_BYTES", 8)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 40)], "id_a long, id_b long"
-    )
+    ).repartitionByRange(4, "id_a")
     with pytest.raises(RuntimeError, match="fixpoint"):
-        dup_clusters(chain, driver_threshold=0, max_iter=1).collect()
-    ok = dup_clusters(chain, driver_threshold=0, max_iter=20)
+        dup_clusters(chain, max_iter=1).collect()
+    ok = dup_clusters(chain, max_iter=20)
     assert {r.cluster_id for r in ok.collect()} == {1}
 
 

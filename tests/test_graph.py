@@ -3,10 +3,12 @@ union-find ground truth, across the graph shapes that matter:
 
 * path graphs — the O(diameter) killer for min-label propagation; the
   star algorithm must finish a 100-node path well inside the default
-  round cap (log₂ 100 ≈ 7),
+  round cap (log₂ 100 ≈ 7), also when the per-partition union-find
+  leaves the path in pieces,
 * random sparse graphs — many components, mixed sizes,
 * near-cliques — the shape LSH actually produces,
-* singleton/self-loop nodes — must come back labeled as themselves.
+* singleton/self-loop nodes — must come back labeled as themselves,
+* NULL ids and an empty edge list.
 """
 
 from __future__ import annotations
@@ -41,8 +43,12 @@ def _union_find(edges, nodes):
 
 
 def _check(spark, edges):
-    nodes = sorted({x for e in edges for x in e})
-    expect = _union_find(edges, nodes)
+    """A pair with a NULL id joins nothing: the NULL comes back as a node
+    labeled NULL, and the pair's other end as it would without the pair."""
+    nodes = sorted({x for e in edges for x in e if x is not None})
+    expect = _union_find([e for e in edges if None not in e], nodes)
+    if any(None in e for e in edges):
+        expect[None] = None
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {r.id: r.cluster_id for r in connected_components(df).collect()}
     assert got == expect
@@ -76,21 +82,38 @@ def test_self_loops_and_reversed_duplicates(spark):
     _check(spark, [(5, 5), (6, 6)])  # no edge left: every node a singleton
 
 
-def test_budget_ending_on_the_fixpoint_converges(spark):
-    """The 99-edge path reaches its fixpoint in round 7 (round 8 only
-    reproduces it). A budget of exactly 7 rounds ends on the fixpoint, so
-    one confirming round must return the labeling instead of raising."""
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 100)], "id_a long, id_b long"
-    )
-    got = {r.cluster_id for r in connected_components(df, max_iter=7).collect()}
+def test_null_ids_and_empty_input(spark):
+    _check(spark, [(1, 2), (None, 3), (2, None), (None, None)])
+    _check(spark, [])
+
+
+def _split_path(spark, monkeypatch, n_edges):
+    """A path the per-partition union-find cannot finish: four range
+    partitions, each contracted on its own (the 64 MB contraction target
+    shrunk to a few bytes, so no coalesce merges them), leave four stars
+    chained through their boundary nodes for the star rounds."""
+    from wicsmmiretl_spark.operators import loopconf
+
+    monkeypatch.setattr(loopconf, "_PARTITION_BYTES", 8)
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(1, n_edges + 1)], "id_a long, id_b long"
+    ).repartitionByRange(4, "id_a")
+
+
+def test_budget_ending_on_the_fixpoint_converges(spark, monkeypatch):
+    """The 99-edge path, split into four contracted stretches, reaches its
+    fixpoint in round 2 (round 3 only reproduces it). A budget of exactly 2
+    rounds ends on the fixpoint, so one confirming round must return the
+    labeling instead of raising; a budget of 1 raises."""
+    df = _split_path(spark, monkeypatch, 99)
+    got = {r.cluster_id for r in connected_components(df, max_iter=2).collect()}
     assert got == {1}
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        connected_components(df, max_iter=1).collect()
 
 
-def test_unconverged_raises(spark):
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 40)], "id_a long, id_b long"
-    )
+def test_unconverged_raises(spark, monkeypatch):
+    df = _split_path(spark, monkeypatch, 39)
     with pytest.raises(RuntimeError, match="fixpoint"):
         connected_components(df, max_iter=1).collect()
 
@@ -736,7 +759,7 @@ class TestLinkPrediction:
 # ---------------------------------------------------------------------------
 
 _LOOP_JOBS = {
-    "connected_components": 38,
+    "connected_components": 14,
     "pagerank": 24,
     "personalized_pagerank": 24,
     "bfs_levels": 46,
@@ -784,6 +807,22 @@ def test_loop_operator_job_count(spark, jobs_and_plans, name):
     while len(counts) < 3 and _LOOP_JOBS[name] not in counts:
         counts.append(jobs_and_plans(lambda: _run_loop_operator(spark, name))[0])
     assert _LOOP_JOBS[name] in counts, counts
+
+
+def test_event_chain_components_job_count(spark, jobs_and_plans, sf_dir):
+    """``event_chain_components`` built and run at sf0.001: each user's
+    event chain lies whole in one partition, so the contraction finishes
+    every component and one star round confirms it (the star rounds alone
+    took 48 jobs). Re-measured like the loop totals above."""
+    from wicsmmiretl_spark.suite import QUERIES
+
+    def run():
+        QUERIES["event_chain_components"](spark, sf_dir).collect()
+
+    counts = []
+    while len(counts) < 3 and 15 not in counts:
+        counts.append(jobs_and_plans(run)[0])
+    assert 15 in counts, counts
 
 
 @pytest.mark.parametrize("name", ["pagerank", "personalized_pagerank"])

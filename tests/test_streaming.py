@@ -411,21 +411,18 @@ def test_stream_static_enrich_matches_batch_and_keeps_unmatched(spark, tmp_path)
     assert got == {("A", 2, 3.0), ("B", 1, 4.0), (None, 1, 8.0)}
 
 
-@pytest.mark.parametrize("backend", ["builtin", "python_set"])
-def test_stateful_running_distinct_stream_equals_batch(spark, event_dir, backend):
-    """Exact running distinct on both backends: the final per-user
-    distinct-type snapshot after the whole stream (multi-batch, so state
-    must persist and merge across micro-batches) equals the batch
-    countDistinct — for the default all-JVM dedup→agg composition AND the
-    applyInPandasWithState seen-set template."""
+def test_stateful_running_distinct_stream_equals_batch(spark, event_dir):
+    """Exact running distinct: the final per-user distinct-type snapshot
+    after the whole stream (multi-batch, so state must persist and merge
+    across micro-batches) equals the batch countDistinct."""
     from pyspark.sql import functions as F
 
     from wicsmmiretl_spark.streaming.stateful import running_user_distinct
 
     stream = read_event_stream(spark, event_dir, max_files_per_trigger=2)
     got_df = run_to_memory_sink(
-        running_user_distinct(stream, state_backend=backend),
-        f"t_stateful_distinct_{backend}",
+        running_user_distinct(stream),
+        "t_stateful_distinct",
         spark,
         output_mode="update",
     )
@@ -442,13 +439,11 @@ def test_stateful_running_distinct_stream_equals_batch(spark, event_dir, backend
     assert got == want
 
 
-def test_stateful_running_distinct_null_only_user_and_backend_validation(
-    spark, tmp_path
-):
+def test_stateful_running_distinct_null_only_user(spark, tmp_path):
     """A user whose event types are ALL NULL must emit a count-0 row on
-    every path (batch countDistinct semantics — the builtin dedup keeps
-    one NULL row per user instead of filtering the user away); a
-    misspelled backend raises on batch AND streaming inputs alike."""
+    the batch and the streaming path (batch countDistinct semantics — the
+    streaming dedup keeps one NULL row per user instead of filtering the
+    user away)."""
     from wicsmmiretl_spark.streaming.stateful import running_user_distinct
 
     rows = [(1, None), (1, None), (2, "click"), (2, None), (2, "view")]
@@ -461,24 +456,17 @@ def test_stateful_running_distinct_null_only_user_and_backend_validation(
         r.user_id: r.n_distinct_types for r in running_user_distinct(batch).collect()
     } == want
 
-    for backend in ("builtin", "python_set"):
-        stream = spark.readStream.schema(batch.schema).parquet(src)
-        snap = run_to_memory_sink(
-            running_user_distinct(stream, state_backend=backend),
-            f"t_null_user_{backend}",
-            spark,
-            output_mode="update",
-        )
-        got = {
-            r.user_id: r.n_distinct_types
-            for r in snap.groupBy("user_id")
-            .agg(F.max("n_distinct_types").alias("n_distinct_types"))
-            .collect()
-        }
-        assert got == want, backend
-
-    with pytest.raises(ValueError, match="state_backend"):
-        running_user_distinct(batch, state_backend="python_st")
+    stream = spark.readStream.schema(batch.schema).parquet(src)
+    snap = run_to_memory_sink(
+        running_user_distinct(stream), "t_null_user", spark, output_mode="update"
+    )
+    got = {
+        r.user_id: r.n_distinct_types
+        for r in snap.groupBy("user_id")
+        .agg(F.max("n_distinct_types").alias("n_distinct_types"))
+        .collect()
+    }
+    assert got == want
 
 
 def test_steady_state_replay_matches_one_batch_drain(spark, tmp_path, monkeypatch):

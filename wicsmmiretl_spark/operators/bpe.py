@@ -72,7 +72,6 @@ def bpe_train(
     text_col: str = "text",
     n_merges: int = 8,
     vocab_partitions: int | None = None,
-    driver_local: bool = False,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from a document corpus.
 
@@ -87,21 +86,10 @@ def bpe_train(
     at laptop scale 2 partitions beat 32; at 100 TB with a hundred-million
     -form vocabulary, leave it at the session default.
 
-    Job-count story (VERDICT r12 item 6) — the distributed loop runs ONE
-    Spark job per merge (a vocab-sized pair-count aggregate collecting a
-    single winner row). Honest at the suite's 8 merges; a production 32k-
-    merge tokenizer is 32k SEQUENTIAL jobs — hours of pure scheduler
-    latency even though each job is tiny, because merge i+1's counts
-    depend on merge i's rewrite. ``driver_local=True`` is the production
-    mode for that regime: the corpus is still scanned exactly once and the
-    (freq, syms) vocabulary — already vocab-sized by construction, the
-    same table the distributed loop iterates — is collected ONCE and the
-    merge loop runs locally. Bit-identical by construction (the symbol
-    arrays come from the same JVM-side extraction, the counts are exact
-    integers, the tie-break is the same (count desc, lhs, rhs) order;
-    pytest pins equality at 8 merges). The distributed loop stays the
-    default because it is what the SQL oracle replays step-for-step and
-    it holds for vocabularies too large to collect.
+    Job count: ONE Spark job per merge (a vocab-sized pair-count aggregate
+    collecting a single winner row), the loop the SQL oracle replays
+    step for step. A deep merge table is that many SEQUENTIAL jobs,
+    because merge i+1's counts depend on merge i's rewrite.
 
     Output: step int (0-based), lhs string, rhs string, pair_count bigint.
     """
@@ -122,28 +110,6 @@ def bpe_train(
         if vocab_partitions < 1:
             raise ValueError(f"bpe_train: vocab_partitions must be >= 1, got {vocab_partitions}")
         cur = cur.coalesce(vocab_partitions)
-    if driver_local:
-        vocab = [(r["freq"], list(r["syms"])) for r in cur.select("freq", "syms").collect()]
-        merges_l: list[tuple[int, str, str, int]] = []
-        for step_i in range(n_merges):
-            counts: dict[tuple[str, str], int] = {}
-            for freq, syms in vocab:
-                for a, b in zip(syms, syms[1:]):
-                    counts[(a, b)] = counts.get((a, b), 0) + freq
-            if not counts:
-                raise ValueError(
-                    f"bpe_train: vocabulary exhausted after {step_i} merges "
-                    f"(requested {n_merges})"
-                )
-            (lhs, rhs), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-            merges_l.append((step_i, lhs, rhs, cnt))
-            if step_i < n_merges - 1:
-                vocab = [
-                    (freq, _merge_pair_local(syms, lhs, rhs)) for freq, syms in vocab
-                ]
-        return spark.createDataFrame(
-            merges_l, "step int, lhs string, rhs string, pair_count bigint"
-        )
     cur = cur.localCheckpoint(eager=True)
     merges: list[tuple[int, str, str, int]] = []
     for step_i in range(n_merges):
@@ -178,23 +144,6 @@ def bpe_train(
     return spark.createDataFrame(
         merges, "step int, lhs string, rhs string, pair_count bigint"
     )
-
-
-def _merge_pair_local(syms: list[str], left: str, right: str) -> list[str]:
-    """Python twin of :func:`merge_pair_expr` for the ``driver_local``
-    training loop: leftmost-greedy non-overlapping replace, a merged
-    symbol never chain-merges within the same pass."""
-    out: list[str] = []
-    i = 0
-    n = len(syms)
-    while i < n:
-        if i + 1 < n and syms[i] == left and syms[i + 1] == right:
-            out.append(left + right)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return out
 
 
 def bpe_encode(

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from wicsmmiretl_spark.functions.text import fingerprint, tokens
 from wicsmmiretl_spark.operators import loopconf
+from wicsmmiretl_spark.operators.graph import connected_components
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -203,8 +204,9 @@ def lsh_candidate_pairs(
     materialized partitions instead of recomputing the signature pipeline
     (the expensive part: interpreted shingle HOFs + md5; measured 2-3×
     wall-clock at sf0.1). The checkpoint truncates lineage (executor loss
-    forces a job retry, same trade as ``dup_clusters``) but is orders of
-    magnitude smaller than the corpus, so it holds at 100 TB.
+    forces a job retry, the trade every loop checkpoint in
+    ``operators/graph.py`` makes) but is orders of magnitude smaller than
+    the corpus, so it holds at 100 TB.
     """
     banded = _bands(signatures, id_col, id_col, num_hashes, bands, max_bucket_size)
     star = None
@@ -364,71 +366,13 @@ def simhash_near_pairs(
     return pairs
 
 
-def dup_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    driver_threshold: int = 5_000_000,
-) -> DataFrame:
-    """Resolve near-dup pairs into clusters: connected components, cluster
-    id = smallest doc id in the component.
-
-    Two paths, same result:
-
-    * **Driver union-find** when the edge count is under
-      ``driver_threshold``. The LSH candidate graph is orders of magnitude
-      smaller than the corpus (only same-bucket pairs survive), so even a
-      100 TB corpus usually yields a graph that fits on the driver — one
-      collect, zero iterative jobs.
-    * **Distributed alternating-star contraction** above the threshold
-      (``operators/graph.py:connected_components``): large-star/small-star
-      rounds, each one groupBy-min + one equi-join, converging in O(log n)
-      shuffle rounds for ANY component shape — including the chained-
-      duplicate path graphs that defeat O(diameter) min-label propagation.
-
-    Output: id, cluster_id — one row per doc that appears in ``pairs``.
-    """
-    from wicsmmiretl_spark.operators.graph import connected_components
-
-    # Materialize the candidate pairs once: the upstream (signature build +
-    # band join) is the expensive part and both the size probe and the
-    # chosen algorithm consume the same rows.
-    pairs = pairs.localCheckpoint(eager=True)
-    n_edges = pairs.count()
-    if n_edges <= driver_threshold:
-        return _dup_clusters_driver(pairs, id_a, id_b)
-    return connected_components(pairs, id_a, id_b, max_iter=max_iter)
-
-
-def _dup_clusters_driver(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
-    """Union-find with path compression on the collected edge list, then
-    relabel every component by its minimum member id."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for row in pairs.select(id_a, id_b).collect():
-        a, b = row[0], row[1]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-
-    comp_min: dict = {}
-    for x in parent:
-        r = find(x)
-        m = comp_min.get(r)
-        comp_min[r] = x if m is None or x < m else m
-    rows = [(x, comp_min[find(x)]) for x in sorted(parent)]
-    return pairs.sparkSession.createDataFrame(rows, "id long, cluster_id long")
+# Near-dup pairs → clusters: (id, cluster_id = smallest doc id in the
+# component) for every doc in the pairs. Each partition of the pairs
+# contracts itself with a union-find, then alternating-star rounds join
+# what crosses partitions — O(log n) rounds for ANY component shape,
+# including the chained-duplicate path graphs that defeat min-label
+# propagation (operators/graph.py).
+dup_clusters = connected_components
 
 
 def simhash32(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -801,7 +745,9 @@ def lsh_probe_pairs(
 
     Output: distinct (probe_id, index_id, is_star). Probe and index id
     spaces may overlap — the columns are kept separate, no ordering is
-    imposed between them.
+    imposed between them. A NULL id pairs with nothing (as in
+    ``lsh_candidate_pairs``), though it still counts towards its corpus
+    bucket's size.
     """
     idx = _bands(index_sigs, id_col, "index_id", num_hashes, bands, max_bucket_size)
     prb = _bands(probe_sigs, id_col, "probe_id", num_hashes, bands, None)
@@ -816,6 +762,7 @@ def lsh_probe_pairs(
         idx = idx.withColumn("is_star", F.lit(False))
     return (
         prb.join(idx, ["band_idx", "band_key"])
+        .filter(F.col("probe_id").isNotNull() & F.col("index_id").isNotNull())
         .groupBy("probe_id", "index_id")
         .agg(F.min("is_star").alias("is_star"))
     )

@@ -4,8 +4,8 @@ mass sums.
 
 Why this exists
 ---------------
-``dedup.dup_clusters`` resolves near-duplicate candidate pairs into
-clusters. Its distributed fallback used min-label propagation, which
+``connected_components`` resolves candidate pairs into clusters
+(``dedup.dup_clusters`` is this operator). Min-label propagation
 converges in O(component diameter) shuffle rounds — fine for the
 near-clique graphs LSH produces, but a corpus with chained duplicates
 (A≈B≈C≈…, each adjacent pair a candidate but not the ends) degrades to a
@@ -20,15 +20,23 @@ its neighborhood minimum:
 * **small-star**: every node points its smaller-or-equal neighbors (and
   itself) at that minimum.
 
-Each round is one groupBy-min plus one equi-join — pure Catalyst, no
+Each round is two window shuffles plus a distinct — pure Catalyst, no
 Python. A fixpoint (both stars produce the edge set they consumed) leaves
 exactly the star forest (node → component minimum).
 
+Before the first round, every ≤ 64 MB partition of the edges contracts
+itself with a union-find (Łącki, Mirrokni and Włodarczyk, "Connected
+Components at Scale via Local Contractions", 2018): components that the
+input already holds whole in one partition arrive as finished stars, and
+the rounds only join what crosses partitions. On a graph under 64 MB one
+task does the whole union-find and the first round confirms it.
+
 Scale design
 ------------
-* Each iteration shuffles the current edge set twice (groupBy + join) on
-  the node id — high-cardinality keys, no skew amplification beyond the
-  input graph's own degree skew (a node's neighborhood is one group).
+* Each iteration shuffles the current edge set twice (one window per
+  star) on the node id — high-cardinality keys, no skew amplification
+  beyond the input graph's own degree skew (a node's neighborhood is one
+  group).
 * Lineage is truncated per round with ``localCheckpoint`` so the plan
   doesn't grow with iterations.
 * The convergence probe compares (row count, order-independent xxhash64
@@ -51,12 +59,16 @@ fixed-round with no probe and keeps its own loop.
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, Iterator
+
+import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from wicsmmiretl_spark.operators.loopconf import (
+    byte_partitions,
+    fits_broadcast,
     fixpoint,
     loop_entry,
     loop_scoped,
@@ -136,33 +148,68 @@ def connected_components(
     regardless of component diameter (path graphs included — the case that
     defeats min-label propagation).
 
-    The loop runs under ``@loop_scoped`` at the bytes-derived loop width
-    (``loop_entry``), so the per-round window shuffles AND the small-star's
-    closing ``distinct()`` plan at that width. The fixpoint signature is
-    (row count, order-independent xxhash64 checksum) of the edge set,
-    probed every round.
+    Plan: ``loop_entry`` checkpoints the raw pairs once; the node list
+    and the closing certification read that checkpoint, so a lazy
+    upstream (an LSH join) runs once. The checkpoint is coalesced — no
+    shuffle, so co-located components stay together — to one partition
+    per 64 MB of edges (``byte_partitions``). Each partition contracts
+    itself with a union-find (``contract``, one Arrow-batched
+    ``mapInPandas`` task), and the distinct ``node → local min`` edges
+    start the star rounds. The rounds run under ``@loop_scoped`` at the
+    bytes-derived loop width, so the per-round window shuffles AND the
+    small-star's closing ``distinct()`` plan at that width. The fixpoint
+    signature is (row count, order-independent xxhash64 checksum) of the
+    edge set, probed every round.
     """
     checksum = F.coalesce(
         F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
         F.lit(0).cast("decimal(38,0)"),
     ).alias("h")
-    edges0, loop_parts, start = loop_entry(
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+
+    def contract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        """Union-find over one partition's ``(u, v)`` edges (self-pairs and
+        NULL ids already dropped). A merge roots the two trees at the
+        smaller root, so every root is its component's minimum. Emits
+        ``(node, local component min)`` for every non-root node: a finished
+        star, which a star round reproduces unchanged. Nested, so it is
+        pickled by value and the Python workers need not import this
+        package."""
+        parent: dict = {}
+
+        def find(x):
+            root = x
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:
+                parent[x], x = root, parent[x]
+            return root
+
+        for pdf in batches:
+            for a, b in zip(pdf["u"].tolist(), pdf["v"].tolist()):
+                ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)
+        stars = [(x, r) for x in parent if (r := find(x)) != x]
+        if stars:
+            yield pd.DataFrame(stars, columns=["u", "v"])
+
+    edges0, loop_parts, m = loop_entry(
+        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")), None
+    )
+    contracted, start = observed_checkpoint(
+        edges0.coalesce(byte_partitions(m["n"]))
         .filter(F.col("u") != F.col("v"))
+        .mapInPandas(contract, edges0.schema)
         .distinct(),
-        None,
+        row_count(),
         checksum,
     )
     # Every node that appears at all, including isolated self-pair nodes:
     # they must come back out labeled as their own singleton component.
-    # Lazy: its only consumer is the final labeling join, so its final
-    # stage runs inside that one job (its distinct's exchange still runs
-    # at build time under AQE).
     nodes = (
-        pairs.select(F.col(id_a).alias("id"))
-        .union(pairs.select(F.col(id_b).alias("id")))
+        edges0.select(F.col("u").alias("id"))
+        .union(edges0.select(F.col("v").alias("id")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     # r15 NOTE (measured, do not re-try): batching 2 alternating-star
     # rounds per probe — the kcore r15 win — LOSES here: under AQE every
@@ -172,7 +219,7 @@ def connected_components(
     # and batched detection runs up to 2 extra no-op rounds. Probed 3x:
     # 50 -> 53 jobs, build 5.3 -> 6.7 s. Per-round probing stands.
     edges = fixpoint(
-        edges0,
+        contracted,
         lambda es: _small_star(_large_star(es, loop_parts), loop_parts),
         start,
         max_iter,
@@ -185,19 +232,28 @@ def connected_components(
     # Fixpoint edge set is the star forest: (node, component_min) for every
     # non-root node. Roots (and isolated nodes) label themselves.
     labels = edges.select(F.col("u").alias("id"), F.col("v").alias("cluster_id"))
-    out = (
-        nodes.join(labels, "id", "left")
-        .select("id", F.coalesce("cluster_id", "id").alias("cluster_id"))
-        .localCheckpoint(eager=True)
+    out, m_out = observed_checkpoint(
+        nodes.join(labels, "id", "left").select(
+            "id", F.coalesce("cluster_id", "id").alias("cluster_id")
+        ),
+        row_count(),
     )
     # Checksum equality proves the composite map repeated itself, not that
     # the result is a star forest. Certify the labeling directly: every
     # ORIGINAL edge's endpoints must share a cluster_id (one bounded probe
-    # job — the cost of one extra round, run once).
+    # job — the cost of one extra round, run once). A labeling that fits
+    # is broadcast up front (``fits_broadcast``); left to AQE, the build
+    # side of each join depends on which shuffle stage finishes first.
+    small = fits_broadcast(edges0.sparkSession, m_out["n"])
+
+    def label_of(end: str) -> DataFrame:
+        side = out.withColumnRenamed("id", end)
+        return F.broadcast(side) if small else side
+
     bad = (
-        edges0.join(out.withColumnRenamed("id", "u"), "u")
+        edges0.join(label_of("u"), "u")
         .withColumnRenamed("cluster_id", "ca")
-        .join(out.withColumnRenamed("id", "v"), "v")
+        .join(label_of("v"), "v")
         .filter(F.col("ca") != F.col("cluster_id"))
         .limit(1)
         .count()

@@ -123,13 +123,19 @@ def set_loop_shuffle_partitions(spark: SparkSession, parts: int) -> None:
 # the broadcast rule (fits_broadcast).
 _EDGE_ROW_BYTES = 32
 
+# Data volume per loop partition (guide §2.2: the ~hundred-MB range).
+_PARTITION_BYTES = 64 << 20
 
-def loop_partitions(
-    n_rows: int,
-    bytes_per_row: int,
-    session_parts: int,
-    target_bytes: int = 64 << 20,
-) -> int:
+
+def byte_partitions(n_rows: int, bytes_per_row: int = _EDGE_ROW_BYTES) -> int:
+    """Partitions that hold ``n_rows`` rows at ``_PARTITION_BYTES`` each
+    (at least 1), with no parallelism floor: the width of
+    ``connected_components``' per-partition contraction, where fewer,
+    fuller partitions contract more of the graph."""
+    return max(1, -(-n_rows * bytes_per_row // _PARTITION_BYTES))
+
+
+def loop_partitions(n_rows: int, bytes_per_row: int, session_parts: int) -> int:
     """Loop shuffle width from estimated DATA VOLUME (guide §2.2: shuffle
     partitions in the ~hundred-MB range), capped at the session width.
 
@@ -150,7 +156,7 @@ def loop_partitions(
     """
     if n_rows <= 0:
         return 1
-    by_bytes = -(-n_rows * bytes_per_row // target_bytes)
+    by_bytes = byte_partitions(n_rows, bytes_per_row)
     return max(1, min(session_parts, max(by_bytes, min(session_parts, 8))))
 
 

@@ -151,10 +151,9 @@ def cosine_pairs(
     :func:`hyperplane_pairs` bucketing first (only same-bucket pairs
     scored); this operator is the precision stage / small-set oracle.
 
-    Guarded the same way as ``dup_clusters``' driver path: the all-pairs
-    self-join is quadratic, so anything past ``max_rows`` (default 100k →
-    ~5·10⁹ pairs) fails LOUDLY instead of launching a cartesian job that can
-    never finish on a big table. The input is pinned with a lazy
+    Size-gated: the all-pairs self-join is quadratic, so anything past
+    ``max_rows`` (default 100k → ~5·10⁹ pairs) fails LOUDLY instead of
+    launching a cartesian job that can never finish on a big table. The input is pinned with a lazy
     ``localCheckpoint`` before counting so the gate and the join read the
     SAME materialization — a derived/non-deterministic upstream cannot grow
     between the count and the join, and the upstream pipeline is not

@@ -20,14 +20,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 _OUT_SCHEMA = StructType(
     [
@@ -90,98 +83,44 @@ def running_user_stats(events: DataFrame) -> DataFrame:
     )
 
 
-_DISTINCT_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_distinct_types", LongType()),
-    ]
-)
-
-_DISTINCT_STATE_SCHEMA = StructType(
-    [StructField("seen", ArrayType(StringType()))]
-)
-
-_DISTINCT_STATE_CAP = 100_000
-
-
-def _update_distinct(key, pdfs: Iterable[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    seen = set(state.get[0]) if state.exists else set()
-    for pdf in pdfs:
-        seen.update(pdf["event_type"].dropna().astype(str))
-    if len(seen) > _DISTINCT_STATE_CAP:
-        raise ValueError(
-            f"running_user_distinct: per-key distinct state exceeded "
-            f"{_DISTINCT_STATE_CAP} values — this exact-set operator is for "
-            "bounded domains; switch to the HLL stream fold for unbounded ones."
-        )
-    state.update((sorted(seen),))
-    yield pd.DataFrame({"user_id": [key[0]], "n_distinct_types": [len(seen)]})
-
-
-def running_user_distinct(events: DataFrame, state_backend: str = "builtin") -> DataFrame:
+def running_user_distinct(events: DataFrame) -> DataFrame:
     """Per-user running EXACT distinct event-type count on a stream: the
     streaming twin of the batch ``user_running_distinct_types`` windows
     (there, first-occurrence flags; here, state persisted across
-    micro-batches, one updated snapshot row per touched user per batch).
+    micro-batches, one updated count row per user whose distinct set grew
+    in the batch).
 
-    ``state_backend='builtin'`` (default) expresses the semantics as a
-    composition of Spark's own stateful operators — streaming
+    A composition of Spark's own stateful operators — streaming
     ``dropDuplicates(user, type)`` feeding a stateful count — so state
     lives JVM-side in the state store (one compact key per distinct
     (user, type) pair, RocksDB-spillable) and NO row crosses into Python.
-    This is the 100 TB path: the r9 rehearsal measured the Python
-    seen-set form at exponent 0.83 (per-key Python invocation + array
-    state round-trip scale with the key count); the built-in composition
-    is the same cost family as the engine's other JVM stream aggs
-    (exponent ~0.1). Per-batch emission differs from the seen-set form:
-    only first-occurrence rows survive the dedup, so a user's count row
-    is (re)emitted exactly when their seen-set GROWS, while the
-    python_set form re-emits an unchanged snapshot for every touched
-    user. The counts emitted are identical, and any final-snapshot
-    reduction (max per user — monotone counts) agrees between backends;
-    consumers of per-batch update traffic should expect the sparser
-    emission here.
+    The r9 rehearsal measured a Python seen-set form
+    (``applyInPandasWithState``) at exponent 0.83 (per-key Python
+    invocation + array state round-trip scale with the key count); this
+    composition is the same cost family as the engine's other JVM stream
+    aggs (exponent ~0.1). Only first-occurrence rows survive the dedup, so
+    a user's count row is (re)emitted exactly when their seen-set GROWS;
+    counts are monotone, so the final snapshot is the max per user.
+    ``running_user_stats`` above is the ``applyInPandasWithState``
+    template for per-key state machines the built-ins cannot compose.
 
-    ``state_backend='python_set'`` keeps the ``applyInPandasWithState``
-    seen-set form: the template for per-key state machines Spark's
-    built-ins CANNOT compose (this one they can — kept for parity tests
-    and as the pattern to copy for genuinely custom state). Its state
-    guard raises at 100k values per key; above bounded domains the
-    mergeable-sketch path (``stream_hll_registers``) is the answer.
-
-    On a batch DataFrame both backends degenerate to ``countDistinct`` —
-    the unified batch/stream testing pattern. NULL event types never
-    count (``countDistinct`` semantics) on any path — but a user whose
-    types are ALL NULL still emits a count-0 row on every path (the
-    builtin dedup keeps one NULL row per user rather than filtering,
-    precisely so that user isn't silently dropped; ``count(event_type)``
-    then skips the NULLs). No watermark is involved: an all-time exact
-    distinct keeps one state entry per distinct pair by definition, on
-    either backend.
+    On a batch DataFrame this degenerates to ``countDistinct`` — the
+    unified batch/stream testing pattern. NULL event types never count
+    (``countDistinct`` semantics), but a user whose types are ALL NULL
+    still emits a count-0 row (the dedup keeps one NULL row per user
+    rather than filtering, precisely so that user isn't silently dropped;
+    ``count(event_type)`` then skips the NULLs). No watermark is
+    involved: an all-time exact distinct keeps one state entry per
+    distinct pair by definition.
     """
-    if state_backend not in ("builtin", "python_set"):
-        raise ValueError(
-            f"running_user_distinct: unknown state_backend {state_backend!r} "
-            "(expected 'builtin' or 'python_set')"
-        )
-    if not events.isStreaming:
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
+    if not events.isStreaming:
         return events.groupBy("user_id").agg(
             F.count_distinct("event_type").cast("long").alias("n_distinct_types")
         )
-    if state_backend == "builtin":
-        from pyspark.sql import functions as F
-
-        return (
-            events.dropDuplicates(["user_id", "event_type"])
-            .groupBy("user_id")
-            .agg(F.count("event_type").cast("long").alias("n_distinct_types"))
-        )
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_distinct,
-        outputStructType=_DISTINCT_OUT_SCHEMA,
-        stateStructType=_DISTINCT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return (
+        events.dropDuplicates(["user_id", "event_type"])
+        .groupBy("user_id")
+        .agg(F.count("event_type").cast("long").alias("n_distinct_types"))
     )

@@ -2153,9 +2153,10 @@ def q_vocab_token_class(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster resolution: LSH candidate pairs → connected
-    components (driver union-find under the edge threshold, alternating-star
-    contraction above it — operators/graph.py). The oracle computes the
-    same components with a recursive reachability CTE."""
+    components (a union-find inside each partition of the pairs, then
+    alternating-star rounds across partitions — operators/graph.py). The
+    oracle computes the same components with a recursive reachability
+    CTE."""
     from wicsmmiretl_spark.operators.dedup import (
         dup_clusters,
         lsh_candidate_pairs,
@@ -9613,8 +9614,7 @@ def q_streaming_user_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming exact distinct: per-user running distinct
     event-type count as a composition of Spark's own stateful operators
     (streaming dropDuplicates(user, type) → stateful count, update mode —
-    all-JVM state; the applyInPandasWithState seen-set form remains as
-    state_backend='python_set'), reduced to the final snapshot per user
+    all-JVM state), reduced to the final snapshot per user
     (the count is monotone across batches). The streaming twin of
     user_running_distinct_types' batch windows; the oracle is the batch
     countDistinct (streaming/stateful.py:running_user_distinct)."""
