@@ -159,14 +159,6 @@ def test_simhash_similar_docs_close(spark):
     assert all(0 <= s < 2**32 for s in sigs.values())
 
 
-def test_cosine_topk_builtin_vs_numpy(spark, sf_dir):
-    emb = load_table(spark, "embeddings", sf_dir)
-    q = emb.filter(F.col("vec_id") < 5)
-    a = sorted(tuple(r) for r in cosine_topk(emb, q, k=3, method="builtin").collect())
-    b = sorted(tuple(r) for r in cosine_topk(emb, q, k=3, method="numpy").collect())
-    assert a == b
-
-
 def test_cosine_topk_self_is_excluded_and_sorted(spark, sf_dir):
     emb = load_table(spark, "embeddings", sf_dir)
     out = cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=5).collect()
@@ -187,6 +179,62 @@ def test_hyperplane_lsh_subset_of_bruteforce_space(spark, sf_dir):
     buckets = {r.vec_id: r.bucket for r in sig.collect()}
     for r in rows:
         assert buckets[r.neighbor_id] == buckets[r.query_id]
+
+
+def test_hyperplane_duplicated_id_pairs_only_under_its_own_buckets(spark):
+    """Each row of a duplicated id pairs only under its own vector's
+    bucket. Program fix: while the bucket was joined back to the vectors
+    on the id, every vector of id 1 took both of its buckets and scored
+    cross-bucket pairs, (1, 2, -0.980581) and (1, 3, -0.980581), and
+    query 2's top-k held (2, 1, -0.980581)."""
+    from wicsmmiretl_spark.operators.similarity import hyperplane_pairs
+
+    a, b = [1.0, 0.0, 0.0, 0.0], [-1.0, 0.2, 0.0, 0.0]
+    emb = spark.createDataFrame(
+        [(1, a), (1, b), (2, a), (3, b)], "vec_id long, embedding array<double>"
+    )
+    pairs = sorted(tuple(r) for r in hyperplane_pairs(emb, bits=2, dim=4).collect())
+    assert pairs == [(1, 2, 1.0), (1, 3, 1.0)]
+    q = emb.filter(F.col("vec_id") == 2)
+    top = [tuple(r) for r in hyperplane_lsh_topk(emb, q, bits=2, dim=4).collect()]
+    assert top == [(2, 1, 1.0)]
+
+
+# Build + noop-write jobs at sf0.001 (8 shuffle partitions) of every suite
+# query that scores float cosines through the similarity kernel.
+_VECTOR_JOBS = {
+    "hyperplane_lsh_pairs": 5,
+    "cosine_topk": 5,
+    "embedding_near_dup": 5,
+    "embedding_hard_negatives": 5,
+    "knn_classify": 6,
+    "ivf_topk": 8,
+    "embedding_pair_profile": 9,
+    "sq8_adc_topk": 12,
+    "ivf_topk_trained": 16,
+    "pq_adc_topk": 17,
+    "hybrid_rank_fusion": 18,
+    "kmeans_silhouette": 19,
+    "semantic_dedup_keep": 20,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_VECTOR_JOBS))
+def test_vector_query_job_count(spark, jobs_and_plans, sf_dir, name):
+    """Each query's plan shape, pinned by its job count: an extra join,
+    exchange or probe adds a job (``hyperplane_lsh_pairs`` took 7 while its
+    bucket came from a self-join back to the vectors). AQE can race an
+    exchange reuse, so a miss is re-measured twice, as in
+    ``test_loop_operator_job_count``."""
+    from wicsmmiretl_spark.suite import QUERIES
+
+    def run():
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    counts = []
+    while len(counts) < 3 and _VECTOR_JOBS[name] not in counts:
+        counts.append(jobs_and_plans(run)[0])
+    assert _VECTOR_JOBS[name] in counts, counts
 
 
 def test_hyperplane_dim_overprovision_matches_probe(spark, sf_dir):
@@ -1159,22 +1207,21 @@ class TestSq8:
         with _pytest.raises(ValueError, match="dimensions"):
             sq8_train(emb, dim=16)
 
-    def test_rerank_output_matches_exact_on_shortlist(self, spark):
-        """With rerank >= corpus size the output IS the exact top-k."""
+    @pytest.mark.parametrize("topk", ["sq8_topk", "pq_topk"])
+    def test_rerank_output_matches_exact_on_shortlist(self, spark, topk):
+        """With rerank >= corpus size the output IS the exact top-k, rows
+        and cosines: both quantizers share one exact re-rank."""
         import random as rnd
 
-        from wicsmmiretl_spark.operators.similarity import cosine_topk, sq8_topk
+        from wicsmmiretl_spark.operators import similarity
 
         rnd.seed(9)
         rows = [(i, [rnd.uniform(-1.0, 1.0) for _ in range(8)]) for i in range(30)]
         emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         q = emb.filter("vec_id < 3")
-        exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, q, k=4).collect()}
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in sq8_topk(emb, k=4, dim=8, query_max_id=3, rerank=40).collect()
-        }
-        assert got == exact
+        exact = sorted(tuple(r) for r in similarity.cosine_topk(emb, q, k=4).collect())
+        ranked = getattr(similarity, topk)(emb, k=4, dim=8, query_max_id=3, rerank=40)
+        assert sorted(tuple(r) for r in ranked.collect()) == exact
 
 
 class TestMmr:

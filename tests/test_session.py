@@ -1,8 +1,15 @@
 """Session factory contract (session.py): a second ``get_spark`` call keeps
-the live session's confs, and the codegen cache holds the working set of a
-repeated pass so the pass compiles no class twice."""
+the live session's confs, the codegen cache holds the working set of a
+repeated pass so the pass compiles no class twice, and Python workers
+import the package wherever the driver was started."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
 
 from wicsmmiretl_spark.session import get_spark
 
@@ -46,3 +53,44 @@ def test_repeated_pass_compiles_nothing(spark, sf_dir):
         one_round()
         grown.append(compiles.getCount() - before)
     assert 0 in grown, grown
+
+
+def test_workers_import_the_package_outside_the_repo_root(tmp_path):
+    """``apply_image_transformations``' closure pickles ``RawGrid`` and the
+    transformation classes by reference, so each Python worker imports the
+    package. A driver started from another directory with ``PYTHONPATH``
+    unset (in a fresh JVM, since the conf applies at session creation) must
+    still run it: the workers failed with ``ModuleNotFoundError`` before
+    ``get_spark`` set ``spark.executorEnv.PYTHONPATH``."""
+    repo = Path(__file__).resolve().parent.parent
+    script = tmp_path / "driver.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {str(repo)!r})
+            import numpy as np
+            from wicsmmiretl_spark.multimodal.images import (
+                RawGrid, ResizeTransformation, WebPTransformation, apply_image_transformations,
+            )
+            from wicsmmiretl_spark.session import get_spark
+
+            spark = get_spark("worker-path")
+            img = RawGrid.encode(np.zeros((8, 8, 3), dtype=np.uint8))
+            df = spark.createDataFrame([(1, img, "png")], "id long, content binary, format string")
+            chain = [ResizeTransformation(4, 4), WebPTransformation()]
+            print("FORMAT=" + apply_image_transformations(df, chain).first().format)
+            """
+        )
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    run = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert "FORMAT=webp" in run.stdout, run.stderr[-3000:]

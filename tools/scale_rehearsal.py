@@ -26,6 +26,12 @@ runs per query per scale. The scaling exponent is
 ``log(t10 / t1) / log(10)`` — 1.0 is linear, <1 is sublinear (fixed costs
 amortizing), >1.1 flags a superlinear cliff to investigate.
 
+Both timed takes are printed, not only the min, with the Spark jobs each
+take ran (counted by job group). On a shared host one query's take can move
+by half between launches; the job counts do not depend on host load, so a
+per-query time bound is judged against the spread of the takes and the
+counts together.
+
 Usage: SPARK_GRAFT_CPUS=32 python tools/scale_rehearsal.py
 """
 
@@ -507,15 +513,31 @@ def synthesize(spark: SparkSession, out_dir: str) -> None:
             shutil.copyfile(src, dst)
 
 
-def time_query(spark: SparkSession, name: str, sf_dir: str) -> float:
+def time_query(spark: SparkSession, name: str, sf_dir: str) -> list[tuple[float, int]]:
+    """``(seconds, jobs)`` of two timed build + noop-write takes after a
+    warm one."""
     fn = QUERIES[name]
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-    best = float("inf")
-    for _ in range(2):
+    sc = spark.sparkContext
+    takes = []
+    for i in range(2):
+        group = f"rehearsal-{name}-{sf_dir}-{i}"
+        sc.setJobGroup(group, group)
         t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return best
+        try:
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setJobGroup(None, None)
+        seconds = time.perf_counter() - t0
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        takes.append((seconds, len(sc.statusTracker().getJobIdsForGroup(group))))
+    return takes
+
+
+def _takes(takes: list[tuple[float, int]]) -> str:
+    """``[s, s]s jobs=[n, n]`` — both takes of one query at one scale."""
+    secs = ", ".join(f"{t:.2f}" for t, _ in takes)
+    return f"[{secs}]s jobs={[n for _, n in takes]}"
 
 
 def main() -> None:
@@ -601,9 +623,9 @@ def main() -> None:
         # measurements.
         phase = "1x baseline"
         try:
-            t1 = time_query(spark, name, BASE_SF)
+            takes1 = time_query(spark, name, BASE_SF)
             phase = f"{COPIES}x-slice"
-            t10 = time_query(spark, name, out_dir)
+            takes10 = time_query(spark, name, out_dir)
         except Exception as exc:  # noqa: BLE001 — record and keep measuring
             print(
                 f"{name:28s} FAILED at {phase} run: "
@@ -611,17 +633,22 @@ def main() -> None:
                 flush=True,
             )
             continue
+        t1, t10 = min(takes1)[0], min(takes10)[0]
         exp = math.log(t10 / t1) / math.log(COPIES)
-        rows.append((name, t1, t10, t10 / t1, exp))
+        rows.append((name, t1, t10, t10 / t1, exp, _takes(takes1), _takes(takes10)))
         print(
-            f"{name:28s} 1x={t1:6.2f}s {COPIES}x={t10:6.2f}s ratio={t10 / t1:5.2f} exp={exp:5.2f}",
+            f"{name:28s} 1x={t1:6.2f}s {COPIES}x={t10:6.2f}s ratio={t10 / t1:5.2f} exp={exp:5.2f}"
+            f"  takes 1x={_takes(takes1)} {COPIES}x={_takes(takes10)}",
             flush=True,
         )
 
-    print(f"\n| query | t(1x) s | t({COPIES}x) s | ratio | exponent |")
-    print("|---|---|---|---|---|")
-    for name, t1, t10, ratio, exp in rows:
-        print(f"| {name} | {t1:.2f} | {t10:.2f} | {ratio:.2f} | {exp:.2f} |")
+    print(
+        f"\n| query | t(1x) s | t({COPIES}x) s | ratio | exponent "
+        f"| 1x takes, jobs | {COPIES}x takes, jobs |"
+    )
+    print("|---|---|---|---|---|---|---|")
+    for name, t1, t10, ratio, exp, takes1, takes10 in rows:
+        print(f"| {name} | {t1:.2f} | {t10:.2f} | {ratio:.2f} | {exp:.2f} | {takes1} | {takes10} |")
     if not reuse:
         shutil.rmtree(out_dir, ignore_errors=True)
 

@@ -849,7 +849,15 @@ def semantic_dedup(
     (int), ``keep`` (boolean) — one row per input vector; downstream the
     kept set is ``filter(keep)``.
     """
-    from wicsmmiretl_spark.operators.similarity import kmeans_train, kmeans_two_level
+    from wicsmmiretl_spark.operators.similarity import (
+        _ab,
+        _argmin_cands,
+        _cent_array,
+        _cos6,
+        _vec_rows,
+        kmeans_train,
+        kmeans_two_level,
+    )
 
     if strategy not in ("flat", "hierarchical", "auto"):
         raise ValueError(
@@ -887,8 +895,6 @@ def semantic_dedup(
             embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed, n_rows=n
         ).localCheckpoint(eager=False)
     else:
-        from wicsmmiretl_spark.operators.similarity import _argmin_cands, _cent_array, _vec_rows
-
         cent = kmeans_train(
             embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed
         )
@@ -907,21 +913,12 @@ def semantic_dedup(
             # this one assignment — pin it so the broadcast-argmax runs once.
             .localCheckpoint(eager=False)
         )
-    a = assigned.select(
-        F.col("cell"), F.col(id_col).alias("_ida"), F.col("v").alias("va"), F.col("nv").alias("na")
-    )
-    b = assigned.select(
-        F.col("cell"), F.col(id_col).alias("_idb"), F.col("v").alias("vb"), F.col("nv").alias("nb")
-    )
-    pdot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    a, b = _ab(assigned, id_col, "cell")
     dropped = (
         a.join(b, ["cell"])
-        .filter(F.col("_ida") < F.col("_idb"))
-        .withColumn("cos", F.round(pdot / (F.col("na") * F.col("nb")), 6))
-        .filter(F.col("cos") >= tau)
-        .select(F.col("_idb").alias(id_col))
+        .filter(F.col("id_a") < F.col("id_b"))
+        .filter(_cos6("va", "na", "vb", "nb") >= tau)
+        .select(F.col("id_b").alias(id_col))
         .distinct()
         .withColumn("_dropped", F.lit(True))
     )

@@ -1,13 +1,17 @@
 """Similarity search over embedding columns (north-star).
 
+Every exact float cosine is one kernel: ``_cos6`` over the per-vector
+norms of ``_vec_rows``, with ``_pair_cosines`` for (query, candidate)
+joins and one ``_rerank`` for the quantized scorers. The scaled-integer
+ADC/MMR scores and the PQ look-up-table dots are separate, engine-exact
+contracts.
+
 Two paths:
 
 * ``cosine_topk`` (baseline, exact): broadcast the (small) query set, score
-  every (query, candidate) pair, keep top-k per query. The JVM path uses
-  higher-order array functions (codegen'd, no Python); the numpy path moves
-  each Arrow batch through one matrix multiply and keeps only the per-batch
-  top-k, so the shuffle carries k rows per (query, batch) instead of the full
-  n×q score matrix — that's the 100 TB-safe shape.
+  every (query, candidate) pair with JVM higher-order array functions
+  (codegen'd, no Python), and prune to k per (query, input partition)
+  before the final per-query window.
 * ``hyperplane_lsh_topk`` (scale path, approximate): sign-random-projection
   buckets; only same-bucket pairs are scored. Deterministic hyperplanes
   derived from a seed so results are reproducible cluster-wide.
@@ -26,26 +30,9 @@ embeddings) low recall is expected and not a defect: true neighbors sit at
 from __future__ import annotations
 
 import math
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
-
-
-def _cosine_expr(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
 
 
 def cosine_topk(
@@ -54,7 +41,6 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "builtin",
 ) -> DataFrame:
     """Exact brute-force cosine top-k: for each query vector, the k nearest
     candidates (self-matches excluded).
@@ -62,80 +48,9 @@ def cosine_topk(
     Output: query_id, neighbor_id, cosine (rounded 6dp). ``queries`` must be
     broadcast-small (the usual ANN-query shape); candidates stream.
     """
-    if method == "numpy":
-        return _cosine_topk_numpy(embeddings, queries, k, id_col, vec_col)
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-    )
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(_cosine_expr(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    # Two-stage top-k (sampling.cap_per_group): stage 1 prunes to k per
-    # (query, input partition) — the global top-k is necessarily a subset of
-    # the per-partition top-ks, so the result is partitioning-INVARIANT.
-    # Without it the single window hashes all n×q scored rows into only |q|
-    # reducers (a parallelism ceiling and a straggler at scale).
-    from wicsmmiretl_spark.operators.sampling import cap_per_group
-
-    return cap_per_group(
-        scored, "query_id", k, [F.desc("cosine"), F.asc("neighbor_id")]
-    ).select("query_id", "neighbor_id", "cosine")
-
-
-def _cosine_topk_numpy(
-    embeddings: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """Arrow-batched matrix-multiply scoring with per-batch top-k pruning."""
-    import numpy as np
-
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in qrows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            scores = q_mat @ mat.T  # (q, batch)
-            out = []
-            for qi in range(len(q_ids)):
-                row = scores[qi]
-                mask = ids != q_ids[qi]
-                cand = np.where(mask)[0]
-                top = cand[np.argsort(-row[cand], kind="stable")[:k]]
-                out.append(
-                    pd.DataFrame(
-                        {"query_id": q_ids[qi], "neighbor_id": ids[top], "cosine": np.round(row[top], 6)}
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(columns=["query_id", "neighbor_id", "cosine"])
-
-    partial = embeddings.select(id_col, vec_col).mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    c = _vec_rows(embeddings, id_col, vec_col, names=_CAND)
+    q = _vec_rows(queries, id_col, vec_col, names=_QUERY)
+    return _topk(_pair_cosines(c.crossJoin(F.broadcast(q))), k)
 
 
 def cosine_pairs(
@@ -169,15 +84,11 @@ def cosine_pairs(
             "optionally feeding its candidate pairs back through an exact verify, "
             "or raise max_rows explicitly if you really mean it."
         )
-    v = _vec_rows(embeddings, id_col, vec_col)
-    a = v.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("nv").alias("na"))
-    b = v.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("nv").alias("nb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+    a, b = _ab(_vec_rows(embeddings, id_col, vec_col), id_col)
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 6))
+        .select("id_a", "id_b", _cos6("va", "na", "vb", "nb").alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )
 
 
@@ -203,6 +114,13 @@ def hyperplane_signature(
     ``dim=None`` the width is probed from the first row — an eager Spark
     job at plan-build time, the explicit fallback, not the default path.
     """
+    return df.select(F.col(id_col), _sign_bucket(df, vec_col, bits, seed, dim).alias("bucket"))
+
+
+def _sign_bucket(df: DataFrame, vec_col: str, bits: int, seed: int, dim: int | None):
+    """:func:`hyperplane_signature`'s bucket as a Column over ``df``'s
+    ``vec_col``, so a caller can compute it in the same projection as
+    the vectors it scores."""
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
     # ±1 hyperplanes from a hash of (seed, bit, dim index): cheap and fixed.
@@ -245,7 +163,7 @@ def hyperplane_signature(
             F.coalesce(F.size(F.col(vec_col)).cast("string"), F.lit("NULL")),
         ),
     )
-    return df.select(F.col(id_col), F.when(guard.isNull(), sig).alias("bucket"))
+    return F.when(guard.isNull(), sig)
 
 
 def derived_lsh_bits(n: int, target_bucket: int, max_bits: int = 30) -> int:
@@ -293,24 +211,19 @@ def hyperplane_pairs(
     non-trivial plan (not a bare table scan) should persist/localCheckpoint
     it first.
 
+    The bucket is a column of the vector rows, so each row is paired
+    only under its own bucket, a duplicated id included.
+
     Output: id_a, id_b, cosine (rounded 6dp).
     """
     if target_bucket is not None:
         bits = derived_lsh_bits(embeddings.count(), target_bucket)
-    sig = hyperplane_signature(embeddings, id_col, vec_col, bits, seed, dim=dim)
-    v = _vec_rows(embeddings, id_col, vec_col).join(sig, id_col)
-    a = v.select(
-        F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("nv").alias("na"), "bucket"
-    )
-    b = v.select(
-        F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("nv").alias("nb"), "bucket"
-    )
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+    bucket = _sign_bucket(embeddings, vec_col, bits, seed, dim).alias("bucket")
+    a, b = _ab(_vec_rows(embeddings, id_col, vec_col, bucket), id_col, "bucket")
     return (
         a.join(b, ["bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 6))
-        .select("id_a", "id_b", "cosine")
+        .select("id_a", "id_b", _cos6("va", "na", "vb", "nb").alias("cosine"))
     )
 
 
@@ -330,12 +243,108 @@ def _l2_norm(col):
     return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def _vec_rows(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """``(id_col, v, nv)``: the embedding as a double array and its norm."""
+# Column names of the two sides of a (query, candidate) scoring join:
+# (id, vector, norm), as ``_vec_rows(..., names=...)`` emits them.
+_QUERY = ("query_id", "qv", "nq")
+_CAND = ("neighbor_id", "cv", "nc")
+
+
+def _vec_rows(
+    df: DataFrame, id_col: str, vec_col: str, *keep, names=("", "v", "nv")
+) -> DataFrame:
+    """``(id, *keep, v, nv)``: the embedding as a double array and its
+    norm, computed once per row, with the ``keep`` columns (names or
+    Columns) carried along. ``names`` renames the id (``""`` keeps
+    ``id_col``), vector and norm columns — ``_QUERY``/``_CAND`` for the
+    two sides of a scoring join."""
+    i, v, nv = names
     return df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nv", _l2_norm(F.col("v")))
+        F.col(id_col).alias(i or id_col),
+        *keep,
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(v),
+    ).withColumn(nv, _l2_norm(F.col(v)))
+
+
+def _cos6(a, na, b, nb):
+    """``round(<a, b> / (na·nb), 6)``: the float cosine of this package,
+    over vectors ``a``, ``b`` and their :func:`_l2_norm` norms (column
+    names or Columns). IEEE products commute, so the operand order of
+    either the dot or the norm product never changes the double."""
+    a, na, b, nb = (F.col(c) if isinstance(c, str) else c for c in (a, na, b, nb))
+    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+    return F.round(dot / (na * nb), 6)
+
+
+def _pair_cosines(pairs: DataFrame, *keep: str) -> DataFrame:
+    """``(query_id, neighbor_id, *keep, cosine)`` of joined ``_QUERY`` and
+    ``_CAND`` rows, self-matches excluded."""
+    return pairs.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id", "neighbor_id", *keep, _cos6("qv", "nq", "cv", "nc").alias("cosine")
+    )
+
+
+def _ab(v: DataFrame, id_col: str, *keep: str) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a self-join over ``_vec_rows`` output:
+    ``(*keep, id_a, va, na)`` and ``(*keep, id_b, vb, nb)``; a pair
+    scores ``_cos6("va", "na", "vb", "nb")``."""
+    return tuple(
+        v.select(
+            *keep, F.col(id_col).alias(f"id_{s}"), F.col("v").alias(f"v{s}"), F.col("nv").alias(f"n{s}")
+        )
+        for s in "ab"
+    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The k best rows per query by (cosine desc, neighbor_id asc).
+
+    Two-stage top-k (sampling.cap_per_group): stage 1 prunes to k per
+    (query, input partition) — the global top-k is necessarily a subset
+    of the per-partition top-ks, so the result is partitioning-INVARIANT.
+    Without it the single window hashes every scored row into only |q|
+    reducers (a parallelism ceiling and a straggler at scale)."""
+    from wicsmmiretl_spark.operators.sampling import cap_per_group
+
+    return cap_per_group(
+        scored, "query_id", k, [F.desc("cosine"), F.asc("neighbor_id")]
+    ).select(*scored.columns)
+
+
+def _rerank(
+    scored: DataFrame,
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rerank: int | None,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Top-k of a quantized ``(query_id, neighbor_id, adc_cosine)``
+    ranking. With ``rerank=r`` the ADC top-r shortlist is re-scored with
+    exact cosines and ``k`` kept per query. The shortlist is |q|·r rows,
+    so it is broadcast against the vector table: the fetch is a map-side
+    semi-probe, not a shuffle of the corpus, and only shortlisted vectors
+    are cast and normed."""
+    from wicsmmiretl_spark.operators.sampling import cap_per_group
+
+    shortlist = k if rerank is None else rerank
+    top = cap_per_group(
+        scored, "query_id", shortlist, [F.desc("adc_cosine"), F.asc("neighbor_id")]
+    )
+    if rerank is None:
+        return top
+    short = top.select(F.col("neighbor_id").alias(id_col), "query_id")
+    c = _vec_rows(
+        embeddings.join(F.broadcast(short), id_col), id_col, vec_col, "query_id", names=_CAND
+    )
+    q = _vec_rows(queries, id_col, vec_col, names=_QUERY)
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        _pair_cosines(c.join(F.broadcast(q), "query_id"))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn")
+    )
 
 
 def _collect_cents(rows, key_cols: list):
@@ -396,17 +405,7 @@ def _argmin_cands(arr: str = "cents", key: str = "cell"):
     return F.transform(
         F.col(arr),
         lambda c: F.struct(
-            (
-                -F.round(
-                    F.aggregate(
-                        F.zip_with("v", c["cv"], lambda x, y: x * y),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                    / (F.col("nv") * c["nc"]),
-                    6,
-                )
-            ).alias("_negc"),
+            (-_cos6("v", "nv", c["cv"], c["nc"])).alias("_negc"),
             c[key].alias(key),
         ),
     )
@@ -801,8 +800,8 @@ def ivf_topk(
     vc = v.crossJoin(F.broadcast(_cent_array(cent)))
     c = vc.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv2"),
-        F.col("nv").alias("nn"),
+        F.col("v").alias("cv"),
+        F.col("nv").alias("nc"),
         F.array_min(cands)["cell"].alias("cell"),
     )
     # Queries fan out to nprobe cells: the first nprobe entries of the
@@ -821,15 +820,12 @@ def ivf_topk(
         )
         .select("query_id", "qv", "nq", F.col("_cand.cell").alias("cell"))
     )
-    dot = F.aggregate(F.zip_with("qv", "cv2", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
-        q.join(c, ["cell"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(dot / (F.col("nq") * F.col("nn")), 6))
+        _pair_cosines(q.join(c, ["cell"]))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine")
+        .drop("rn")
     )
 
 
@@ -844,34 +840,15 @@ def hyperplane_lsh_topk(
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: score only candidates sharing the query's LSH
-    bucket. Equi-join on bucket → shuffle by bucket, never all-pairs."""
-    sig_c = hyperplane_signature(embeddings, id_col, vec_col, bits, seed, dim=dim)
-    sig_q = hyperplane_signature(queries, id_col, vec_col, bits, seed, dim=dim)
-    c = embeddings.join(sig_c, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv"),
-        "bucket",
-    )
-    q = queries.join(sig_q, id_col).select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-        "bucket",
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(_cosine_expr(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    # Same two-stage top-k as cosine_topk (sampling.cap_per_group): prune
-    # per (query, partition) first, so the final window ranks <= |q|xPxk
-    # rows instead of hashing the whole bucket-joined score set into |q|
-    # reducers.
-    from wicsmmiretl_spark.operators.sampling import cap_per_group
+    bucket. Equi-join on bucket → shuffle by bucket, never all-pairs; the
+    bucket is a column of each side's vector rows."""
 
-    return cap_per_group(
-        scored, "query_id", k, [F.desc("cosine"), F.asc("neighbor_id")]
-    ).select("query_id", "neighbor_id", "cosine")
+    def side(df: DataFrame, names: tuple) -> DataFrame:
+        bucket = _sign_bucket(df, vec_col, bits, seed, dim).alias("bucket")
+        return _vec_rows(df, id_col, vec_col, bucket, names=names)
+
+    c, q = side(embeddings, _CAND), side(queries, _QUERY)
+    return _topk(_pair_cosines(c.join(F.broadcast(q), "bucket")), k)
 
 
 def knn_classify(
@@ -888,9 +865,9 @@ def knn_classify(
     Output: (query_id, pred_label, votes). Ties (equal vote counts) break to
     the smallest label, so the prediction is deterministic cluster-wide.
 
-    Scale design: neighbor search is whatever ``cosine_topk`` does (broadcast
-    queries × streamed candidates, per-batch top-k pruning on the numpy
-    path); the label attach joins k·|Q| rows against the embedding table on
+    Scale design: neighbor search is ``cosine_topk`` (broadcast queries ×
+    streamed candidates, top-k pruned per partition before the final
+    window); the label attach joins k·|Q| rows against the embedding table on
     its key — with |Q| broadcast-small the join output is tiny, and the vote
     count is a partial-aggregated groupBy over k·|Q| rows. Nothing here is
     O(n²) in the corpus.
@@ -1106,40 +1083,7 @@ def pq_topk(
         .select("query_id", "neighbor_id", "adc_cosine")
     )
 
-    from wicsmmiretl_spark.operators.sampling import cap_per_group
-
-    shortlist = rerank if rerank is not None else k
-    top = cap_per_group(
-        scored, "query_id", shortlist, [F.desc("adc_cosine"), F.asc("neighbor_id")]
-    )
-    if rerank is None:
-        return top
-
-    # Exact re-rank: fetch floats ONLY for shortlisted candidates.
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv_full"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv_full"),
-    )
-    # Shortlist is |q|*rerank rows — broadcast it against the full vector
-    # table so the fetch is a map-side semi-probe, not a shuffle of the
-    # corpus.
-    exact = (
-        c.join(F.broadcast(top), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cosine", F.round(_cosine_expr(F.col("qv_full"), F.col("cv_full")), 6))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    order2 = (F.desc("cosine"), F.asc("neighbor_id"))
-    w3 = Window.partitionBy("query_id").orderBy(*order2)
-    return (
-        exact.withColumn("_rn", F.row_number().over(w3))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _rerank(scored, embeddings, queries, k, rerank, id_col, vec_col)
 
 
 def random_projection(
@@ -1471,17 +1415,9 @@ def embedding_pair_profile(
         id_col,
         vec_col,
     ).localCheckpoint(eager=False)
-    a = picked.select(
-        F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("nv").alias("na")
-    )
-    b = picked.select(
-        F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("nv").alias("nb")
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    a, b = _ab(picked, id_col)
     width = 2.0 / bins
-    cos = F.round(dot / (F.col("na") * F.col("nb")), 6)
+    cos = _cos6("va", "na", "vb", "nb")
     bin_e = F.least(
         F.floor((cos + 1.0) / width).cast("int"), F.lit(bins - 1)
     )
@@ -1659,32 +1595,7 @@ def sq8_topk(
         .select("query_id", "neighbor_id", "adc_cosine")
     )
 
-    from wicsmmiretl_spark.operators.sampling import cap_per_group
-
-    shortlist = rerank if rerank is not None else k
-    top = cap_per_group(
-        scored, "query_id", shortlist, [F.desc("adc_cosine"), F.asc("neighbor_id")]
-    )
-    if rerank is None:
-        return top
-
-    c_full = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv_full"),
-    )
-    q_full = q.withColumnRenamed("qv", "qv_full")
-    exact = (
-        c_full.join(F.broadcast(top), "neighbor_id")
-        .join(F.broadcast(q_full), "query_id")
-        .withColumn("cosine", F.round(_cosine_expr(F.col("qv_full"), F.col("cv_full")), 6))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return _rerank(scored, embeddings, queries, k, rerank, id_col, vec_col)
 
 
 def mmr_topk(

@@ -21,11 +21,20 @@ runs on local[*] for tests and on a real cluster unchanged:
   conf: it takes effect only through the builder config ``get_spark``
   applies when it creates the session, not through ``spark.conf.set`` or a
   later ``get_spark`` call on a live session.
+* Python workers find the package. A ``mapInPandas`` closure that
+  cloudpickle ships by reference (``multimodal/images.py`` pickles
+  ``RawGrid`` and the transformation classes that way) makes each worker
+  import ``wicsmmiretl_spark``; the workers do not see the driver's
+  ``sys.path``, so a driver started outside the repo root failed there
+  with ``ModuleNotFoundError``. ``spark.executorEnv.PYTHONPATH`` names the
+  directory holding the package; Spark appends it to the worker's own
+  ``PYTHONPATH`` rather than replacing it.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -50,6 +59,8 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Static: read once when the JVM first generates code (module docstring).
     "spark.sql.codegen.cache.maxEntries": "1000",
+    # Creation-time, like the cache size: where workers import the package.
+    "spark.executorEnv.PYTHONPATH": str(Path(__file__).resolve().parent.parent),
 }
 
 

@@ -9268,32 +9268,25 @@ def q_embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase_negative_samples' random draws are the easy baseline. Same
     broadcast-query brute-force shape as cosine_topk with the label
     anti-predicate pushed into the scan."""
-    from wicsmmiretl_spark.operators.similarity import _cosine_expr
-    from wicsmmiretl_spark.operators.sampling import cap_per_group
+    from wicsmmiretl_spark.operators.similarity import (
+        _CAND,
+        _QUERY,
+        _pair_cosines,
+        _topk,
+        _vec_rows,
+    )
 
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
+    q = _vec_rows(
+        emb.filter(F.col("vec_id") < 8),
+        "vec_id",
+        "embedding",
         F.col("label").alias("qlabel"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("qv"),
+        names=_QUERY,
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("cv"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(
-            (F.col("neighbor_id") != F.col("query_id"))
-            & (F.col("neighbor_label") != F.col("qlabel"))
-        )
-        .withColumn("cosine", F.round(_cosine_expr(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "neighbor_label", "cosine")
-    )
-    return cap_per_group(
-        scored, "query_id", 5, [F.desc("cosine"), F.asc("neighbor_id")]
-    ).select("query_id", "neighbor_id", "neighbor_label", "cosine")
+    c = _vec_rows(emb, "vec_id", "embedding", F.col("label").alias("neighbor_label"), names=_CAND)
+    pairs = c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_label") != F.col("qlabel"))
+    return _topk(_pair_cosines(pairs, "neighbor_label"), 5)
 
 
 @query(
