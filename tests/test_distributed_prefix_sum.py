@@ -271,3 +271,109 @@ class TestPlanShape:
         assert win_lines, f"expected the partition-local cumulative window\n{plan}"
         for line in win_lines:
             assert "_pid" in line, f"un-partitioned window survives:\n{line}"
+
+
+# ---------------------------------------------------------------------------
+# The ordered-prefix family: one range stage, one offsets collect, one
+# delivery choice (pid-indexed literal, or a broadcast join past
+# ``_OFFSETS_ARRAY_MAX`` cells).
+# ---------------------------------------------------------------------------
+
+
+def _family_case(spark, name):
+    """A small input per entry point of the family, run through it."""
+    from wicsmmiretl_spark.operators.aggregates import _ordered_cumsums
+    from wicsmmiretl_spark.operators.sampling import distributed_ntile, stable_index
+    from wicsmmiretl_spark.operators.skyline import skyline_2d
+
+    rng = random.Random(11)
+    rows = [
+        (i, rng.randint(0, 60), rng.randint(-5, 50), (None, "a", "b")[i % 3])
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(rows, "id long, v int, a bigint, g string")
+    levels = df.groupBy("v").agg(
+        F.count("*").alias("n"), F.sum("a").alias("s")
+    )
+    return {
+        "stable_index": lambda: stable_index(df, ["v", "id"]),
+        "distributed_ntile": lambda: distributed_ntile(df, ["v", "id"], 7),
+        "prefix_sum": lambda: distributed_prefix_sum(
+            df, ["id"], ["a", "v"], rank_col="rk"
+        ),
+        "prefix_sum_grouped": lambda: distributed_prefix_sum(
+            df, ["v", "id"], ["a"], rank_col="rk", group_cols=["g"]
+        ),
+        "ordered_cumsums_asc": lambda: _ordered_cumsums(
+            levels, "v", {"n": "cn", "s": "cs"}
+        ),
+        "ordered_cumsums_desc": lambda: _ordered_cumsums(
+            levels, "v", {"n": "cn", "s": "cs"}, descending=True
+        ),
+        "skyline_2d": lambda: skyline_2d(df, "v", "a"),
+    }[name]()
+
+
+_FAMILY = [
+    "stable_index",
+    "distributed_ntile",
+    "prefix_sum",
+    "prefix_sum_grouped",
+    "ordered_cumsums_asc",
+    "ordered_cumsums_desc",
+    "skyline_2d",
+]
+
+
+@pytest.mark.parametrize("name", _FAMILY)
+def test_offsets_fallback_matches_literal(spark, monkeypatch, name):
+    """Past ``_OFFSETS_ARRAY_MAX`` cells the offsets reach the rows by a
+    broadcast join instead of the pid-indexed literal; both deliveries
+    give the same rows, every value compared exactly. Partition
+    coalescing is off so the range stage keeps several partitions."""
+    import wicsmmiretl_spark.operators.sampling as s
+
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        literal = _family_case(spark, name)
+        assert "Join" not in _plan(literal), _plan(literal)
+        want = sorted(literal.collect())
+        monkeypatch.setattr(s, "_OFFSETS_ARRAY_MAX", 1)
+        joined = _family_case(spark, name)
+        assert "BroadcastHashJoin" in _plan(joined), _plan(joined)
+        got = sorted(joined.collect())
+    finally:
+        spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    assert joined.columns == literal.columns
+    assert got == want
+
+
+# Build + noop-write jobs per entry point on the inputs above (8 shuffle
+# partitions): the range stage, the offsets collect and the output (the
+# grouped form adds its cell-count guard; the level and skyline forms
+# their upstream aggregates).
+_FAMILY_JOBS = {
+    "stable_index": 6,
+    "distributed_ntile": 6,
+    "prefix_sum": 6,
+    "prefix_sum_grouped": 9,
+    "ordered_cumsums_asc": 7,
+    "ordered_cumsums_desc": 7,
+    "skyline_2d": 10,
+}
+
+
+@pytest.mark.parametrize("name", _FAMILY)
+def test_offsets_family_job_count(spark, jobs_and_plans, name):
+    """Each entry point's shape, pinned by its job count: a second offsets
+    collect, a guard job or a join adds one. AQE can race an exchange
+    reuse, so a miss is re-measured twice, as in
+    ``test_loop_operator_job_count``."""
+
+    def run():
+        _family_case(spark, name).write.format("noop").mode("overwrite").save()
+
+    counts = []
+    while len(counts) < 3 and _FAMILY_JOBS[name] not in counts:
+        counts.append(jobs_and_plans(run)[0])
+    assert _FAMILY_JOBS[name] in counts, counts

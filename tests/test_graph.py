@@ -762,7 +762,7 @@ _LOOP_JOBS = {
     "connected_components": 14,
     "pagerank": 24,
     "personalized_pagerank": 24,
-    "bfs_levels": 46,
+    "bfs_levels": 44,
     "shortest_paths": 20,
     "hits": 36,
     "kcore": 47,
@@ -800,9 +800,10 @@ def test_loop_operator_job_count(spark, jobs_and_plans, name):
     partitions): a change to the shared loop skeleton must not add one."""
     # AQE submits query stages concurrently, so whether one stage reuses an
     # exchange another is still building can depend on which finishes first
-    # (bfs_levels' first level joins and anti-joins the same checkpoint: 46
-    # jobs, now and then 47). A changed loop shape changes every run, a
-    # race one run, so a mismatch is re-measured twice before it fails.
+    # (bfs_levels' first level joins and anti-joins the same checkpoint; it
+    # read 46 or 47 jobs until that level broadcast its sources up front).
+    # A changed loop shape changes every run, a race one run, so a mismatch
+    # is re-measured twice before it fails.
     counts = []
     while len(counts) < 3 and _LOOP_JOBS[name] not in counts:
         counts.append(jobs_and_plans(lambda: _run_loop_operator(spark, name))[0])

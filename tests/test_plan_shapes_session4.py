@@ -25,20 +25,33 @@ def test_random_projection_is_map_only(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def _window_nodes(node):
+    """Every ``Window`` node of a physical plan tree (JVM ``SparkPlan``)."""
+    if node.nodeName() == "Window":
+        yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _window_nodes(kids.apply(i))
+
+
 def test_skyline_no_cartesian_and_broadcast_offsets(spark, sf_dir):
     p = spark.read.parquet(f"{sf_dir}/part.parquet").select(
         F.col("p_size").alias("x"),
         F.round(F.col("p_retailprice") * 100).cast("bigint").alias("y"),
     )
-    plan = _plan(skyline_2d(p, "x", "y"))
+    out = skyline_2d(p, "x", "y")
+    plan = _plan(out)
+    # The prefix bests reach the rows without a join of any kind, and the
+    # sweep's running best is a partition-local window: a Window with no
+    # partition spec is the one-task global funnel. The per-x min_by pick
+    # sits behind the operator's lazy checkpoint (Scan ExistingRDD), so
+    # its partial-agg shape is pinned by the candidate-stage assertion
+    # below instead.
     assert "CartesianProduct" not in plan, plan
-    # The prefix bests ride a constant-folded pid-indexed literal — no
-    # join of any kind survives ("_prefix" is computed from "_pid", not
-    # joined). The per-x min_by pick sits behind the operator's lazy
-    # checkpoint (Scan ExistingRDD), so its partial-agg shape is pinned
-    # by the candidate-stage assertion below instead.
     assert "Join" not in plan, plan
-    assert "_prefix" in plan, plan
+    windows = list(_window_nodes(out._jdf.queryExecution().sparkPlan()))
+    assert windows, plan
+    assert all(not w.partitionSpec().isEmpty() for w in windows), plan
     cand_plan = _plan(
         p.groupBy("x").agg(F.min_by(F.struct("y"), F.col("y")).alias("_b"))
     )

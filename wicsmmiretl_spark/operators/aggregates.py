@@ -1169,16 +1169,12 @@ def _ordered_cumsums(
     descending: bool = False,
 ) -> DataFrame:
     """Running totals of several weight columns in ``order_col`` order,
-    WITHOUT the single-partition global window Spark would otherwise plan.
-
-    Same two-pass offsets pattern as ``sampling.stable_index``:
-    range-repartition on the order column + local sort, one tiny
-    per-partition sums job (#partitions rows collected, broadcast back),
-    then a partition-LOCAL cumulative window + the broadcast offsets.
-    The heavy data is touched map-side only; global-order information
-    travels entirely in the offsets. ``order_col`` values must be unique
-    per row (callers pass pre-aggregated distinct levels). All weights
-    share the one partitioning/sums job — k running totals cost the same
+    WITHOUT the single-partition global window Spark would otherwise plan:
+    the ordered-prefix kernel ``sampling._range_offsets`` with one sum
+    per weight, then a partition-LOCAL cumulative window plus the
+    exclusive offset. ``order_col`` values must be unique per row
+    (callers pass pre-aggregated distinct levels). All weights share the
+    one range stage and offsets collect — k running totals cost the same
     two passes as one.
 
     ``weights`` maps weight column → output column (running total
@@ -1190,55 +1186,20 @@ def _ordered_cumsums(
     row-grain generalization — tiebreak order columns, per-group resets,
     a global/grouped rank — is ``sampling.distributed_prefix_sum``.
     """
+    from wicsmmiretl_spark.operators.sampling import _range_offsets
+
     direction = F.desc(order_col) if descending else F.asc(order_col)
-    parts = (
-        levels.repartitionByRange(direction)
-        .sortWithinPartitions(direction)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    parts, _ = _range_offsets(
+        levels, [direction], {out: F.sum(w) for w, out in weights.items()}
     )
-    sums = parts.groupBy("_pid").agg(
-        *[F.sum(w).alias(w) for w in weights]
-    ).collect()
-    offsets, acc = {}, {w: 0 for w in weights}
-    for r in sorted(sums, key=lambda r: r["_pid"]):
-        offsets[r["_pid"]] = dict(acc)
-        for w in weights:
-            acc[w] += r[w]
     local = (
         Window.partitionBy("_pid")
         .orderBy(direction)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # Offsets ride a constant-folded pid-indexed literal array (see
-    # sampling._pid_offsets_expr) — no broadcast exchange, no join job;
-    # the broadcast join remains as the many-partitions fallback.
-    from wicsmmiretl_spark.operators.sampling import _pid_offsets_expr
-
-    exprs = [
-        _pid_offsets_expr({pid: off[w] for pid, off in offsets.items()})
-        for w in weights
-    ]
-    if all(e is not None for e in exprs):
-        out = parts
-        for e, (w, out_col) in zip(exprs, weights.items()):
-            out = out.withColumn(out_col, F.sum(w).over(local) + e)
-        return out.drop("_pid")
-    off_df = levels.sparkSession.createDataFrame(
-        [(pid, *[off[w] for w in weights]) for pid, off in offsets.items()],
-        ", ".join(["_pid: int"] + [f"_off_{i}: bigint" for i in range(len(weights))]),
-    )
-    out = parts.join(F.broadcast(off_df), "_pid")
-    for i, (w, out_col) in enumerate(weights.items()):
-        out = out.withColumn(out_col, F.sum(w).over(local) + F.col(f"_off_{i}"))
-    return out.drop("_pid", *[f"_off_{i}" for i in range(len(weights))])
-
-
-def _ordered_cumsum(
-    levels: DataFrame, order_col: str, weight_col: str, out_col: str = "cum"
-) -> DataFrame:
-    """Single-weight form of ``_ordered_cumsums`` (see there)."""
-    return _ordered_cumsums(levels, order_col, {weight_col: out_col})
+    return parts.withColumns(
+        {out: F.sum(w).over(local) + F.col(out) for w, out in weights.items()}
+    ).drop("_pid")
 
 
 def binary_auc(
@@ -1257,8 +1218,8 @@ def binary_auc(
     Distributed shape: ONE groupBy collapses the table to its distinct
     score levels (cnt, pos_cnt per level — partial agg does the heavy
     lifting map-side), then the running rank comes from the offsets-based
-    cumulative sum (``_ordered_cumsum`` — range partition + broadcast
-    offsets, never a single-partition window), then one global agg.
+    cumulative sum (``_ordered_cumsums`` on the ordered-prefix kernel —
+    never a single-partition window), then one global agg.
     Work after the first shuffle is O(distinct scores), not O(rows).
 
     Integer-exactness: with cum = running count through this level and
@@ -1304,7 +1265,7 @@ def binary_auc(
             levels, order_cols=["_s"], sum_cols=["_cnt"], group_cols=list(by)
         ).withColumnRenamed("_cnt_cum", "_cum")
     else:
-        ranked = _ordered_cumsum(levels, "_s", "_cnt", "_cum")
+        ranked = _ordered_cumsums(levels, "_s", {"_cnt": "_cum"})
     agg = ranked.groupBy(*by).agg(
         F.sum("_pos").cast("long").alias("n_pos"),
         (F.sum("_cnt") - F.sum("_pos")).cast("long").alias("n_neg"),
@@ -1367,7 +1328,7 @@ def spearman_corr(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
 
     def two_ranks(col: str, out: str) -> DataFrame:
         lv = rows.groupBy(col).agg(F.count("*").alias("_cnt"))
-        cum = _ordered_cumsum(lv, col, "_cnt", "_cum")
+        cum = _ordered_cumsums(lv, col, {"_cnt": "_cum"})
         return cum.select(
             col, "_cum", (2 * F.col("_cum") - F.col("_cnt") + 1).alias(out)
         )
@@ -1489,7 +1450,7 @@ def quantile_transform(df: DataFrame, value_col: str, out_col: str = "q") -> Dat
         raise ValueError(f"quantile_transform: input already has {out_col!r}")
     present = df.filter(F.col(value_col).isNotNull())
     lv = present.groupBy(value_col).agg(F.count("*").alias("_cnt"))
-    cum = _ordered_cumsum(lv, value_col, "_cnt", "_cum")
+    cum = _ordered_cumsums(lv, value_col, {"_cnt": "_cum"})
     n_df = present.agg(F.count("*").alias("_n"))
     qmap = cum.crossJoin(F.broadcast(n_df)).select(
         value_col,
@@ -1912,7 +1873,7 @@ def weighted_quantiles(
         .groupBy(value_col)
         .agg(F.sum(w).alias("_w"))
     )
-    cum = _ordered_cumsum(levels, value_col, "_w", "cum")
+    cum = _ordered_cumsums(levels, value_col, {"_w": "cum"})
     total = cum.agg(F.max("cum").alias("_total"))
     with_total = cum.crossJoin(F.broadcast(total))
     picks = with_total.agg(
@@ -2366,7 +2327,7 @@ def gini_coefficient(
         .groupBy("_sv")
         .agg(F.count("*").alias("_c"))
     )
-    cum = _ordered_cumsum(levels, "_sv", "_c", "_cum")
+    cum = _ordered_cumsums(levels, "_sv", {"_c": "_cum"})
     tot = cum.agg(
         F.max("_cum").alias("_n"),
         F.sum(F.col("_sv").cast("decimal(38,0)") * F.col("_c")).alias("_sum"),

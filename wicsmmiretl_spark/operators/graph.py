@@ -553,15 +553,20 @@ def bfs_levels(
         .distinct(),
         "src",
     )
-    visited = (
+    visited, m0 = observed_checkpoint(
         sources.select(F.col(id_col).alias("id"))
         .filter(F.col("id").isNotNull())
         .distinct()
         .withColumn("level", F.lit(0))
-        .repartition(loop_parts, "id")
-        .localCheckpoint(eager=True)
+        .repartition(loop_parts, "id"),
+        row_count(),
     )
     frontier = visited
+    # Level 1 joins and anti-joins the same checkpoint (the sources). Left
+    # to AQE, whether the anti-join reuses the join's broadcast depends on
+    # which shuffle stage finishes first; sources that fit are broadcast
+    # up front (``fits_broadcast``), so the level plans the same every run.
+    small = fits_broadcast(edges.sparkSession, m0["n"])
     # r15 NOTE (measured, do not re-try): expanding levels in PAIRS per
     # probe — the kcore r15 batching — cut jobs 39 -> 36 here but timed
     # FLAT-to-worse in an interleaved A/B (min 3.18 vs 2.99 s): like CC,
@@ -570,11 +575,12 @@ def bfs_levels(
     # level disappears while the lazily-pinned odd frontier is consumed
     # three times inside the even level's job. Per-level probing stands.
     for depth in range(1, max_depth + 1):
+        hint = F.broadcast if small and depth == 1 else (lambda d: d)
         nxt, m = observed_checkpoint(
-            frontier.join(e, frontier["id"] == e["src"])
+            hint(frontier).join(e, frontier["id"] == e["src"])
             .select(F.col("dst").alias("id"))
             .distinct()
-            .join(visited, "id", "left_anti")
+            .join(hint(visited), "id", "left_anti")
             .withColumn("level", F.lit(depth))
             .repartition(loop_parts, "id"),
             row_count(),

@@ -14,10 +14,13 @@ partition-index dependent (stable only for a fixed partitioning), while
 
 from __future__ import annotations
 
-from typing import Sequence
+import operator
+from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, IntegerType, StructField, StructType
+from pyspark.storagelevel import StorageLevel
 
 
 def deterministic_shuffle(df: DataFrame, key_cols: Sequence[str], seed: int = 1312) -> DataFrame:
@@ -197,11 +200,11 @@ def quantile_bins(
     a missing feature, not a quantile).
 
     The binning runs through :func:`distributed_ntile` — the two-level
-    range-partitioned form (range exchange + broadcast offsets), NOT a
-    global-sort window — so no single task ever sees the whole table;
-    this is the 100 TB path and the exact oracle in one. For cheaper
-    approximate boundaries, sample-sort upstream and pass the result
-    here unchanged.
+    range-partitioned form (the ordered-prefix kernel
+    :func:`_range_offsets`), NOT a global-sort window — so no single task
+    ever sees the whole table; this is the 100 TB path and the exact
+    oracle in one. For cheaper approximate boundaries, sample-sort
+    upstream and pass the result here unchanged.
 
     Output: bin int (1-based), n bigint, lo/hi double (bin min/max).
     """
@@ -343,18 +346,15 @@ def stable_index(
 
     The naive form — ``row_number() OVER (ORDER BY ...)`` — funnels the
     whole table through ONE task (Spark plans a single-partition window
-    for a global order). This operator gets the identical result in two
-    distributed passes: range-repartition on the order columns + local
-    sort, then one tiny per-partition count job whose cumulative offsets
-    (#partitions rows, broadcast back) turn partition-local row numbers
-    into global indexes. The heavy data is touched map-side only; the
-    global-order information travels entirely in the offsets.
+    for a global order). This operator rides the ordered-prefix kernel
+    :func:`_range_offsets` with one summary, the row count: each row's
+    index is its partition-local row number plus the exclusive count of
+    the partitions before it. The heavy data is touched map-side only;
+    the global-order information travels entirely in the offsets.
 
     ``order_cols`` must be a TOTAL order (include a unique tiebreak) —
     otherwise ties would get partition-dependent indexes; this is the same
-    contract every deterministic-order operator in the suite carries. The
-    partitioned frame is pinned with a lazy checkpoint so the offset job
-    and the output see the SAME sampled range boundaries.
+    contract every deterministic-order operator in the suite carries.
 
     Output: input columns + ``out_col`` (bigint, 0-based, dense).
     """
@@ -365,91 +365,173 @@ def stable_index(
         raise ValueError(f"stable_index: columns {missing} not in {df.columns}")
     if out_col in df.columns:
         raise ValueError(f"stable_index: input already has a {out_col!r} column")
-    indexed, _total = _ranged_order_index(df, order_cols, out_col)
-    return indexed
+    order = [F.asc(c) for c in order_cols]
+    parts, _ = _range_offsets(df, order, {out_col: F.count("*")})
+    local = Window.partitionBy("_pid").orderBy(*order)
+    return parts.withColumn(
+        out_col, F.row_number().over(local) + F.col(out_col) - 1
+    ).drop("_pid")
 
 
+# Offsets cells delivered as a pid-indexed literal; past this many cells
+# or partitions (a many-thousand-child literal is where codegen, not the
+# join, becomes the bottleneck) they reach the rows by a broadcast join.
 _OFFSETS_ARRAY_MAX = 4096
 
-# distributed_prefix_sum collects one offsets row per (partition, group)
-# cell; past this many cells the driver round-trip is the bottleneck and
-# the caller is in the high-cardinality regime where the plain grouped
-# window is the right plan. ~256k cells of a few longs stays tens of MB.
+# A grouped scan collects one offsets row per (partition, group) cell;
+# past this many cells the driver round-trip is the bottleneck and the
+# caller is in the high-cardinality regime where the plain grouped window
+# is the right plan. ~256k cells of a few longs stays tens of MB.
 _PREFIX_SUM_MAX_CELLS = 262_144
 
 
-def _pid_offsets_expr(offsets: dict[int, object], dtype="long"):
-    """O(1)-per-row delivery of per-partition offsets: a literal array
-    (``dtype``-typed, LONG by default) indexed by ``_pid``
-    (``element_at`` is 1-based).
+def _range_offsets(
+    df: DataFrame,
+    order: Sequence[Column],
+    summaries: dict[str, Column],
+    group_cols: Sequence[str] = (),
+    fold: Callable = operator.add,
+    zero: object = 0,
+) -> tuple[DataFrame, dict[tuple, dict[str, object]]]:
+    """The ordered-prefix kernel: a two-level exclusive scan (Blelloch,
+    "Prefix Sums and Their Applications", 1990) behind
+    :func:`stable_index`, :func:`distributed_ntile`,
+    :func:`distributed_prefix_sum`, ``aggregates._ordered_cumsums`` and
+    ``skyline.skyline_2d`` — never a single-partition global window.
+
+    1. Range stage (:func:`_ranged_parts`): range-repartition and sort
+       locally on ``(group_cols ascending, *order)``, tag each row with
+       ``_pid``; pinned by a lazy checkpoint so the offsets job and the
+       output see the SAME sampled range boundaries.
+    2. One offsets collect: the ``summaries`` aggregates per ``_pid``
+       (and group) cell. Grouped input is capped at
+       ``_PREFIX_SUM_MAX_CELLS`` cells, counted on the persisted cells.
+    3. Exclusive scan on the driver, in pid order (the range exchange
+       makes pid order the global order within every group): each
+       summary's accumulator starts at ``zero`` and takes
+       ``fold(acc, cell value)``; an accumulator of None takes the cell
+       value as is.
+    4. Delivery: the pid-indexed literal of :func:`_pid_offsets_expr`,
+       or, past ``_OFFSETS_ARRAY_MAX`` cells or partitions, a broadcast
+       join on ``_pid`` (null-safe on the group columns).
+
+    Returns the range-partitioned frame — input columns, ``_pid``, then
+    one column per summary name holding the fold of every earlier cell
+    of the row's group — and the totals, group key tuple → summary name →
+    fold of all cells (``()`` keys the ungrouped total). The caller adds
+    its partition-local window (``Window.partitionBy("_pid",
+    *group_cols)`` in ``order``) to the prefix and drops ``_pid``.
+    """
+    group_cols = list(group_cols)
+    parts = _ranged_parts(
+        df, [*[F.asc(g) for g in group_cols], *order]
+    ).localCheckpoint(eager=False)
+    cells_df = parts.groupBy("_pid", *group_cols).agg(
+        *[c.alias(name) for name, c in summaries.items()]
+    )
+    if group_cols:
+        # LOW-cardinality guard, enforced not just documented: one row per
+        # (partition, group) cell reaches the driver. Persist the tiny agg
+        # so the guard count and the collect read one cached pass.
+        cells_df.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            n_cells = cells_df.count()
+            if n_cells > _PREFIX_SUM_MAX_CELLS:
+                raise ValueError(
+                    f"distributed_prefix_sum: {n_cells} (partition, group) offset "
+                    f"cells exceed the {_PREFIX_SUM_MAX_CELLS} driver-safety cap — "
+                    f"group_cols={group_cols} is high-cardinality, which is the "
+                    "regime where each group fits one task and the plain "
+                    "Window.partitionBy(...).orderBy(...) cumulative is the "
+                    "right plan instead of this operator."
+                )
+            cells = cells_df.collect()
+        finally:
+            cells_df.unpersist()
+    else:
+        cells = cells_df.collect()
+    totals: dict[tuple, dict[str, object]] = {}
+    prefix = []
+    for r in sorted(cells, key=lambda r: r["_pid"]):
+        key = tuple(r[g] for g in group_cols)
+        acc = totals.setdefault(key, dict.fromkeys(summaries, zero))
+        prefix.append((r["_pid"], key, list(acc.values())))
+        for name in summaries:
+            acc[name] = r[name] if acc[name] is None else fold(acc[name], r[name])
+    key_types = [(g, cells_df.schema[g].dataType) for g in group_cols]
+    val_types = [(n, cells_df.schema[n].dataType) for n in summaries]
+    if not prefix:
+        return parts.select("*", *[F.lit(None).cast(t).alias(n) for n, t in val_types]), totals
+    cell = _pid_offsets_expr(prefix, key_types, val_types)
+    if cell is not None:
+        return parts.select("*", *[cell[n].alias(n) for n in summaries]), totals
+    off = df.sparkSession.createDataFrame(
+        [(pid, *key, *offs) for pid, key, offs in prefix],
+        StructType(
+            [StructField("_opid", IntegerType(), False)]
+            + [StructField(f"_g{j}", t) for j, (_, t) in enumerate(key_types)]
+            + [StructField(n, t) for n, t in val_types]
+        ),
+    )
+    cond = F.col("_pid") == F.col("_opid")
+    for j, g in enumerate(group_cols):
+        cond = cond & F.col(g).eqNullSafe(F.col(f"_g{j}"))
+    return (
+        parts.join(F.broadcast(off), cond).drop(
+            "_opid", *[f"_g{j}" for j in range(len(group_cols))]
+        ),
+        totals,
+    )
+
+
+def _pid_offsets_expr(
+    prefix: list[tuple[int, tuple, list]],
+    key_types: list[tuple[str, DataType]],
+    val_types: list[tuple[str, DataType]],
+) -> Column | None:
+    """The literal delivery of :func:`_range_offsets`: the row's offsets
+    cell as a struct of the summary names, read O(1) per row from a
+    constant-folded array indexed by ``_pid`` (``element_at`` is 1-based)
+    — no broadcast exchange, no join job, no createDataFrame round-trip.
+
+    Ungrouped, each slot is the partition's struct of offsets. Grouped,
+    each slot is a small ``map<struct(groups), struct(offsets)>``: the
+    range exchange on (group, order) means a partition touches only the
+    few groups its slice overlaps, so the map probe is
+    O(groups-per-partition), and struct keys make the lookup null-safe
+    for NULL group values.
 
     ``spark_partition_id()`` is dense 0..P-1 on the exchanged frame, but
-    EMPTY partitions never reach the counts job — their slots are filled
-    with the running value so the array stays index-aligned (no row
-    carries such a pid, so the value is never read; leading holes are a
-    typed NULL). Constant-folded: no broadcast exchange, no extra join
-    job, no createDataFrame round-trip — the three jobs the old
-    broadcast-join delivery paid on every call. Returns None above
-    ``_OFFSETS_ARRAY_MAX`` slots (a many-thousand-child literal is where
-    codegen, not the join, becomes the bottleneck) — callers fall back
-    to the broadcast join.
+    EMPTY partitions never reach the offsets job. Their slots still hold
+    an index place; no row carries such a pid, so they share one
+    one-cell value that is never read. Returns None past
+    ``_OFFSETS_ARRAY_MAX`` cells or slots.
     """
-    if not offsets:
-        return F.lit(None).cast(dtype) if dtype != "long" else F.lit(0).cast("long")
-    n_slots = max(offsets) + 1
-    if n_slots > _OFFSETS_ARRAY_MAX:
+    n_slots = 1 + max(pid for pid, _, _ in prefix)
+    if max(n_slots, len(prefix)) > _OFFSETS_ARRAY_MAX:
         return None
-    arr, acc = [], None
-    for pid in range(n_slots):
-        acc = offsets.get(pid, acc)
-        arr.append(acc)
-    return F.element_at(
-        F.array(*[F.lit(v).cast(dtype) for v in arr]), F.col("_pid") + 1
-    )
 
+    def struct(values, types):
+        return F.struct(*[F.lit(v).cast(t).alias(n) for v, (n, t) in zip(values, types)])
 
-def _ranged_order_index(
-    df: DataFrame, order_cols: Sequence[str], out_col: str
-) -> tuple[DataFrame, int]:
-    """The shared two-level machinery behind :func:`stable_index` and
-    :func:`distributed_ntile`: range-repartition + local sort on
-    ``order_cols``, one tiny per-partition count job whose cumulative
-    offsets (#partitions values, re-delivered as a constant-folded
-    pid-indexed literal array — see :func:`_pid_offsets_expr`) turn
-    partition-local row numbers into an exact 0-based global index — no
-    single-partition window anywhere. The partitioned frame is pinned
-    with a lazy checkpoint so the offset job and the output see the
-    SAME sampled range boundaries.
-
-    Returns ``(frame + out_col bigint 0-based dense, total row count)``
-    — the total rides along for free from the offset pass, which is what
-    lets ntile avoid a second count job.
-    """
-    parts = _ranged_parts(df, order_cols).localCheckpoint(eager=False)
-    counts = parts.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
-    offsets = {}
-    acc = 0
-    for r in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[r["_pid"]] = acc
-        acc += r["_n"]
-    local = Window.partitionBy("_pid").orderBy(*[F.asc(c) for c in order_cols])
-    off = _pid_offsets_expr(offsets)
-    if off is not None:
-        out = (
-            parts.withColumn(out_col, F.row_number().over(local) + off - 1)
-            .drop("_pid")
+    def slot(cells):
+        if not key_types:
+            return struct(cells[0][1], val_types)
+        return F.create_map(
+            *[x for key, offs in cells for x in (struct(key, key_types), struct(offs, val_types))]
         )
-        return out, acc
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        [(pid, o) for pid, o in offsets.items()], "_pid: int, _off: bigint"
+
+    per_pid: dict[int, list] = {}
+    for pid, key, offs in prefix:
+        per_pid.setdefault(pid, []).append((key, offs))
+    hole = slot([(prefix[0][1], prefix[0][2])])
+    cell = F.element_at(
+        F.array(*[slot(per_pid[p]) if p in per_pid else hole for p in range(n_slots)]),
+        F.col("_pid") + 1,
     )
-    out = (
-        parts.join(F.broadcast(off_df), "_pid")
-        .withColumn(out_col, F.row_number().over(local) + F.col("_off") - 1)
-        .drop("_pid", "_off")
-    )
-    return out, acc
+    if key_types:
+        cell = F.element_at(cell, F.struct(*[F.col(g) for g, _ in key_types]))
+    return cell
 
 
 def _guard_scratch(df: DataFrame, op: str, names: Sequence[str]) -> None:
@@ -465,19 +547,19 @@ def _guard_scratch(df: DataFrame, op: str, names: Sequence[str]) -> None:
         )
 
 
-def _ranged_parts(df: DataFrame, order_cols: Sequence[str]) -> DataFrame:
-    """The range stage of :func:`_ranged_order_index`, pre-checkpoint:
-    range exchange + local sort + partition id. Split out so plan-shape
-    tests can pin the exchange kind (the lazy checkpoint downstream
-    truncates lineage to a ``Scan ExistingRDD``, hiding it).
+def _ranged_parts(df: DataFrame, order: Sequence) -> DataFrame:
+    """The range stage of :func:`_range_offsets`, pre-checkpoint: range
+    exchange + local sort + partition id. Split out so plan-shape tests
+    can pin the exchange kind (the lazy checkpoint downstream truncates
+    lineage to a ``Scan ExistingRDD``, hiding it).
 
-    Guards the ``_pid`` scratch name for every caller (stable_index,
-    distributed_ntile, distributed_prefix_sum): an input column of that
-    name would be silently overwritten and dropped."""
+    Guards the ``_pid`` scratch name for every caller of the kernel: an
+    input column of that name would be silently overwritten and
+    dropped."""
     _guard_scratch(df, "two-level range exchange", ["_pid"])
     return (
-        df.repartitionByRange(*[F.asc(c) for c in order_cols])
-        .sortWithinPartitions(*[F.asc(c) for c in order_cols])
+        df.repartitionByRange(*order)
+        .sortWithinPartitions(*order)
         .withColumn("_pid", F.spark_partition_id())
     )
 
@@ -504,21 +586,18 @@ def distributed_ntile(
     single-partition window Spark plans for a global order (`WindowExec:
     No Partition Defined`, the one-task funnel that dies at 100 TB).
 
-    Two-level form (the :func:`stable_index` machinery): range-repartition
-    + local sort gives every row an exact 0-based global rank from
-    partition-local row numbers plus broadcast cumulative offsets; the
-    bucket then follows from the rank and the total N in closed form with
-    the SAME remainder semantics Spark and DuckDB share — base = N div n,
-    rem = N mod n, the first ``rem`` buckets take ``base + 1`` rows:
+    Rides the ordered-prefix kernel :func:`_range_offsets` with the row
+    count as its one summary: a row's exact 0-based global rank is its
+    partition-local row number plus the exclusive count before its
+    partition, and the kernel's total is N. The bucket follows from the
+    rank and N in closed form with the SAME remainder semantics Spark and
+    DuckDB share — base = N div n, rem = N mod n, the first ``rem``
+    buckets take ``base + 1`` rows:
 
         bin(r) = r div (base+1) + 1                      for r < rem·(base+1)
                = rem + (r − rem·(base+1)) div base + 1   otherwise
 
-    (0-based r; all arithmetic exact-integer JVM-side). The heavy data
-    moves once through a RANGE exchange — every partition does equal
-    work — and the only driver traffic is the #partitions-row offset
-    table. This is the default exact-binning path; the old global-window
-    form survives only as the semantics documentation above.
+    (0-based r; all arithmetic exact-integer JVM-side).
 
     ``order_cols`` must be a TOTAL order (end with a unique tiebreak) —
     the same contract ``ntile`` itself needs for deterministic splits.
@@ -544,16 +623,18 @@ def distributed_ntile(
         # degenerate single-file baseline by layout callers; no exchange,
         # no offsets job.
         return df.withColumn(out_col, F.lit(1).cast("int"))
-    indexed, total = _ranged_order_index(df, order_cols, "_gidx")
+    order = [F.asc(c) for c in order_cols]
+    parts, totals = _range_offsets(df, order, {"_gidx": F.count("*")})
+    total = totals[()]["_gidx"] if totals else 0
     base, rem = divmod(total, n)
     cut = rem * (base + 1)
-    r = F.col("_gidx")
+    r = F.row_number().over(Window.partitionBy("_pid").orderBy(*order)) + F.col("_gidx") - 1
     bucket = (
         F.when(r < cut, _exact_intdiv(r, base + 1))
         .otherwise(F.lit(rem) + _exact_intdiv(r - cut, max(base, 1)))
         + 1
     ).cast("int")
-    return indexed.withColumn(out_col, bucket).drop("_gidx")
+    return parts.withColumn(out_col, bucket).drop("_pid", "_gidx")
 
 
 def distributed_prefix_sum(
@@ -572,15 +653,13 @@ def distributed_prefix_sum(
     window that serializes a HOT group's entire row set (the skew every
     per-source cumulative operator otherwise carries).
 
-    Two-level form on the :func:`stable_index` machinery: range-exchange
-    + local sort on ``(group_cols, order_cols)`` gives each partition a
-    contiguous slice of the total order — a hot group SPANS partitions
-    instead of landing in one task; ONE tiny per-(partition, group) job
-    collects row counts and column sums, whose per-group exclusive
-    running totals in partition order are broadcast back as offsets; the
-    partition-LOCAL cumulative window plus the offset is then the exact
-    per-group prefix sum. The heavy data moves once through a RANGE
-    exchange where every partition does equal work.
+    Rides the ordered-prefix kernel :func:`_range_offsets` on
+    ``(group_cols, order_cols)`` with each column's sum (and, for
+    ``rank_col``, the row count) as summaries: each partition holds a
+    contiguous slice of the total order, so a hot group SPANS partitions
+    instead of landing in one task, and the partition-LOCAL cumulative
+    window plus the per-group exclusive offset is the exact per-group
+    prefix sum.
 
     Contract: ``sum_cols`` must be integral (the engine's scaled-int
     exactness convention — double prefix sums are order-sensitive and
@@ -598,9 +677,7 @@ def distributed_prefix_sum(
     regime where the plain grouped window hurts; a HIGH-cardinality
     group column means every group already fits one task, which is
     exactly when the plain ``Window.partitionBy`` is the right tool
-    instead. NULL group values form their own group (null-safe offset
-    join). The partitioned frame is pinned with a lazy checkpoint so
-    the offset job and the output see the SAME sampled range boundaries.
+    instead. NULL group values form their own group (null-safe offsets).
 
     Output: input columns + ``{c}{suffix}`` (bigint) per sum column,
     plus ``rank_col`` (bigint, 1-based dense rank — per group when
@@ -647,188 +724,22 @@ def distributed_prefix_sum(
         raise ValueError(
             f"distributed_prefix_sum: output columns {clash} already in input"
         )
-    parts = _ranged_parts(df, [*group_cols, *order_cols]).localCheckpoint(
-        eager=False
-    )
-    per_part_df = parts.groupBy("_pid", *group_cols).agg(
-        F.count("*").alias("_n"),
-        *[
-            F.sum(F.coalesce(F.col(c).cast("long"), F.lit(0))).alias(f"_s{i}")
-            for i, c in enumerate(sum_cols)
-        ],
-    )
-    if group_cols:
-        # LOW-cardinality guard, enforced not just documented: the offsets
-        # job collects one row per (partition, group) cell, so a
-        # high-cardinality group column would turn the driver into the
-        # bottleneck — and that regime is exactly where the plain grouped
-        # window is already the right plan (each group fits one task).
-        # Persist the tiny agg so the guard count and the collect read one
-        # cached pass, not two executions (the salted_join pattern).
-        from pyspark.storagelevel import StorageLevel
-
-        per_part_df.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            n_cells = per_part_df.count()
-            if n_cells > _PREFIX_SUM_MAX_CELLS:
-                raise ValueError(
-                    f"distributed_prefix_sum: {n_cells} (partition, group) offset "
-                    f"cells exceed the {_PREFIX_SUM_MAX_CELLS} driver-safety cap — "
-                    f"group_cols={group_cols} is high-cardinality, which is the "
-                    "regime where each group fits one task and the plain "
-                    "Window.partitionBy(...).orderBy(...) cumulative is the "
-                    "right plan instead of this operator."
-                )
-            per_part = per_part_df.collect()
-        finally:
-            per_part_df.unpersist()
-    else:
-        # Ungrouped: one cell per partition — bounded by the session's
-        # partition count by construction, no guard job needed.
-        per_part = per_part_df.collect()
-    # Exclusive per-group running totals in partition order: the range
-    # exchange on (group, order) makes pid order == global order within
-    # every group, so one ascending-pid pass with a per-group accumulator
-    # yields each (pid, group) cell's exact offset.
-    acc: dict[tuple, list[int]] = {}
-    rows = []
-    for r in sorted(per_part, key=lambda r: r["_pid"]):
-        key = tuple(r[c] for c in group_cols)
-        cur = acc.setdefault(key, [0] * (1 + len(sum_cols)))
-        rows.append((r["_pid"], *key, *cur))
-        cur[0] += r["_n"]
-        for i in range(len(sum_cols)):
-            cur[1 + i] += r[f"_s{i}"] or 0
     order = [F.asc(c) for c in order_cols]
-    wcum = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wrk = Window.partitionBy("_pid", *group_cols).orderBy(*order)
-    out = _attach_offsets(df, parts, rows, group_cols, len(sum_cols))
-    for i, c in enumerate(sum_cols):
-        out = out.withColumn(
-            f"{c}{suffix}",
-            F.sum(F.coalesce(F.col(c).cast("long"), F.lit(0))).over(wcum)
-            + F.col(f"_off{i}"),
-        )
+    local = Window.partitionBy("_pid", *group_cols).orderBy(*order)
+    cum = local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # Per output column: the cell summary (its offsets) and the
+    # partition-local window the offset is added to.
+    summaries, local_exprs = {}, {}
+    for c in sum_cols:
+        v = F.coalesce(F.col(c).cast("long"), F.lit(0))
+        summaries[f"{c}{suffix}"], local_exprs[f"{c}{suffix}"] = F.sum(v), F.sum(v).over(cum)
     if rank_col:
-        out = out.withColumn(
-            rank_col, F.row_number().over(wrk).cast("long") + F.col("_offn")
-        )
-    return out.drop(
-        "_pid",
-        "_offn",
-        *[f"_off{i}" for i in range(len(sum_cols))],
-    )
-
-
-def _attach_offsets(
-    df: DataFrame,
-    parts: DataFrame,
-    rows: list,
-    group_cols: list,
-    n_sums: int,
-) -> DataFrame:
-    """Attach the per-(partition, group) exclusive running totals
-    (``_offn`` + ``_off{i}`` bigint columns) to every row of ``parts``.
-
-    Delivery, cheapest first:
-
-    * no groups — pid-indexed literal LONG arrays
-      (:func:`_pid_offsets_expr`): O(1) per row, constant-folded, zero
-      extra jobs.
-    * grouped, ≤ ``_OFFSETS_ARRAY_MAX`` cells — a pid-indexed literal
-      array whose elements are tiny ``map<struct(groups), struct(offs)>``
-      literals. The RANGE exchange on (group, order) means each
-      partition touches only the handful of groups its slice overlaps,
-      so the inner maps stay a few entries — the linear map probe is
-      O(groups-per-partition), not O(|G|). Struct keys make the lookup
-      null-safe for NULL group values (verified by the NULL-group
-      bit-equality tests). Empty-pid slots reuse the previous map — no
-      row carries such a pid.
-    * otherwise — the broadcast-join fallback (a many-thousand-child
-      literal would push codegen past its method limits).
-    """
-    n_slots = 1 + max((r[0] for r in rows), default=-1)
-    if not group_cols:
-        offn = {r[0]: r[1] for r in rows}
-        per_sum = [{r[0]: r[2 + i] for r in rows} for i in range(n_sums)]
-        en = _pid_offsets_expr(offn)
-        es = [_pid_offsets_expr(d) for d in per_sum]
-        if en is not None and all(e is not None for e in es):
-            out = parts.withColumn("_offn", en)
-            for i, e in enumerate(es):
-                out = out.withColumn(f"_off{i}", e)
-            return out
-    elif rows and len(rows) <= _OFFSETS_ARRAY_MAX and n_slots <= _OFFSETS_ARRAY_MAX:
-        dtypes = [df.schema[c].dataType for c in group_cols]
-        per_pid: dict[int, list] = {}
-        for r in rows:
-            pid, key, offs = r[0], r[1 : 1 + len(group_cols)], r[1 + len(group_cols) :]
-            per_pid.setdefault(pid, []).append((key, offs))
-        val = lambda offs: F.struct(
-            F.lit(int(offs[0])).cast("long").alias("_offn"),
-            *[
-                F.lit(int(o)).cast("long").alias(f"_off{i}")
-                for i, o in enumerate(offs[1:])
-            ],
-        )
-        key_lit = lambda key: F.struct(
-            *[
-                F.lit(v).cast(dt).alias(c)
-                for v, dt, c in zip(key, dtypes, group_cols)
-            ]
-        )
-        # Empty-pid slots (a range partition that got no rows) must
-        # still occupy their array index, but cloning a neighbor's full
-        # map literal once per hole would make the materialized
-        # expression O(holes × map-size) — a skewed range sample on a
-        # many-partition session could blow analysis/codegen past what
-        # the cell guard above intended. No row carries an empty pid, so
-        # the slot's value is never read: a single shared 1-entry dummy
-        # map (same key/value types) keeps every hole O(1).
-        any_key, any_offs = rows[0][1 : 1 + len(group_cols)], rows[0][1 + len(group_cols) :]
-        dummy = F.create_map(key_lit(any_key), val(any_offs))
-        maps = []
-        for pid in range(n_slots):
-            cells = per_pid.get(pid)
-            if cells is None:
-                maps.append(dummy)
-                continue
-            maps.append(
-                F.create_map(
-                    *[x for key, offs in cells for x in (key_lit(key), val(offs))]
-                )
-            )
-        s = F.element_at(
-            F.element_at(F.array(*maps), F.col("_pid") + 1),
-            F.struct(*[F.col(c) for c in group_cols]),
-        )
-        out = parts.withColumn("_offn", s["_offn"])
-        for i in range(n_sums):
-            out = out.withColumn(f"_off{i}", s[f"_off{i}"])
-        return out
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    off_schema = StructType(
-        [StructField("_opid", IntegerType(), False)]
-        + [
-            StructField(f"_g{j}", df.schema[c].dataType, True)
-            for j, c in enumerate(group_cols)
-        ]
-        + [StructField("_offn", LongType(), False)]
-        + [StructField(f"_off{i}", LongType(), False) for i in range(n_sums)]
-    )
-    off_df = df.sparkSession.createDataFrame(rows, off_schema)
-    cond = F.col("_pid") == F.col("_opid")
-    for j, c in enumerate(group_cols):
-        cond = cond & F.col(c).eqNullSafe(F.col(f"_g{j}"))
-    return (
-        parts.join(F.broadcast(off_df), cond)
-        .drop("_opid", *[f"_g{j}" for j in range(len(group_cols))])
-    )
+        summaries[rank_col] = F.count("*")
+        local_exprs[rank_col] = F.row_number().over(local).cast("long")
+    parts, _ = _range_offsets(df, order, summaries, group_cols)
+    return parts.withColumns(
+        {n: e + F.col(n) for n, e in local_exprs.items()}
+    ).drop("_pid")
 
 
 def kfold_assign(

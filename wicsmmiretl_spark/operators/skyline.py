@@ -10,17 +10,19 @@ quality-per-cost documents, fastest-AND-freshest sources.
 100 TB design: the full table is touched exactly ONCE, by a
 ``groupBy(x, y)`` whose partial aggregation collapses duplicates
 map-side. Everything after runs on the per-x best candidates —
-at most |distinct x| rows — swept with the suite's offsets pattern
-(range-repartition + partition-local running extreme + a tiny
-per-partition bests job broadcast back), NEVER a single-partition
-global window. The dominance test itself is O(candidates), not the
-O(n²) NOT-EXISTS a naive formulation would plan.
+at most |distinct x| rows — swept by the ordered-prefix kernel
+``sampling._range_offsets`` (range-repartition, one per-partition bests
+collect, a partition-local running extreme plus the prefix best), NEVER
+a single-partition global window. The dominance test itself is
+O(candidates), not the O(n²) NOT-EXISTS a naive formulation would plan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from wicsmmiretl_spark.operators.sampling import _range_offsets
 
 
 def skyline_2d(
@@ -43,8 +45,9 @@ def skyline_2d(
     then a per-x min_by/max_by (partial-aggregating — no per-x window
     task) and one range-repartition over the ≤|distinct x| candidates;
     the global sweep state crosses the driver as one #partitions-row
-    list of per-partition bests, re-delivered as a constant-folded
-    pid-indexed literal.
+    list of per-partition bests, folded by min (max) into exclusive
+    prefix bests on the ordered-prefix kernel
+    (``sampling._range_offsets``).
 
     Output: x_col, y_col (original values/types), n bigint — ascending
     by the x criterion's "good" direction.
@@ -54,7 +57,6 @@ def skyline_2d(
             raise ValueError(f"skyline_2d: column {c!r} not in {df.columns}")
 
     x_dir = F.desc(x_col) if maximize_x else F.asc(x_col)
-    y_dir = (lambda c: F.desc(c)) if maximize_y else (lambda c: F.asc(c))
     y_best = (lambda c: F.max(c)) if maximize_y else (lambda c: F.min(c))
     y_strictly_better = (
         (lambda a, b: a > b) if maximize_y else (lambda a, b: a < b)
@@ -77,56 +79,30 @@ def skyline_2d(
     cand = pts.groupBy(x_col).agg(pick.alias("_b")).select(
         x_col, F.col("_b.y").alias(y_col), F.col("_b.n").alias("n")
     )
-    # Offsets-pattern prefix sweep over the candidates in x order: a
-    # candidate is on the front iff its y strictly beats the best y of
-    # every strictly-better-x candidate. Partition-local running best +
-    # broadcast per-partition bests = no single-partition window.
-    parts = (
-        cand.repartitionByRange(x_dir)
-        .sortWithinPartitions(x_dir)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    # Prefix-best sweep over the candidates in x order on the
+    # ordered-prefix kernel: a candidate is on the front iff its y
+    # strictly beats the best y of every strictly-better-x candidate —
+    # the partition-local running best folded with the exclusive best of
+    # the partitions before it (NULL before the first).
+    parts, _ = _range_offsets(
+        cand,
+        [x_dir],
+        {"_prefix": y_best(F.col(y_col))},
+        fold=max if maximize_y else min,
+        zero=None,
     )
-    bests = parts.groupBy("_pid").agg(y_best(F.col(y_col)).alias("_b")).collect()
-    prefix: dict[int, object] = {}
-    acc = None
-    for r in sorted(bests, key=lambda r: r["_pid"]):
-        prefix[r["_pid"]] = acc
-        b = r["_b"]
-        if acc is None:
-            acc = b
-        elif b is not None:
-            acc = max(acc, b) if maximize_y else min(acc, b)
-    y_dtype = cand.schema[y_col].dataType
     local = (
         Window.partitionBy("_pid")
         .orderBy(x_dir)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    # The per-partition prefix bests ride a constant-folded pid-indexed
-    # literal array (the sampling._pid_offsets_expr delivery, typed to
-    # the y column) — no broadcast exchange, no join job; fall back to
-    # the broadcast join only past the helper's literal-size guard.
-    from wicsmmiretl_spark.operators.sampling import _pid_offsets_expr
-
-    prefix_expr = _pid_offsets_expr(prefix, y_dtype) if prefix else None
-    if prefix_expr is not None:
-        attached = parts.withColumn("_prefix", prefix_expr)
-    else:
-        spark = df.sparkSession
-        off = spark.createDataFrame(
-            [(pid, p) for pid, p in prefix.items()],
-            f"_pid: int, _prefix: {y_dtype.simpleString()}",
-        )
-        attached = parts.join(F.broadcast(off), "_pid")
     # least/greatest skip NULLs (null only when BOTH are), so one call
-    # folds the partition-local running best with the broadcast prefix.
+    # folds the partition-local running best with the prefix best.
     prev_best = (F.greatest if maximize_y else F.least)(
         y_best(F.col(y_col)).over(local), F.col("_prefix")
     )
     return (
-        attached
-        .withColumn("_prev", prev_best)
+        parts.withColumn("_prev", prev_best)
         .filter(
             F.col("_prev").isNull()
             | y_strictly_better(F.col(y_col), F.col("_prev"))
