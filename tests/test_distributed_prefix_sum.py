@@ -350,13 +350,13 @@ def test_offsets_fallback_matches_literal(spark, monkeypatch, name):
 
 # Build + noop-write jobs per entry point on the inputs above (8 shuffle
 # partitions): the range stage, the offsets collect and the output (the
-# grouped form adds its cell-count guard; the level and skyline forms
-# their upstream aggregates).
+# grouped form's cell cap rides its bounded collect; the level and skyline
+# forms add their upstream aggregates).
 _FAMILY_JOBS = {
     "stable_index": 6,
     "distributed_ntile": 6,
     "prefix_sum": 6,
-    "prefix_sum_grouped": 9,
+    "prefix_sum_grouped": 6,
     "ordered_cumsums_asc": 7,
     "ordered_cumsums_desc": 7,
     "skyline_2d": 10,

@@ -73,14 +73,20 @@ def _lpa_brute(edges, rounds):
 
 def test_lpa_matches_brute_force(spark):
     rng = random.Random(41)
-    edges = [(rng.randint(0, 30), rng.randint(0, 30)) for _ in range(120)]
-    df = spark.createDataFrame(edges, "id_a: bigint, id_b: bigint")
-    for rounds in (1, 3):
-        got = {
-            r["node"]: r["label"]
-            for r in label_propagation(df, rounds=rounds).collect()
-        }
-        assert got == _lpa_brute(edges, rounds)
+    noisy = [(rng.randint(0, 30), rng.randint(0, 30)) for _ in range(120)]
+    # K3,3 beside a 6-cycle: every node's first vote is a tie (3 and 2
+    # distinct neighbor labels), so the lowest-label tiebreak decides every
+    # label.
+    k33 = [(a, b) for a in (100, 101, 102) for b in (103, 104, 105)]
+    cycle = [(200 + i, 200 + (i + 1) % 6) for i in range(6)]
+    for edges in (noisy, k33 + cycle):
+        df = spark.createDataFrame(edges, "id_a: bigint, id_b: bigint")
+        for rounds in (1, 3):
+            got = {
+                r["node"]: r["label"]
+                for r in label_propagation(df, rounds=rounds).collect()
+            }
+            assert got == _lpa_brute(edges, rounds)
 
 
 def test_lpa_planted_communities(spark):

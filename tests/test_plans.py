@@ -202,5 +202,5 @@ def test_pq_plan_broadcasts_lut_and_no_cartesian(spark):
 # round, so the returned DataFrame's plan is just a scan of the materialized
 # RDD. Their shape is pinned as contract counts instead: jobs per loop
 # operator (tests/test_graph.py::test_loop_operator_job_count) and jobs per
-# added PageRank/PPR round (tests/test_graph.py::test_power_iteration_round_jobs);
+# added message round (tests/test_graph.py::test_power_iteration_round_jobs);
 # their results by local replays and the fixpoint certification.

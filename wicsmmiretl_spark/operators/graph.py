@@ -53,13 +53,22 @@ enters and runs its loop through ``operators/loopconf.py``:
 and pins the bytes-derived loop width, ``observed_checkpoint`` is the one
 way a round's metrics reach the driver (one job per probe), and
 ``fixpoint`` drives the signature-repeat loops (CC, k-core) including the
-confirming round on an exhausted budget. ``label_propagation`` is
-fixed-round with no probe and keeps its own loop.
+confirming round on an exhausted budget.
+
+The message-passing loops share one round, ``_message_round`` (Pregel /
+GraphX ``aggregateMessages``): state ⋈ edges → one message per edge →
+ONE aggregate by destination over the messages and any kept rows →
+checkpoint, eager with the round's scalars observed when the next round
+reads one. Its callers are ``_power_iteration`` (PageRank and PPR),
+``hits`` (one call per half-iteration), ``shortest_paths`` (the min over
+relaxed and kept distances) and ``label_propagation`` (a mode vote).
+``bfs_levels`` keeps its frontier anti-join: an aggregate over visited ∪
+messages would redo O(V) union work every level, O(V·depth) in total.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable, Iterator, Sequence
 
 import pandas as pd
 
@@ -355,6 +364,37 @@ def _rank_nodes(
     return e, nodes, obs.get
 
 
+def _message_round(
+    senders: DataFrame,
+    edges: DataFrame,
+    msg: Column,
+    aggs: list[Column],
+    kept: DataFrame | None = None,
+    metrics: Sequence[Column] = (),
+) -> tuple[DataFrame, dict]:
+    """One round of every message-passing loop here (Pregel, Malewicz et
+    al., SIGMOD 2010; GraphX ``aggregateMessages``, Gonzalez et al., OSDI
+    2014): the ``senders`` state (keyed ``id``) joins ``edges`` on
+    ``src``, and each edge sends ``msg`` — a Column over the joined row,
+    named as ``aggs`` read it — to its ``dst`` (a NULL ``dst`` receives
+    nothing). The ``kept`` rows (keyed ``id``) are unioned with the
+    messages, and ONE aggregate by ``id`` folds both with ``aggs``.
+
+    The result is checkpointed eagerly with ``metrics`` observed when the
+    caller's next round reads a scalar (``observed_checkpoint``, one job),
+    lazily otherwise. Returns ``(state, observed metrics)``."""
+    sent = (
+        edges.join(senders.withColumnRenamed("id", "src"), "src")
+        .filter(F.col("dst").isNotNull())
+        .select(F.col("dst").alias("id"), msg)
+    )
+    rows = sent if kept is None else kept.unionByName(sent, allowMissingColumns=True)
+    out = rows.groupBy("id").agg(*aggs)
+    if metrics:
+        return observed_checkpoint(out, *metrics)
+    return out.localCheckpoint(eager=False), {}
+
+
 def _power_iteration(
     e: DataFrame,
     nodes: DataFrame,
@@ -371,56 +411,45 @@ def _power_iteration(
     ``step(inb, dang, tele)`` is a node's next rank from its inbound mass
     and the global dangling mass.
 
-    Each round is ONE aggregate shuffle: the node rows (id, outdeg[, seed])
-    union the edge messages (dst, round(rank/outdeg·scale)), grouped by id
-    — ``max`` recovers the node columns, ``sum`` the scaled-integer inbound
-    mass (NULL for a node without in-edges). The messages come from one
-    join of the edges with the sources' shares (AQE picks broadcast or
-    sort-merge from the shares' runtime size). The dangling mass, the same scaled-integer sum, is observed on the
-    round's eager checkpoint and read by the next round as a literal; the
-    last round's checkpoint is lazy."""
+    Each round is one ``_message_round``: the sources' shares
+    round(rank/outdeg·scale) are the messages, the node rows (id,
+    outdeg[, seed]) are kept, and the one aggregate by id recovers the
+    node columns with ``max`` and sums the scaled-integer inbound mass
+    (NULL for a node without in-edges). The dangling mass, the same
+    scaled-integer sum, is observed on the round's eager checkpoint and
+    read by the next round as a literal; the last round's checkpoint is
+    lazy. ``step`` runs inside that aggregate, so it reads the seed flag
+    as ``max(seed)``."""
 
     def scaled(x: Column) -> Column:
         return F.round(x * scale).cast("long")
 
+    def tele(held: Column) -> Column:
+        return F.when(held, F.lit(r0)).otherwise(F.lit(0.0))
+
     carried = [c for c in nodes.columns if c != "id"]
-    held = F.col("seed") if "seed" in carried else F.lit(True)
-    tele = F.when(held, F.lit(r0)).otherwise(F.lit(0.0))
-    state = nodes.withColumn("rank", tele)
+    seeded = "seed" in carried
+    state = nodes.withColumn("rank", tele(F.col("seed") if seeded else F.lit(True)))
     dang = F.lit(n_dang) * scaled(F.lit(r0))
+    inb = F.coalesce(F.sum("c").cast("double") / F.lit(float(scale)), F.lit(0.0))
+    tele_agg = tele(F.max("seed") if seeded else F.lit(True))
+    dang_obs = F.coalesce(
+        F.sum(F.when(F.col("outdeg").isNull(), scaled(F.col("rank")))), F.lit(0)
+    ).alias("dang")
     for i in range(iters):
-        shares = state.filter(F.col("outdeg").isNotNull()).select(
-            F.col("id").alias("src"), scaled(F.col("rank") / F.col("outdeg")).alias("c")
+        rank = step(inb, dang.cast("double") / F.lit(float(scale)), tele_agg)
+        state, m = _message_round(
+            state.filter(F.col("outdeg").isNotNull()).select(
+                "id", scaled(F.col("rank") / F.col("outdeg")).alias("c")
+            ),
+            e,
+            F.col("c"),
+            [*[F.max(c).alias(c) for c in carried], rank.alias("rank")],
+            state.select("id", *carried),
+            [dang_obs] if i + 1 < iters else [],
         )
-        msgs = e.join(shares, "src").filter(F.col("dst").isNotNull())
-        nxt = (
-            state.select("id", *carried)
-            .unionByName(msgs.select(F.col("dst").alias("id"), "c"), allowMissingColumns=True)
-            .groupBy("id")
-            .agg(
-                *[F.max(c).alias(c) for c in carried],
-                (F.sum("c").cast("double") / F.lit(float(scale))).alias("inb"),
-            )
-            .select(
-                "id",
-                *carried,
-                step(
-                    F.coalesce(F.col("inb"), F.lit(0.0)),
-                    dang.cast("double") / F.lit(float(scale)),
-                    tele,
-                ).alias("rank"),
-            )
-        )
-        if i + 1 < iters:
-            state, m = observed_checkpoint(
-                nxt,
-                F.coalesce(
-                    F.sum(F.when(F.col("outdeg").isNull(), scaled(F.col("rank")))), F.lit(0)
-                ).alias("dang"),
-            )
+        if m:
             dang = F.lit(m["dang"])
-        else:
-            state = nxt.localCheckpoint(eager=False)
     return state.select("id", "rank")
 
 
@@ -613,20 +642,21 @@ def shortest_paths(
     cumulative weight from the nearest source to every node reachable
     within the hop budget.
 
-    Round shape = one equi-join (current distances × edges, shuffled on
-    the source endpoint) + one groupBy-min per round — the standard
-    distributed relaxation; after h rounds every ≤h-hop shortest path is
-    final, so ``max_hops`` is both the correctness horizon and an
-    explicit wall-clock bound (negative cycles can't loop forever).
-    There is no per-round driver action, so every checkpoint is LAZY:
-    plan truncation per round, each round's final stage deferred (its
-    exchanges still run at build time under AQE).
+    Round shape = one ``_message_round``: the current distances join the
+    edges on the source endpoint, each edge sends dist + w, and ONE
+    aggregate takes the ``min`` over the messages and the kept distances
+    — the standard distributed relaxation; after h rounds every ≤h-hop
+    shortest path is final, so ``max_hops`` is both the correctness
+    horizon and an explicit wall-clock bound (negative cycles can't loop
+    forever). There is no per-round driver action, so every checkpoint is
+    LAZY: plan truncation per round, each round's final stage deferred
+    (its exchanges still run at build time under AQE).
 
     Determinism: weights must be integers (bigint sums — the suite's
     exact-sum contract; pre-scale fractional weights upstream) and
     non-negative for the min to be a true distance. The edge list is
-    hash-pinned on ``src`` once at an edge-count-sized width and distance
-    frames repartition on the node id at the same width (task
+    hash-pinned on ``src`` once at an edge-count-sized width and the
+    source distances repartition on the node id at the same width (task
     parallelism; the per-round joins still plan both exchanges).
 
     Output: (``id_col``, dist bigint) — one row per node reached
@@ -651,16 +681,8 @@ def shortest_paths(
         .localCheckpoint(eager=False)
     )
     for _ in range(max_hops):
-        relaxed = (
-            dist.join(e, dist["id"] == e["src"])
-            .select(F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .repartition(loop_parts, "id")
-            .localCheckpoint(eager=False)
+        dist, _ = _message_round(
+            dist, e, (F.col("dist") + F.col("w")).alias("dist"), [F.min("dist").alias("dist")], dist
         )
     return dist.select(F.col("id").alias(id_col), "dist")
 
@@ -685,12 +707,14 @@ def label_propagation(
     (random order, random ties) is exactly what's removed, so an oracle
     can replay every round.
 
-    100 TB shape: per round ONE neighbor equi-join (labels keyed by
-    node) + one (node, label) hash agg + one per-node argmax riding the
-    same partitioning — O(rounds · |E|) total, with ``localCheckpoint``
-    truncating lineage each round (the connected-components loop
-    discipline). Nodes appear only via edges, so every node has ≥1
-    neighbor and every round relabels every node.
+    100 TB shape: per round one ``_message_round`` — ONE neighbor
+    equi-join (labels keyed by node) and ONE aggregate casting each
+    node's vote, ``F.mode(label, deterministic=True)``, whose tiebreak to
+    the lowest value is the (count desc, label asc) rule above —
+    O(rounds · |E|) total, with ``localCheckpoint`` truncating lineage
+    each round (the connected-components loop discipline). Nodes appear
+    only via edges, so every node has ≥1 neighbor and every round
+    relabels every node.
 
     Output: node (endpoint type), label — label is the community
     representative after ``rounds`` rounds.
@@ -710,43 +734,27 @@ def label_propagation(
     # frame, whose size AQE discovers at runtime and converts to a
     # broadcast join; a checkpointed frame has no stats, so the static
     # plan is sort-merge) — the first data point behind keeping AQE on
-    # in every loop (loopconf module docstring).
+    # in every loop (loopconf module docstring). Dropping the per-round
+    # checkpoints so static stats flow from the source was measured flat
+    # in r15 while the static plan duplicated the whole ``und`` pipeline
+    # once per consumer, growing with rounds.
     #
-    # r15 examination (measured, do not re-try): two restructures lost
-    # their A/Bs and were reverted. (1) Pre-partitioning ``und`` by u so
-    # the per-round groupBys elide exchanges: neutral (23 -> 23 jobs) —
-    # the checkpointed frames carry no stats, the static round plan is
-    # SMJ on v, and AQE's late broadcast conversion happens after the
-    # exchange already ran, so HashPartitioning(u) never survives to the
-    # aggregates. (2) Dropping the checkpoints entirely so static stats
-    # flow from the source: 23 -> 17 jobs but the static plan duplicates
-    # the whole ``und`` pipeline once per consumer (331 operators / 84
-    # Exchanges at rounds=3, growing with rounds) and timed flat
-    # (~4.0-4.3 s vs 3.96 s quiet) while relying on runtime stage dedup.
-    # The per-round checkpointed two-exchange shape stands.
+    # ``und`` holds both orientations of every edge, so the messages a
+    # node receives along (src → dst) are exactly its neighbors' labels.
     und = (
-        base.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .unionByName(base.select(F.col(b_col).alias("u"), F.col(a_col).alias("v")))
+        base.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        .unionByName(base.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    labels = und.select(F.col("u").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
+    labels = und.select(F.col("src").alias("id")).distinct().select(
+        "id", F.col("id").alias("label")
     )
     for _ in range(rounds):
-        counts = (
-            und.join(labels.withColumnRenamed("node", "v"), "v")
-            .groupBy(F.col("u").alias("node"), "label")
-            .agg(F.count("*").alias("_c"))
+        labels, _ = _message_round(
+            labels, und, F.col("label"), [F.mode("label", deterministic=True).alias("label")]
         )
-        pick = F.struct((-F.col("_c")).alias("_negc"), F.col("label").alias("label"))
-        labels = (
-            counts.groupBy("node")
-            .agg(F.min(pick).alias("_s"))
-            .select("node", F.col("_s.label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-    return labels
+    return labels.select(F.col("id").alias("node"), "label")
 
 
 def butterfly_stats(edges: DataFrame, left: str = "l", right: str = "r") -> DataFrame:
@@ -939,17 +947,17 @@ def hits(
     normalization inside integer space; the ranking is identical because
     normalization is a positive scalar per side.
 
-    Scale shape per iteration (r14): two partial-aggregated groupBys (one
-    per side), each materialized eagerly ONCE with its L1 norm riding the
-    same job as an ``Observation`` — no per-side norm broadcast job, no
-    in-loop join back to the full node list. The node-list join is
-    deferred to the final output: a node absent from a side's groupBy
-    output has an exactly-0 score and contributes exactly 0 to every
-    downstream scaled-int sum, so the inner contribution joins are
-    bit-equal to the padded form (r13 shape: 72 jobs; this shape: ~31).
-    Degree skew (a hub customer's basket, a hot part's buyers) is bounded
-    by map-side combine. Nothing is collected; the norm crosses the
-    driver as one exact decimal scalar per half-iteration.
+    Scale shape per iteration: two ``_message_round`` calls, one per
+    side, each ONE partial-aggregated groupBy by the receiving node,
+    materialized eagerly once with its L1 norm observed in the same job
+    — no per-side norm broadcast job, no in-loop join back to the full
+    node list. The distinct edge sources seed the uniform initial hub; a
+    node absent from a side's groupBy output has an exactly-0 score and
+    contributes exactly 0 to every downstream scaled-int sum, so the
+    inner contribution joins are bit-equal to the padded form. Degree
+    skew (a hub customer's basket, a hot part's buyers) is bounded by
+    map-side combine. Nothing is collected; the norm crosses the driver
+    as one exact decimal scalar per half-iteration.
 
     Output: (id, hub double, auth double) for every node in ``edges``.
     Source-only nodes carry auth 0; sink-only nodes carry hub 0.
@@ -968,49 +976,37 @@ def hits(
     if m["n"] == 0:
         raise ValueError("hits: empty edge set")
     dec = "decimal(38,0)"
+    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
-    def _scores(raw: DataFrame, key: str, raw_col: str, norm, out_col: str) -> DataFrame:
+    def half(state: DataFrame, edges: DataFrame, score: str, out_col: str) -> DataFrame:
+        raw, m = _message_round(
+            state,
+            edges,
+            F.round(F.col(score) * scale).cast("long").alias("c"),
+            [F.sum("c").alias("raw")],
+            metrics=[F.coalesce(F.sum(F.col("raw").cast(dec)), F.lit(0).cast(dec)).alias("norm")],
+        )
         # ONE double division of two exact integers (the determinism
-        # contract above). ``norm`` arrives as the Observation's exact
+        # contract above). The norm arrives as the Observation's exact
         # decimal; float() and Spark's decimal→double cast are both
-        # correctly-rounded, so the literal is bit-equal to the r13
-        # broadcast-join form.
+        # correctly-rounded, so the literal is bit-equal to a broadcast
+        # join of the norm.
+        norm = m["norm"]
         if norm is not None and norm > 0:
-            score = F.col(raw_col).cast("double") / F.lit(float(norm))
+            s = F.col("raw").cast("double") / F.lit(float(norm))
         else:
-            score = F.lit(0.0)
-        return raw.select(F.col(key).alias("id"), score.alias(out_col))
+            s = F.lit(0.0)
+        return raw.select("id", s.alias(out_col))
 
-    hub = None  # None = uniform initial hub 1.0 on every edge source
-    auth = None
+    hub = e.select(F.col("src").alias("id")).distinct().withColumn("hub", F.lit(1.0))
     for _ in range(iters):
-        if hub is None:
-            contrib = e.select("dst", F.lit(1.0).alias("hub"))
-        else:
-            contrib = e.join(hub.withColumnRenamed("id", "src"), "src").select(
-                "dst", "hub"
-            )
-        a_raw, m = observed_checkpoint(
-            contrib.groupBy("dst")
-            .agg(F.sum(F.round(F.col("hub") * scale).cast("long")).alias("ar")),
-            F.coalesce(F.sum(F.col("ar").cast(dec)), F.lit(0).cast(dec)).alias("na"),
-        )
-        auth = _scores(a_raw, "dst", "ar", m["na"], "auth")
-        h_raw, m = observed_checkpoint(
-            e.join(auth.withColumnRenamed("id", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.sum(F.round(F.col("auth") * scale).cast("long")).alias("hr")),
-            F.coalesce(F.sum(F.col("hr").cast(dec)), F.lit(0).cast(dec)).alias("nh"),
-        )
-        hub = _scores(h_raw, "src", "hr", m["nh"], "hub")
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+        auth = half(hub, e, "hub", "auth")
+        hub = half(auth, rev, "auth", "hub")
+    # Every edge sends on both halves, so ``auth`` holds every edge
+    # target and ``hub`` every edge source: their full join is the node
+    # list.
     return (
-        nodes.join(hub, "id", "left")
-        .join(auth, "id", "left")
+        hub.join(auth, "id", "full")
         .select(
             "id",
             F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),

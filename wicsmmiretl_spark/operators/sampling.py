@@ -20,7 +20,6 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, IntegerType, StructField, StructType
-from pyspark.storagelevel import StorageLevel
 
 
 def deterministic_shuffle(df: DataFrame, key_cols: Sequence[str], seed: int = 1312) -> DataFrame:
@@ -405,7 +404,7 @@ def _range_offsets(
        output see the SAME sampled range boundaries.
     2. One offsets collect: the ``summaries`` aggregates per ``_pid``
        (and group) cell. Grouped input is capped at
-       ``_PREFIX_SUM_MAX_CELLS`` cells, counted on the persisted cells.
+       ``_PREFIX_SUM_MAX_CELLS`` cells by a collect bounded one row past it.
     3. Exclusive scan on the driver, in pid order (the range exchange
        makes pid order the global order within every group): each
        summary's accumulator starts at ``zero`` and takes
@@ -431,23 +430,18 @@ def _range_offsets(
     )
     if group_cols:
         # LOW-cardinality guard, enforced not just documented: one row per
-        # (partition, group) cell reaches the driver. Persist the tiny agg
-        # so the guard count and the collect read one cached pass.
-        cells_df.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            n_cells = cells_df.count()
-            if n_cells > _PREFIX_SUM_MAX_CELLS:
-                raise ValueError(
-                    f"distributed_prefix_sum: {n_cells} (partition, group) offset "
-                    f"cells exceed the {_PREFIX_SUM_MAX_CELLS} driver-safety cap — "
-                    f"group_cols={group_cols} is high-cardinality, which is the "
-                    "regime where each group fits one task and the plain "
-                    "Window.partitionBy(...).orderBy(...) cumulative is the "
-                    "right plan instead of this operator."
-                )
-            cells = cells_df.collect()
-        finally:
-            cells_df.unpersist()
+        # (partition, group) cell reaches the driver, so the collect itself
+        # is bounded one row past the cap.
+        cells = cells_df.limit(_PREFIX_SUM_MAX_CELLS + 1).collect()
+        if len(cells) > _PREFIX_SUM_MAX_CELLS:
+            raise ValueError(
+                f"distributed_prefix_sum: more than {_PREFIX_SUM_MAX_CELLS} "
+                "(partition, group) offset cells exceed the driver-safety cap — "
+                f"group_cols={group_cols} is high-cardinality, which is the "
+                "regime where each group fits one task and the plain "
+                "Window.partitionBy(...).orderBy(...) cumulative is the "
+                "right plan instead of this operator."
+            )
     else:
         cells = cells_df.collect()
     totals: dict[tuple, dict[str, object]] = {}

@@ -7570,9 +7570,8 @@ def q_part_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     neighbor labels, ties to the smallest) over the URGENT co-purchase
     part graph — 104 dense cores at sf0.01 where connected components
     would see one blob. The deterministic tiebreaks make the whole
-    trajectory SQL-replayable; per round one neighbor join + one argmax
-    riding the same partitioning
-    (operators/graph.py:label_propagation)."""
+    trajectory SQL-replayable; per round one neighbor join + one
+    mode-vote aggregate (operators/graph.py:label_propagation)."""
     from wicsmmiretl_spark.operators.graph import label_propagation
 
     li = _t(spark, sf_dir, "lineitem")
