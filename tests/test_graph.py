@@ -270,12 +270,47 @@ def test_triangle_stats_validates(spark):
         triangle_stats(df, "nope", "dst")
 
 
-def test_triangle_stats_empty_graph(spark):
-    from wicsmmiretl_spark.operators.graph import triangle_stats
+# Graphs with no simple edge: an empty list, self-loops only, and pairs
+# with a NULL end.
+_NO_EDGES = {"empty": [], "self_loops": [(1, 1), (2, 2)], "null_ends": [(None, 1), (2, None)]}
 
-    df = spark.createDataFrame([], "src: bigint, dst: bigint")
-    out = triangle_stats(df).collect()[0]
-    assert tuple(out) == (0, 0, 0, 0, None)
+# What each static-graph operator returns on them (the same for all three,
+# except that ``butterfly_stats`` is bipartite: (1, 1) joins left vertex 1
+# to right vertex 1, a real edge).
+_NO_EDGE_ROWS = {
+    "triangle_stats": [(0, 0, 0, 0, None)],
+    "degree_profile": [(0, 0, None, None, None, None)],
+    "kcore": [],
+    "link_prediction": [],
+    "label_propagation": [],
+    "butterfly_stats": [(0, 0, 0, 0, 0, 0)],
+}
+
+
+@pytest.mark.parametrize(
+    "op, case",
+    [(op, case) for op in _NO_EDGE_ROWS for case in _NO_EDGES],
+    ids=[f"{op}-{case}" for op in _NO_EDGE_ROWS for case in _NO_EDGES],
+)
+def test_static_graph_degenerate_inputs(spark, op, case):
+    """The static-graph operators on a graph with no simple edge: the
+    census operators return their one all-zero/NULL row, the per-vertex
+    and per-pair operators no rows."""
+    from wicsmmiretl_spark.operators import graph
+
+    df = spark.createDataFrame(_NO_EDGES[case], "a long, b long")
+    run = {
+        "triangle_stats": lambda: graph.triangle_stats(df, "a", "b"),
+        "degree_profile": lambda: graph.degree_profile(df, "a", "b"),
+        "kcore": lambda: graph.kcore(df, k=1, a_col="a", b_col="b"),
+        "link_prediction": lambda: graph.link_prediction(df, "a", "b"),
+        "label_propagation": lambda: graph.label_propagation(df, "a", "b"),
+        "butterfly_stats": lambda: graph.butterfly_stats(df, "a", "b"),
+    }[op]
+    expect = _NO_EDGE_ROWS[op]
+    if op == "butterfly_stats" and case == "self_loops":
+        expect = [(2, 2, 2, 0, 0, 0)]
+    assert [tuple(r) for r in run().collect()] == expect
 
 
 # ---------------------------------------------------------------------------
@@ -829,6 +864,35 @@ def test_event_chain_components_job_count(spark, jobs_and_plans, sf_dir):
     while len(counts) < 3 and 15 not in counts:
         counts.append(jobs_and_plans(run)[0])
     assert 15 in counts, counts
+
+
+# Build + noop-write jobs at sf0.001 (8 shuffle partitions) of every suite
+# query that reaches the static-graph kernel (``_undirected``, ``_degrees``,
+# ``_wedges``).
+_STATIC_GRAPH_JOBS = {
+    "part_copurchase_triangles": 19,
+    "copurchase_butterflies": 17,
+    "part_copurchase_assortativity": 13,
+    "part_copurchase_kcore": 28,
+    "part_link_prediction": 18,
+    "part_copurchase_communities": 19,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_STATIC_GRAPH_JOBS))
+def test_static_graph_query_job_count(spark, jobs_and_plans, sf_dir, name):
+    """Each query's plan shape, pinned by its job count: an unpinned
+    canonical edge set read twice, or a second degree aggregate, adds
+    jobs. Re-measured like the loop totals above."""
+    from wicsmmiretl_spark.suite import QUERIES
+
+    def run():
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    counts = []
+    while len(counts) < 3 and _STATIC_GRAPH_JOBS[name] not in counts:
+        counts.append(jobs_and_plans(run)[0])
+    assert _STATIC_GRAPH_JOBS[name] in counts, counts
 
 
 # Jobs one more round adds, per ``graph._message_round`` caller: a PageRank/

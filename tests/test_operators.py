@@ -371,6 +371,19 @@ def test_public_api_facade_exports():
     assert len(w.__all__) >= 45
 
 
+def test_quickstart_runs(spark, capsys):
+    """The Quickstart block of the package docstring runs as written (its
+    ``get_spark`` returns the running test session) and shows the
+    deduplicated documents."""
+    import textwrap
+
+    import wicsmmiretl_spark as w
+
+    block = w.__doc__.split("Quickstart::", 1)[1]
+    exec(textwrap.dedent(block), {})
+    assert "doc_id" in capsys.readouterr().out
+
+
 def test_asof_join_forward_matches_naive(spark, sf_dir):
     """direction='forward' must pick the EARLIEST right row with
     right.on >= left.on per group (pandas merge_asof forward semantics);

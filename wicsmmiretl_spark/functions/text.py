@@ -47,12 +47,6 @@ def sentences(text: Column | str) -> Column:
     return F.filter(F.split(c, SENT_SEP), lambda s: F.trim(s) != F.lit(""))
 
 
-def syllable_count(text: Column | str) -> Column:
-    """Estimated syllables: number of vowel-group runs in the text."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_count(F.lower(c), F.lit(r"[aeiouy]+"))
-
-
 def _hard_words(toks: Column) -> Column:
     """Tokens with ≥3 vowel groups — 'hard word' proxy for Dale-Chall."""
     return F.size(

@@ -1,6 +1,8 @@
-"""Distributed graph analytics: alternating large-star / small-star
-connected components, and fixed-iteration PageRank with scaled-integer
-mass sums.
+"""Distributed graph analytics: the iterative operators (alternating
+large-star / small-star connected components, PageRank and personalized
+PageRank with scaled-integer mass sums, HITS, BFS, shortest paths, label
+propagation, k-core peeling) and the static census operators (triangles,
+butterflies, degree profile, link prediction).
 
 Why this exists
 ---------------
@@ -64,6 +66,26 @@ reads one. Its callers are ``_power_iteration`` (PageRank and PPR),
 relaxed and kept distances) and ``label_propagation`` (a mode vote).
 ``bfs_levels`` keeps its frontier anti-join: an aggregate over visited ∪
 messages would redo O(V) union work every level, O(V·depth) in total.
+
+Static-graph kernel
+-------------------
+The operators over an undirected edge list share three steps.
+``_undirected`` is the one canonicalization: NULL endpoints and
+self-loops dropped, (least, greatest) endpoints, each edge once, pinned
+by a lazy checkpoint. Its callers are ``triangle_stats``,
+``degree_profile``, ``link_prediction``, ``kcore`` (into ``loop_entry``)
+and ``label_propagation`` (whose message edges are both orientations of
+it). ``_degrees`` is the one undirected degree count, read by
+``triangle_stats``' orientation, ``degree_profile``'s moments,
+``link_prediction``'s centres and weights, and ``kcore``'s peels and
+output. ``_wedges`` is the one wedge generator: a self-join of
+(centre, leaf) rows on the centre keeping each leaf pair once
+(``l1 < l2``). ``triangle_stats`` orders the leaves by their (degree,
+id) rank (compact-forward, Latapy 2008), ``butterfly_stats`` by the wing
+id, ``link_prediction`` by the neighbour id. ``butterfly_stats``' edges
+are bipartite, so it keeps its own NULL filter, distinct and per-side
+degrees; ``connected_components`` keeps its raw pairs, which must label
+isolated self-pair nodes.
 """
 
 from __future__ import annotations
@@ -453,6 +475,43 @@ def _power_iteration(
     return state.select("id", "rank")
 
 
+def _undirected(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """The simple undirected graph of ``edges``' (``a``, ``b``) pairs as
+    (u, v) rows with u < v: NULL endpoints and self-loops dropped, each
+    edge once. Pinned by a lazy checkpoint: every caller reads the edges
+    more than once (the degrees and the joins back onto the edges), and
+    without the pin each read would recompute the upstream plan (for the
+    co-purchase queries a lineitem ⋈ orders self-join) in its own job —
+    exchange reuse does not cross job boundaries."""
+    x, y = F.col(a), F.col(b)
+    return (
+        edges.filter(x.isNotNull() & y.isNotNull() & (x != y))
+        .select(F.least(x, y).alias("u"), F.greatest(x, y).alias("v"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """(x, d): the degree of every vertex of the undirected edges ``e``
+    (u, v), one partial-aggregated count over both endpoints."""
+    return (
+        e.select(F.explode(F.array("u", "v")).alias("x"))
+        .groupBy("x")
+        .agg(F.count("*").alias("d"))
+    )
+
+
+def _wedges(rows: DataFrame, centre: str, leaf: str, *carry: str) -> DataFrame:
+    """Every wedge of the (``centre``, ``leaf``) ``rows`` once: their
+    self-join on ``centre``, kept where the first leaf is smaller than the
+    second. Returns (``centre``, l1, l2, ``*carry``), the ``carry``
+    columns taken from the first leaf's row."""
+    w1 = rows.select(centre, F.col(leaf).alias("l1"), *carry)
+    w2 = rows.select(centre, F.col(leaf).alias("l2"))
+    return w1.join(w2, centre).filter(F.col("l1") < F.col("l2"))
+
+
 def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Global triangle census of an undirected graph: vertex/edge/wedge/
     triangle counts plus the global clustering coefficient.
@@ -479,44 +538,31 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     for c in (src, dst):
         if c not in edges.columns:
             raise ValueError(f"triangle_stats: column {c!r} not in {edges.columns}")
-    u, v = F.col(src), F.col(dst)
-    e0 = (
-        edges.filter(u.isNotNull() & v.isNotNull() & (u != v))
-        .select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # e0 feeds deg AND the orientation join — deg materializes first (its
-    # own lazy checkpoint), and without a pin the orientation join would
-    # RECOMPUTE the whole upstream canonicalization cascade (for the
-    # co-purchase queries, a lineitem⋈orders self-join) in its own job
-    # (r15; exchange reuse does not cross job boundaries).
+    e0 = _undirected(edges, src, dst)
     # deg feeds both the orientation joins and the totals row; oriented
     # feeds both wedge sides and the closing probe. Pin each once so the
     # canonicalize+join cascade doesn't run 3x (lazy checkpoint: under
     # AQE its exchanges run when it is built, its final stage inside the
     # single action that consumes all branches).
-    deg = (
-        e0.select(F.explode(F.array("u", "v")).alias("x"))
-        .groupBy("x")
-        .agg(F.count("*").alias("d"))
-        .localCheckpoint(eager=False)
-    )
+    deg = _degrees(e0).localCheckpoint(eager=False)
     ranked = (
         e0.join(deg.withColumnsRenamed({"x": "u", "d": "du"}), "u")
         .join(deg.withColumnsRenamed({"x": "v", "d": "dv"}), "v")
     )
     ru = F.struct(F.col("du").alias("d"), F.col("u").alias("x"))
     rv = F.struct(F.col("dv").alias("d"), F.col("v").alias("x"))
+    # a → rb: each edge from its rank-smaller end to the rank of the other.
     oriented = ranked.select(
         F.when(ru < rv, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(ru < rv, rv).otherwise(ru).alias("rb"),
-    ).select("a", F.col("rb.x").alias("b"), "rb").localCheckpoint(eager=False)
-    w1 = oriented.select("a", F.col("b").alias("b1"), F.col("rb").alias("r1"))
-    w2 = oriented.select("a", F.col("b").alias("b2"), F.col("rb").alias("r2"))
-    wedges = w1.join(w2, "a").filter(F.col("r1") < F.col("r2"))
-    closing = oriented.select(F.col("a").alias("b1"), F.col("b").alias("b2"))
-    tri = wedges.join(closing, ["b1", "b2"]).agg(F.count("*").alias("n_triangles"))
+    ).localCheckpoint(eager=False)
+    closing = oriented.select(F.col("a").alias("b1"), F.col("rb.x").alias("b2"))
+    tri = (
+        _wedges(oriented, "a", "rb")
+        .select(F.col("l1.x").alias("b1"), F.col("l2.x").alias("b2"))
+        .join(closing, ["b1", "b2"])
+        .agg(F.count("*").alias("n_triangles"))
+    )
     totals = deg.agg(
         F.count("*").alias("n_vertices"),
         F.coalesce((F.sum("d") / 2).cast("long"), F.lit(0)).alias("n_edges"),
@@ -724,11 +770,6 @@ def label_propagation(
     for c in (a_col, b_col):
         if c not in edges.columns:
             raise ValueError(f"label_propagation: column {c!r} not in {edges.columns}")
-    base = edges.filter(
-        F.col(a_col).isNotNull()
-        & F.col(b_col).isNotNull()
-        & (F.col(a_col) != F.col(b_col))
-    )
     # NOT @loop_scoped: the rounds were measured ~40% slower with AQE
     # scoped off (each round joins ``und`` against the round's label
     # frame, whose size AQE discovers at runtime and converts to a
@@ -741,11 +782,9 @@ def label_propagation(
     #
     # ``und`` holds both orientations of every edge, so the messages a
     # node receives along (src → dst) are exactly its neighbors' labels.
-    und = (
-        base.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(base.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
+    e0 = _undirected(edges, a_col, b_col)
+    und = e0.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
+        e0.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
     labels = und.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
@@ -821,12 +860,9 @@ def butterfly_stats(edges: DataFrame, left: str = "l", right: str = "r") -> Data
         if stats["n_wedges_left"] <= stats["n_wedges_right"]
         else (right, left)
     )
-    w1 = e0.select(F.col(centre).alias("c"), F.col(wing).alias("x1"))
-    w2 = e0.select(F.col(centre).alias("c"), F.col(wing).alias("x2"))
     pairs = (
-        w1.join(w2, "c")
-        .filter(F.col("x1") < F.col("x2"))
-        .groupBy("x1", "x2")
+        _wedges(e0.select(F.col(centre).alias("c"), F.col(wing).alias("x")), "c", "x")
+        .groupBy("l1", "l2")
         .agg(F.count("*").alias("w"))
     )
     bf = pairs.agg(
@@ -861,60 +897,56 @@ def degree_profile(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     shape shared with the SQL oracle. NULL assortativity for degenerate
     graphs (regular graphs have zero degree variance).
 
-    Scale: canonicalize + two degree joins + one partial agg — the same
-    equi-join/agg budget as one ``triangle_stats`` orientation pass, no
-    iteration, nothing collected beyond the output row.
+    Scale: canonicalize, one degree join onto the stubs' far end, one
+    per-vertex aggregate and one global aggregate that reads both the
+    moments and the degree totals — no iteration, nothing collected
+    beyond the output row.
     """
     for c in (src, dst):
         if c not in edges.columns:
             raise ValueError(f"degree_profile: column {c!r} not in {edges.columns}")
-    u, v = F.col(src), F.col(dst)
-    e0 = (
-        edges.filter(u.isNotNull() & v.isNotNull() & (u != v))
-        .select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e0 = _undirected(edges, src, dst)
     stubs = e0.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
         e0.select(F.col("v").alias("a"), F.col("u").alias("b"))
     )
-    deg = stubs.groupBy(F.col("a").alias("x")).agg(
-        F.count("*").alias("d")
-    ).localCheckpoint(eager=False)
-    j = (
-        stubs.join(deg.withColumnsRenamed({"x": "a", "d": "dx"}), "a")
-        .join(deg.withColumnsRenamed({"x": "b", "d": "dy"}), "b")
-    )
     dec = "decimal(38,0)"
-    m = j.agg(
-        F.count("*").cast(dec).alias("n"),
-        F.sum(F.col("dx").cast(dec)).alias("sx"),
-        F.sum(F.col("dy").cast(dec)).alias("sy"),
-        F.sum((F.col("dx") * F.col("dx")).cast(dec)).alias("sxx"),
-        F.sum((F.col("dy") * F.col("dy")).cast(dec)).alias("syy"),
-        F.sum((F.col("dx") * F.col("dy")).cast(dec)).alias("sxy"),
+    deg = _degrees(e0).withColumnRenamed("x", "a")
+    # One row per vertex a: its degree d and the sum s of its neighbours'
+    # degrees, folded by ONE aggregate over the degree rows and the stubs
+    # carrying their far end's degree db. The stub moments are sums of
+    # these (Σ over stubs (a, b) of d_a·d_b = Σ_a d_a·s_a), so the degrees
+    # are joined onto one stub end only: a second degree join made AQE's
+    # choice of broadcast side decide the job count. The stubs hold both
+    # orientations of every edge, so the far-end moments equal the near-end
+    # ones (sy = sx, syy = sxx) and the closed form reads the latter twice.
+    far = stubs.join(deg.withColumnsRenamed({"a": "b", "d": "db"}), "b").select(
+        "a", F.col("db").cast(dec).alias("db")
     )
-    totals = deg.agg(
+    vert = far.unionByName(deg, allowMissingColumns=True).groupBy("a").agg(
+        F.max("d").alias("d"), F.sum("db").alias("s")
+    )
+    d = F.col("d").cast(dec)
+    m = vert.agg(
         F.count("*").alias("n_vertices"),
         F.min("d").alias("min_degree"),
         F.max("d").alias("max_degree"),
         F.coalesce((F.sum("d") / 2).cast("long"), F.lit(0)).alias("n_edges"),
         F.round(F.avg(F.col("d").cast("double")), 6).alias("avg_degree"),
+        F.sum(d).alias("n"),
+        F.sum(d * d).alias("sx"),
+        F.sum(d * d * d).alias("sxx"),
+        F.sum(d * F.col("s")).alias("sxy"),
     )
-    p1 = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    p2 = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    denom = F.sqrt(p1 * p2)
-    return (
-        m.crossJoin(F.broadcast(totals))
-        .select(
-            "n_vertices",
-            "n_edges",
-            "min_degree",
-            "max_degree",
-            "avg_degree",
-            F.when(denom > 0, F.round(num / denom, 6)).alias("assortativity"),
-        )
+    var = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
+    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sx")).cast("double")
+    denom = F.sqrt(var * var)
+    return m.select(
+        "n_vertices",
+        "n_edges",
+        "min_degree",
+        "max_degree",
+        "avg_degree",
+        F.when(denom > 0, F.round(num / denom, 6)).alias("assortativity"),
     )
 
 
@@ -1072,7 +1104,6 @@ def kcore(
     for c in (a_col, b_col):
         if c not in edges.columns:
             raise ValueError(f"kcore: column {c!r} not in {edges.columns}")
-    u, v = F.col(a_col), F.col(b_col)
     # NOT @loop_scoped (``pin_shuffle=False``): the per-round degree agg
     # keeps the session shuffle width, the shape the r15 job counts were
     # measured in. The semi-joins against the surviving-vertex list rely
@@ -1081,21 +1112,10 @@ def kcore(
     # ~55% slower). The lazy width pin materializes inside the first
     # batch's probe job; every later batch inherits the width through the
     # semi-joins.
-    e, _, start = loop_entry(
-        edges.filter(u.isNotNull() & v.isNotNull() & (u != v))
-        .select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .distinct(),
-        "u",
-        pin_shuffle=False,
-    )
+    e, _, start = loop_entry(_undirected(edges, a_col, b_col), "u", pin_shuffle=False)
 
     def peel(es: DataFrame) -> DataFrame:
-        deg = (
-            es.select(F.explode(F.array("u", "v")).alias("x"))
-            .groupBy("x")
-            .agg(F.count("*").alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("x")
+        keep = _degrees(es).filter(F.col("d") >= k).select("x")
         return (
             es.join(keep.withColumnRenamed("x", "u"), "u", "semi")
             .join(keep.withColumnRenamed("x", "v"), "v", "semi")
@@ -1112,11 +1132,7 @@ def kcore(
         "one vertex, so rounds are bounded by the peel depth).",
         batch=_KCORE_PEELS_PER_PROBE,
     )
-    return (
-        e.select(F.explode(F.array("u", "v")).alias("id"))
-        .groupBy("id")
-        .agg(F.count("*").cast("long").alias("deg"))
-    )
+    return _degrees(e).select(F.col("x").alias("id"), F.col("d").alias("deg"))
 
 
 @loop_scoped
@@ -1213,26 +1229,17 @@ def link_prediction(
     for c in (a_col, b_col):
         if c not in edges.columns:
             raise ValueError(f"link_prediction: column {c!r} not in {edges.columns}")
-    ua, vb = F.col(a_col), F.col(b_col)
-    e0 = (
-        edges.filter(ua.isNotNull() & vb.isNotNull() & (ua != vb))
-        .select(F.least(ua, vb).alias("u"), F.greatest(ua, vb).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e0 = _undirected(edges, a_col, b_col)
     stubs = e0.select(F.col("u").alias("z"), F.col("v").alias("x")).unionByName(
         e0.select(F.col("v").alias("z"), F.col("u").alias("x"))
     )
-    deg = stubs.groupBy("z").agg(F.count("*").alias("d")).localCheckpoint(eager=False)
+    deg = _degrees(e0).withColumnRenamed("x", "z").localCheckpoint(eager=False)
     centers = stubs.join(deg, "z")
     if max_center_degree is not None:
         centers = centers.filter(F.col("d") <= max_center_degree)
-    w1 = centers.select("z", F.col("x").alias("a"), F.col("d"))
-    w2 = centers.select("z", F.col("x").alias("b"))
     pairs = (
-        w1.join(w2, "z")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
+        _wedges(centers, "z", "x", "d")
+        .groupBy(F.col("l1").alias("a"), F.col("l2").alias("b"))
         .agg(
             F.count("*").cast("long").alias("cn"),
             F.sum(F.round(F.lit(float(scale)) / F.col("d")).cast("long")).alias("ra_i"),

@@ -47,11 +47,6 @@ def deterministic_sample(
     return deterministic_shuffle(df, key_cols, seed).limit(n)
 
 
-def sample_fraction(df: DataFrame, fraction: float, seed: int = 1312) -> DataFrame:
-    """Approximate-n Bernoulli sample — the cheap path (no shuffle at all)."""
-    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
-
-
 def train_test_split(
     df: DataFrame, test_fraction: float, key_cols: Sequence[str], seed: int = 1312
 ) -> tuple[DataFrame, DataFrame]:

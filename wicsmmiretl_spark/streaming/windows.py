@@ -335,10 +335,10 @@ def run_to_memory_sink(
     the override applies only to this query (partitioning is captured at
     start).
 
-    This is the engine's ONLY session-conf-scoped path (the graph loops
-    use plan-local ``repartition`` instead): stateful streaming operators
-    require exactly ``spark.sql.shuffle.partitions`` state partitions,
-    recorded in the checkpoint at first-batch planning — an explicit
+    The graph loops scope the same conf through ``loopconf.scoped_conf``
+    (``@loop_scoped``); here the conf is the only lever: stateful
+    streaming operators require exactly ``spark.sql.shuffle.partitions``
+    state partitions, recorded in the checkpoint at first-batch planning — an explicit
     repartition upstream cannot override it, so there is no plan-local
     equivalent. Concurrency caveat: a query planned on the same session
     during the drain sees the reduced value — this harness is test/bench
